@@ -16,17 +16,17 @@ Reference semantics rebuilt:
   * ranking: mean score_gap per config, descending
     (``Duke/evaluate.py:171-176``).
 
-Scale shape: per-conversation fold + label comparison run inside the
-grouped pandas stage (labels broadcast); only (config, conv, pos, neg,
-gap) rows leave the workers. The config loop is driver-side — the grid is
-≤ 8 entries (``Duke/evaluate.py:115-122``), matching the reference's
-trial loop (A38).
+Scale shape: the tree fold (one matrix per Arrow batch) + label
+comparison run inside a ``mapInPandas`` stage (labels broadcast); only
+(config, conv, pos, neg, gap) rows leave the workers. The config loop is
+driver-side — the grid is ≤ 8 entries (``Duke/evaluate.py:115-122``),
+matching the reference's trial loop (A38).
 """
 
 from __future__ import annotations
 
 import json
-from typing import Callable, Dict, List, Sequence
+from typing import Dict, List, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -34,8 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from duke_spark.kernel.tree import (aggregate_tree_scores,
-                                    parent_children_funcs)
+from duke_spark.kernel.tree import fold_scores
 from duke_spark.operators.canonical import conversation_class_scores
 from duke_spark.operators.linking import score_mentions_batch
 from duke_spark.operators.mentions import linked_mentions
@@ -65,14 +64,12 @@ def label_vector(positives: Sequence[str],
 
 # --- config grid (A37) -----------------------------------------------------
 
-def config_grid() -> Dict[str, Callable]:
+def config_grid() -> Dict[str, Tuple[str, str]]:
     """Tree-agg combos like ``Duke/agg_functions.py:25-28`` /
-    ``Duke/evaluate.py:115-122``: parent × children ∈ {mean, max}²."""
-    funcs = {"mean": np.mean, "max": max}
-    return {
-        f"parent={pn},children={cn}": parent_children_funcs(pf, cf)
-        for pn, pf in funcs.items() for cn, cf in funcs.items()
-    }
+    ``Duke/evaluate.py:115-122``: parent × children ∈ {mean, max}², as
+    the (parent, children) arguments of ``kernel.tree.fold_scores``."""
+    aggs = ("mean", "max")
+    return {f"parent={p},children={c}": (p, c) for p in aggs for c in aggs}
 
 
 # --- evaluation (A33 + A36) ------------------------------------------------
@@ -87,26 +84,26 @@ EVAL_SCHEMA = T.StructType([
 
 
 def evaluate_config(conv_scores: DataFrame, ctx_bc, labels_bc,
-                    config_name: str, tree_agg: Callable) -> DataFrame:
-    """Fold each conversation's mean score vector with ``tree_agg`` and
-    score it against the golden labels — all inside the workers."""
+                    config_name: str, agg: Tuple[str, str]) -> DataFrame:
+    """Fold each batch of labelled conversations' mean score vectors with
+    ``agg`` = (parent, children) in one matrix call and score each row
+    against its golden labels — all inside the workers."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         ctx = ctx_bc.value
         labels: Dict[str, List[str]] = labels_bc.value
+        pdf = pdf[np.array([bool(labels.get(c)) for c in pdf["conv_id"]],
+                           dtype=bool)]
         out = []
-        for r in pdf.itertuples(index=False):
-            pos_classes = labels.get(r.conv_id)
-            if not pos_classes:
-                continue
-            vec = np.asarray(r.mean_scores, dtype=np.float64)
-            agg = aggregate_tree_scores(ctx.classes, vec, ctx.tree,
-                                        tree_agg)
-            lv = label_vector(pos_classes, ctx.classes)
-            avg_pos = float(agg[lv > 0].mean()) if (lv > 0).any() else 0.0
-            avg_neg = float(agg[lv < 0].mean()) if (lv < 0).any() else 0.0
-            out.append((config_name, r.conv_id, avg_pos, avg_neg,
-                        avg_pos - avg_neg))
+        if len(pdf):
+            folded = fold_scores(np.stack(pdf["mean_scores"].to_list()),
+                                 ctx.fold_levels, *agg)
+            for conv_id, row in zip(pdf["conv_id"], folded):
+                pos = label_vector(labels[conv_id], ctx.classes) > 0
+                avg_pos = float(row[pos].mean()) if pos.any() else 0.0
+                avg_neg = float(row[~pos].mean()) if (~pos).any() else 0.0
+                out.append((config_name, conv_id, avg_pos, avg_neg,
+                            avg_pos - avg_neg))
         return pd.DataFrame(out, columns=[f.name for f in
                                           EVAL_SCHEMA.fields])
 
@@ -116,7 +113,8 @@ def evaluate_config(conv_scores: DataFrame, ctx_bc, labels_bc,
 
 def run_config_grid(spark: SparkSession, transcripts: DataFrame, ctx_bc,
                     labels: Dict[str, List[str]],
-                    configs: Dict[str, Callable] | None = None) -> DataFrame:
+                    configs: Dict[str, Tuple[str, str]] | None = None
+                    ) -> DataFrame:
     """Embed/link once, evaluate every config (``Duke/evaluate.py:78-103``
     reuse pattern). Returns (config, conv_id, avg_pos, avg_neg,
     score_gap)."""

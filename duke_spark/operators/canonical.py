@@ -8,14 +8,14 @@ mention occurrences equals the count-weighted mean over DISTINCT mention
 strings — so the only shuffle is ``groupBy(entity, mention).count()``
 (tiny: bounded by distinct mention text), followed by an
 ``applyInPandas`` re-score per entity group (≤ C groups) emitting one
-C-float row per entity. The ≤788×788-float result is collected and folded
-on the driver exactly like the reference
+C-float row per entity. The ≤C×C-float result is collected, stacked and
+folded up the tree on the driver in ONE ``kernel.tree.fold_scores`` call
 (``Duke/dataset_descriptor.py:99-107`` → ``Duke/class_tree.py:63-91``).
+Conversations are unbounded, so their topics fold worker-side, one
+matrix per Arrow batch.
 """
 
 from __future__ import annotations
-
-from typing import Dict
 
 import numpy as np
 import pandas as pd
@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from duke_spark.kernel.tree import PRODUCTION_TREE_AGG, aggregate_tree_scores
+from duke_spark.kernel.text import pluralize
+from duke_spark.kernel.tree import fold_scores
 from duke_spark.kernel.vectors import score_against_classes
 from duke_spark.operators.linking import LinkContext, score_mentions_batch
 
@@ -53,27 +54,24 @@ def entity_mean_scores(mentions: DataFrame, ctx_bc) -> DataFrame:
         agg_group, schema=_ENTITY_SCORES_SCHEMA)
 
 
-def canonical_types(mentions: DataFrame, ctx_bc,
-                    tree_agg=PRODUCTION_TREE_AGG) -> pd.DataFrame:
-    """Collect per-entity mean vectors (≤ C rows) and fold each up the tree
-    on the driver; returns pandas (entity, canonical_type, n_mentions)."""
+def canonical_types(mentions: DataFrame, ctx_bc) -> pd.DataFrame:
+    """Collect per-entity mean vectors (≤ C rows), fold them up the tree
+    in one matrix call on the driver and take each row's argmax (first
+    occurrence wins); returns pandas (entity, canonical_type,
+    n_mentions)."""
     ctx: LinkContext = ctx_bc.value
-    rows = entity_mean_scores(mentions, ctx_bc).collect()
-    out = []
-    for r in rows:
-        vec = np.asarray(r["mean_scores"], dtype=np.float64)
-        agg = aggregate_tree_scores(ctx.classes, vec, ctx.tree, tree_agg)
-        out.append((r["entity"], ctx.classes[int(np.argmax(agg))],
-                    r["n_mentions"]))
-    return (pd.DataFrame(out, columns=["entity", "canonical_type",
-                                       "n_mentions"])
-            .sort_values("entity").reset_index(drop=True))
+    pdf = (entity_mean_scores(mentions, ctx_bc).toPandas()
+           .sort_values("entity", ignore_index=True))
+    scores = np.array(pdf.pop("mean_scores").tolist(),
+                      dtype=np.float64).reshape(len(pdf), len(ctx.classes))
+    top = fold_scores(scores, ctx.fold_levels).argmax(axis=1)
+    pdf.insert(1, "canonical_type", [ctx.classes[i] for i in top])
+    return pdf
 
 
-def canonical_types_df(spark, mentions: DataFrame, ctx_bc,
-                       tree_agg=PRODUCTION_TREE_AGG) -> DataFrame:
+def canonical_types_df(spark, mentions: DataFrame, ctx_bc) -> DataFrame:
     """Spark DataFrame form, broadcast-join-able against vertices."""
-    pdf = canonical_types(mentions, ctx_bc, tree_agg)
+    pdf = canonical_types(mentions, ctx_bc)
     schema = T.StructType([
         T.StructField("entity", T.StringType()),
         T.StructField("canonical_type", T.StringType()),
@@ -140,6 +138,35 @@ def _conv_score_partials(mentions: DataFrame, ctx_bc) -> DataFrame:
     return pruned.mapInPandas(run, schema=_CONV_PARTIAL_SCHEMA)
 
 
+def _conv_mean_batches(mentions: DataFrame, ctx_bc, finish,
+                       schema: T.StructType) -> DataFrame:
+    """Per-conversation mean class-score vectors, handed to ``finish(pdf,
+    means, ctx)`` one Arrow batch (an N×C matrix) at a time.
+
+    A JVM ``collect_list`` aggregate gathers each conversation's batch
+    partials, so ONE Python stage follows the shuffle: it sums them (one
+    ``reduceat`` per batch), divides by the mention count and finishes.
+    A second chained Python stage would run a second worker process per
+    task."""
+    grouped = (_conv_score_partials(mentions, ctx_bc).groupBy("conv_id")
+               .agg(F.collect_list("sum_scores").alias("partials"),
+                    F.sum("n").alias("n_mentions")))
+
+    def run(batches):
+        ctx: LinkContext = ctx_bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            lens = pdf["partials"].map(len).to_numpy()
+            flat = np.stack([a for p in pdf["partials"] for a in p])
+            starts = np.concatenate(([0], np.cumsum(lens[:-1])))
+            means = (np.add.reduceat(flat, starts, axis=0)
+                     / pdf["n_mentions"].to_numpy()[:, None])
+            yield finish(pdf, means, ctx)
+
+    return grouped.mapInPandas(run, schema=schema)
+
+
 def conversation_class_scores(mentions: DataFrame, ctx_bc) -> DataFrame:
     """Per-conversation mean class-score vector (the distributed analogue of
     Duke's per-source row aggregation, ``Duke/dataset_descriptor.py:73-74``)
@@ -151,33 +178,23 @@ def conversation_class_scores(mentions: DataFrame, ctx_bc) -> DataFrame:
         T.StructField("n_mentions", T.LongType()),
         T.StructField("mean_scores", T.ArrayType(T.DoubleType())),
     ])
-
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sums = np.sum(np.stack(pdf["sum_scores"].to_list()), axis=0)
-        n = int(pdf["n"].sum())
-        return pd.DataFrame({
-            "conv_id": [pdf["conv_id"].iloc[0]],
-            "n_mentions": [n],
-            "mean_scores": [(sums / n).tolist()],
-        })
-
-    return (_conv_score_partials(mentions, ctx_bc)
-            .groupBy("conv_id").applyInPandas(reduce_group, schema=schema))
+    return _conv_mean_batches(
+        mentions, ctx_bc,
+        lambda pdf, means, ctx: pd.DataFrame({
+            "conv_id": pdf["conv_id"], "n_mentions": pdf["n_mentions"],
+            "mean_scores": list(means)}),
+        schema)
 
 
-def describe_conversations(spark, mentions: DataFrame, ctx_bc,
-                           tree_agg=PRODUCTION_TREE_AGG) -> DataFrame:
+def describe_conversations(spark, mentions: DataFrame, ctx_bc) -> DataFrame:
     """Per-conversation canonical topic — Duke's summary sentence
     (``Duke/dataset_descriptor.py:82-88``) over the mention path.
 
     Unlike entity canonicalization (≤ C entities → driver fold is fine),
-    conversations are unbounded, so the tree fold runs INSIDE the
-    ``applyInPandas`` group worker (it is a pure function of the broadcast
-    context) and only (conv_id, topic) rows ever leave the workers — no
-    per-conversation score vectors on the driver at any scale. Scoring
-    happens once per distinct mention per batch in the partial stage."""
-    from duke_spark.kernel.text import pluralize
-
+    conversations are unbounded, so the mean vectors are folded
+    worker-side — one ``fold_scores`` call per Arrow batch — and only
+    (conv_id, topic) rows ever leave the workers: no per-conversation
+    score vectors on the driver at any scale."""
     schema = T.StructType([
         T.StructField("conv_id", T.StringType()),
         T.StructField("topic", T.StringType()),
@@ -185,19 +202,15 @@ def describe_conversations(spark, mentions: DataFrame, ctx_bc,
         T.StructField("n_mentions", T.LongType()),
     ])
 
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        ctx: LinkContext = ctx_bc.value
-        sums = np.sum(np.stack(pdf["sum_scores"].to_list()), axis=0)
-        n = int(pdf["n"].sum())
-        agg = aggregate_tree_scores(ctx.classes, sums / n, ctx.tree,
-                                    tree_agg)
-        top = ctx.classes[int(np.argmax(agg))]
+    def finish(pdf, means, ctx):
+        topics = [ctx.classes[i] for i in
+                  fold_scores(means, ctx.fold_levels).argmax(axis=1)]
         return pd.DataFrame({
-            "conv_id": [pdf["conv_id"].iloc[0]],
-            "topic": [top],
-            "description": [f"This conversation is about {pluralize(top)}."],
-            "n_mentions": [n],
+            "conv_id": pdf["conv_id"],
+            "topic": topics,
+            "description": [f"This conversation is about {pluralize(t)}."
+                            for t in topics],
+            "n_mentions": pdf["n_mentions"],
         })
 
-    return (_conv_score_partials(mentions, ctx_bc)
-            .groupBy("conv_id").applyInPandas(finalize, schema=schema))
+    return _conv_mean_batches(mentions, ctx_bc, finish, schema)

@@ -19,8 +19,9 @@ Physical shape: one narrow ``mapInPandas`` computes per-(conv, role)
 PARTIAL sums of cell score vectors (so shuffle volume is
 O(convs × roles × C), never O(turns × C)); one ``groupBy(conv_id)``
 ``applyInPandas`` finalizes: merge partials, build + score the headers
-source, fold each source up the tree, mean across sources, argmax. The
-tree fold is a pure function of the broadcast context, so nothing but
+source, fold the stacked source vectors up the tree in one
+``kernel.tree.fold_scores`` call, mean across sources, argmax. The tree
+fold is a pure function of the broadcast context, so nothing but
 (conv_id, description) rows reach the driver at any scale.
 """
 
@@ -34,8 +35,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from duke_spark.kernel.text import pluralize, tokenize_series
-from duke_spark.kernel.tree import PRODUCTION_TREE_AGG, aggregate_tree_scores
+from duke_spark.kernel.text import (normalize_text, pluralize,
+                                    tokenize_series)
+from duke_spark.kernel.tree import fold_scores
 from duke_spark.kernel.vectors import score_against_classes
 
 _PARTIAL_SCHEMA = T.StructType([
@@ -102,8 +104,7 @@ def source_score_partials(transcripts: DataFrame, ctx_bc) -> DataFrame:
     return pruned.mapInPandas(run, schema=_PARTIAL_SCHEMA)
 
 
-def describe_dataset(transcripts: DataFrame, ctx_bc,
-                     tree_agg=PRODUCTION_TREE_AGG, top_n: int = 10) -> dict:
+def describe_dataset(transcripts: DataFrame, ctx_bc, top_n: int = 10) -> dict:
     """Duke's primary CLI output (``Duke/scripts/main.py:31-36``) over the
     WHOLE table: role columns are the sources, every turn a cell, plus the
     headers source; returns {"description", "top"} exactly like
@@ -111,11 +112,12 @@ def describe_dataset(transcripts: DataFrame, ctx_bc,
 
     Distributed shape: the per-batch partials (B3 kernel) are reduced to
     one (source → mean vector) map with a single hash-aggregate shuffle
-    keyed by source (≤ #roles keys); the ≤C-float fold happens on the
+    keyed by source (≤ #roles keys); the per-source vectors fold on the
     driver like the reference. Top-k sort semantics match
     ``Duke/dataset_descriptor.py:91-97`` (score desc, stable)."""
     per_source = dataset_source_means(transcripts, ctx_bc)
-    return _fold_and_describe(per_source, ctx_bc.value, tree_agg, top_n)
+    return _fold_and_describe(per_source, ctx_bc.value, ("mean", "max"),
+                              top_n)
 
 
 def dataset_source_means(transcripts: DataFrame, ctx_bc) -> list:
@@ -129,31 +131,36 @@ def dataset_source_means(transcripts: DataFrame, ctx_bc) -> list:
     rows = (partials.groupBy("source")
             .applyInPandas(_reduce_source_partials,
                            schema=_PARTIAL_SCHEMA).collect())
-    ctx = ctx_bc.value
-    per_source = []
     # headers source: roles ∪ tools present anywhere (Duke/dataset.py:63-69)
     hdr = (transcripts.agg(
         F.array_sort(F.collect_set("role")).alias("roles"),
         F.array_sort(F.collect_set("tool")).alias("tools")).collect()[0])
-    from duke_spark.kernel.text import normalize_text
-    names = list(hdr["roles"]) + list(hdr["tools"])
-    hdr_groups = [g for g in (normalize_text(h) for h in names)
-                  if g and ctx.embedding.in_vocab(g)]
-    if hdr_groups:
-        vecs = ctx.embedding.embed_groups(hdr_groups)
-        scores = score_against_classes(vecs, ctx.class_matrix)
-        per_source.append(scores.astype(np.float64).mean(axis=0))
+    per_source = _headers_source(list(hdr["roles"]) + list(hdr["tools"]),
+                                 ctx_bc.value)
     for r in sorted(rows, key=lambda r: r["source"]):
         per_source.append(np.asarray(r["sum_scores"]) / r["n_cells"])
     return per_source
 
 
-def _fold_and_describe(per_source: list, ctx, tree_agg, top_n: int) -> dict:
+def _headers_source(names: list, ctx) -> list:
+    """The synthetic headers source (``Duke/dataset.py:63-69``): role and
+    tool names as normalized word groups under the OOV rule → ``[mean
+    class-score vector]``, or ``[]`` when none survives."""
+    groups = [g for g in map(normalize_text, names)
+              if g and ctx.embedding.in_vocab(g)]
+    if not groups:
+        return []
+    vecs = ctx.embedding.embed_groups(groups)
+    return [score_against_classes(vecs, ctx.class_matrix).mean(axis=0)]
+
+
+def _fold_and_describe(per_source: list, ctx, agg: tuple,
+                       top_n: int) -> dict:
+    """``agg`` = (parent, children) of ``fold_scores``."""
     if not per_source:
         return {"description": None, "top": []}
-    folded = [aggregate_tree_scores(ctx.classes, v, ctx.tree, tree_agg)
-              for v in per_source]
-    final = np.mean(np.stack(folded), axis=0)
+    final = fold_scores(np.stack(per_source), ctx.fold_levels,
+                        *agg).mean(axis=0)
     order = np.argsort(-final, kind="stable")[:top_n]
     top = [(ctx.classes[i], float(final[i])) for i in order]
     word = pluralize(ctx.classes[int(np.argmax(final))])
@@ -186,8 +193,7 @@ def _reduce_source_partials(pdf: pd.DataFrame) -> pd.DataFrame:
     })
 
 
-def describe_conversations_duke(transcripts: DataFrame, ctx_bc,
-                                tree_agg=PRODUCTION_TREE_AGG) -> DataFrame:
+def describe_conversations_duke(transcripts: DataFrame, ctx_bc) -> DataFrame:
     """Full Duke EP1 semantics per conversation (see module docstring)."""
     partials = source_score_partials(transcripts, ctx_bc)
     headers = (transcripts
@@ -199,17 +205,9 @@ def describe_conversations_duke(transcripts: DataFrame, ctx_bc,
     def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
         ctx = ctx_bc.value
         conv_id = pdf["conv_id"].iloc[0]
-        # headers source: roles sorted + tools sorted, normalized, OOV rule
-        # (Duke/dataset.py:63-69 — headers are one source of word-groups)
-        from duke_spark.kernel.text import normalize_text
-        names = sorted(pdf["roles"].iloc[0]) + sorted(pdf["tools"].iloc[0])
-        hdr_groups = [g for g in (normalize_text(h) for h in names)
-                      if g and ctx.embedding.in_vocab(g)]
-        per_source = []
-        if hdr_groups:
-            vecs = ctx.embedding.embed_groups(hdr_groups)
-            scores = score_against_classes(vecs, ctx.class_matrix)
-            per_source.append(scores.astype(np.float64).mean(axis=0))
+        # headers source: roles sorted + tools sorted
+        per_source = _headers_source(sorted(pdf["roles"].iloc[0])
+                                     + sorted(pdf["tools"].iloc[0]), ctx)
         # role sources, sorted like the oracle's groupby(role, sort=True)
         agg = (pdf.groupby("source", sort=True)
                .agg(sum_scores=("sum_scores",
@@ -218,9 +216,8 @@ def describe_conversations_duke(transcripts: DataFrame, ctx_bc,
                     n=("n_cells", "sum")))
         for _, row in agg.iterrows():
             per_source.append(np.asarray(row["sum_scores"]) / row["n"])
-        folded = [aggregate_tree_scores(ctx.classes, v, ctx.tree, tree_agg)
-                  for v in per_source]
-        final = np.mean(np.stack(folded), axis=0)
+        final = fold_scores(np.stack(per_source),
+                            ctx.fold_levels).mean(axis=0)
         top = ctx.classes[int(np.argmax(final))]
         return pd.DataFrame({
             "conv_id": [conv_id],

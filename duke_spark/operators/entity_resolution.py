@@ -116,7 +116,6 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
     high-cosine pair of a person-name and a place-name stays split.
     Computed in the same embed pass (one extra matmul against the class
     matrix per batch; vertex-cardinality)."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -141,8 +140,7 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
     plen = len(prefix)
 
     def embed(batches):
-        from duke_spark.kernel.tree import (PRODUCTION_TREE_AGG,
-                                            aggregate_tree_scores)
+        from duke_spark.kernel.tree import fold_scores
         from duke_spark.kernel.vectors import score_against_classes
         ctx = ctx_bc.value
         emb = ctx.embedding
@@ -164,12 +162,11 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
                    "embedding": [[float(x) for x in v] for v in vecs]}
             if type_guard:
                 # single-occurrence canonicalization of the surface
-                # form itself: score → tree fold → argmax class
+                # form itself: score → tree fold → argmax class, one
+                # matrix fold for the whole batch
                 scores = score_against_classes(vecs, ctx.class_matrix)
-                out["ctype"] = [
-                    ctx.classes[int(np.argmax(aggregate_tree_scores(
-                        ctx.classes, s, ctx.tree, PRODUCTION_TREE_AGG)))]
-                    for s in scores]
+                out["ctype"] = [ctx.classes[i] for i in fold_scores(
+                    scores, ctx.fold_levels).argmax(axis=1)]
             yield pd.DataFrame(out)
 
     # persist: the embed pass (the pipeline's dominant matmul, plus the

@@ -69,7 +69,6 @@ def dense_entity_index(entities: DataFrame, col: str = "entity",
          .persist())
     counts = {r["_pid"]: r["cnt"] for r in
               s.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    dom.unpersist()
     offsets, acc = {}, 0
     for pid in sorted(counts):
         offsets[pid] = acc
@@ -95,7 +94,11 @@ def dense_entity_index(entities: DataFrame, col: str = "entity",
     # samplers may unpersist() it when done
     out = s.mapInPandas(run, schema=schema).persist()
     out.count()
+    # release the domain only now: if ``s`` is evicted before the fill,
+    # its recompute re-samples the range bounds, and only the cached
+    # ``dom`` guarantees the sample (hence the offsets) is unchanged
     s.unpersist()
+    dom.unpersist()
     return out
 
 

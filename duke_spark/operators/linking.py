@@ -28,7 +28,8 @@ import numpy as np
 import pandas as pd
 
 from duke_spark.kernel.text import tokenize_series
-from duke_spark.kernel.tree import Tree, normalize_class_tree
+from duke_spark.kernel.tree import (Tree, fold_schedule,
+                                    normalize_class_tree)
 from duke_spark.kernel.vectors import (VocabEmbedding, score_against_classes,
                                        unit_norm_rows)
 
@@ -36,7 +37,9 @@ MAX_MENTION_LEN = 3
 
 
 class LinkContext:
-    """Embedding + normalized class tree + embedded class matrix."""
+    """Embedding + normalized class tree + embedded class matrix + the
+    tree's fold schedule (``kernel.tree.fold_schedule``; building it
+    rejects a cyclic ontology here, on the driver)."""
 
     def __init__(self, vocab: List[str], matrix: np.ndarray, raw_tree: Tree):
         self._vocab_list = vocab
@@ -44,6 +47,7 @@ class LinkContext:
         emb = VocabEmbedding(vocab, self._matrix)
         self.tree: Tree = normalize_class_tree(raw_tree, emb.in_vocab)
         self.classes: List[str] = list(self.tree.keys())
+        self.fold_levels = fold_schedule(self.classes, self.tree)
         self._class_matrix = emb.embed_groups(
             [c.split(" ") for c in self.classes])
         self._embedding: Optional[VocabEmbedding] = emb
@@ -53,6 +57,7 @@ class LinkContext:
     def __getstate__(self):
         return {"_vocab_list": self._vocab_list, "_matrix": self._matrix,
                 "tree": self.tree, "classes": self.classes,
+                "fold_levels": self.fold_levels,
                 "_class_matrix": self._class_matrix}
 
     def __setstate__(self, state):

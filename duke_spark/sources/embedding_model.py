@@ -160,11 +160,11 @@ def _worker_model(vocab_file: str,
 
 class MmapLinkContext(LinkContext):
     """LinkContext whose pickle carries only the small derived state
-    (normalized tree, class names, C×D class matrix) plus the model FILE
-    NAMES — never the matrix. Executors rebuild vocab+matrix from the
-    SparkFiles mmap on first use. This is the GB-scale path promised in
-    SURVEY §4 item 1; the broadcast ``LinkContext`` stays the simple path
-    for fixture-sized models."""
+    (normalized tree, class names, fold schedule, C×D class matrix) plus
+    the model FILE NAMES — never the matrix. Executors rebuild
+    vocab+matrix from the SparkFiles mmap on first use. This is the
+    GB-scale path promised in SURVEY §4 item 1; the broadcast
+    ``LinkContext`` stays the simple path for fixture-sized models."""
 
     def __init__(self, vocab: List[str], matrix: np.ndarray, raw_tree: Tree,
                  vocab_file: str, matrix_file: str):
@@ -174,6 +174,7 @@ class MmapLinkContext(LinkContext):
 
     def __getstate__(self):
         return {"tree": self.tree, "classes": self.classes,
+                "fold_levels": self.fold_levels,
                 "_class_matrix": self._class_matrix,
                 "_vocab_file": self._vocab_file,
                 "_matrix_file": self._matrix_file}

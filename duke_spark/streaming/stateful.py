@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from duke_spark.kernel.tree import PRODUCTION_TREE_AGG, aggregate_tree_scores
+from duke_spark.kernel.tree import fold_scores
 from duke_spark.kernel.vectors import score_against_classes
 
 STATE_SCHEMA = "sum_scores array<double>, n bigint"
@@ -86,10 +86,8 @@ def running_conversation_topics(mentions: DataFrame, ctx_bc,
         state.update((total.tolist(), n))
         if idle_timeout_ms > 0:
             state.setTimeoutDuration(idle_timeout_ms)
-        mean = total / n
-        agg = aggregate_tree_scores(ctx.classes, mean, ctx.tree,
-                                    PRODUCTION_TREE_AGG)
-        topic = ctx.classes[int(np.argmax(agg))]
+        folded = fold_scores((total / n)[None, :], ctx.fold_levels)
+        topic = ctx.classes[int(np.argmax(folded[0]))]
         yield pd.DataFrame({"conv_id": [key[0]], "topic": [topic],
                             "n_mentions": [n]})
 

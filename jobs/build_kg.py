@@ -15,6 +15,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -55,7 +56,11 @@ def main() -> None:
                     help="entity resolution: merge entities whose"
                          " linking-space embeddings have cosine >="
                          " THRESHOLD; writes <out>/merge_map and"
-                         " <out>/triples_resolved parquet")
+                         " <out>/triples_resolved parquet. When nothing"
+                         " merges the rewrite is skipped: downstream"
+                         " stages read the checkpoint store, and a"
+                         " triples_resolved left by an earlier run is"
+                         " removed")
     ap.add_argument("--resolve-guard", action="store_true",
                     help="with --resolve: require canonical-type"
                          " agreement (B6 tree fold) before two labels"
@@ -162,16 +167,19 @@ def main() -> None:
             n_merged = mm.count()  # persisted inside resolve_kg_entities
             mm.write.mode("overwrite").parquet(
                 os.path.join(args.out, "merge_map"))
+            resolved_path = os.path.join(args.out, "triples_resolved")
             if n_merged:
-                resolved.write.mode("overwrite").parquet(
-                    os.path.join(args.out, "triples_resolved"))
+                resolved.write.mode("overwrite").parquet(resolved_path)
+            else:
+                # a rerun into an existing --out must not leave an
+                # earlier run's rewrite beside this run's merge map
+                shutil.rmtree(resolved_path, ignore_errors=True)
             mm.unpersist()
             metrics.record("resolve_merged", rows=n_merged,
                            rewrite="written" if n_merged
                            else "skipped (identity: 0 merges)")
         if n_merged:
-            triples_src = spark.read.parquet(
-                os.path.join(args.out, "triples_resolved"))
+            triples_src = spark.read.parquet(resolved_path)
         # else: resolved IS triples_src (identity map) — downstream
         # stages keep reading the checkpoint store directly
 

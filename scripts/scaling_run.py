@@ -44,6 +44,21 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LEVELS = (4, 8, 16, 32)
+# the per-level driver heap never exceeds this share of physical RAM
+HEAP_RAM_FRAC = 0.5
+HEAP_POLICY = (f"Heap policy: driver heap 2 GiB per core (min 8 GiB), "
+               f"capped at {HEAP_RAM_FRAC:.0%} of physical RAM; an explicit "
+               f"`DUKE_SPARK_DRIVER_MEM` wins. Rounds 1-4 ran a fixed "
+               f"8 GiB heap at every level, so their local[16]/local[32] "
+               f"rows are not heap-comparable with later rounds.")
+
+
+def driver_heap_gib(parallelism: int) -> int:
+    """2 GiB/core (min 8), capped at HEAP_RAM_FRAC of physical RAM: a
+    wide level must not size the JVM past the machine (swap or the OOM
+    killer would then time memory pressure, not scaling)."""
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return max(1, min(max(8, 2 * parallelism), int(phys_gib * HEAP_RAM_FRAC)))
 
 
 def _gemm_unit(_):
@@ -135,8 +150,9 @@ def run_level(parallelism: int, input_path: str, out_root: str,
     # fixed local-mode heap instead makes 4N concurrent tasks share the
     # same N-sized heap — the aggregation stages then GC/spill at high
     # parallelism only, understating scaling for a reason no real
-    # cluster has. 2 GiB/core (min 8 GiB), explicit env overrides win.
-    env.setdefault("DUKE_SPARK_DRIVER_MEM", f"{max(8, 2 * parallelism)}g")
+    # cluster has. 2 GiB/core (min 8 GiB) up to a share of physical RAM
+    # (driver_heap_gib); explicit env overrides win.
+    env.setdefault("DUKE_SPARK_DRIVER_MEM", f"{driver_heap_gib(parallelism)}g")
     best = None
     runs = []
     for i in range(repeat):
@@ -313,6 +329,8 @@ best of {args.repeat} fresh-process runs per level, 1 BLAS thread/task.
 |---|---|---|
 | local[4] → local[16] (headline) | **{eff_4_16}** | {hw_eff(4, 16)} |
 | local[8] → local[32] (saturation) | {eff_8_32} | {hw_eff(8, 32)} |
+
+{HEAP_POLICY}
 
 Target ≥ 0.8 → {"MET" if (eff_4_16 or 0) >= 0.8 else "NOT MET"} on the
 headline pair. The 4→16 pair is the faithful single-box proxy for N→4N

@@ -9,7 +9,8 @@ from hypothesis import strategies as st
 
 from duke_spark.kernel.text import (normalize_text, normalize_text_series,
                                     underscore)
-from duke_spark.kernel.tree import (parent_children_funcs, tree_score)
+from duke_spark.kernel.tree import (fold_schedule, fold_scores,
+                                    parent_children_funcs, tree_score)
 from duke_spark.kernel.vectors import chunk_in_vocab_runs, unit_norm_rows
 
 TEXT = st.text(
@@ -63,21 +64,22 @@ def test_unit_norm_rows_properties(rows):
 
 
 @st.composite
-def chain_tree(draw):
-    """Random forest: each node's parent is some earlier node (or root)."""
+def random_dag(draw):
+    """Random class DAG: each node picks 0-3 parents among earlier nodes,
+    so multi-parent nodes, several roots and isolated nodes all occur."""
     n = draw(st.integers(min_value=1, max_value=12))
     names = [f"n{i}" for i in range(n)]
     tree = {m: {"parents": [], "children": []} for m in names}
     for i in range(1, n):
-        p = draw(st.integers(min_value=-1, max_value=i - 1))
-        if p >= 0:
+        for p in draw(st.lists(st.integers(min_value=0, max_value=i - 1),
+                               max_size=3, unique=True)):
             tree[names[i]]["parents"].append(names[p])
             tree[names[p]]["children"].append(names[i])
     scores = {m: draw(st.floats(0.01, 1.0, allow_nan=False)) for m in names}
     return tree, scores
 
 
-@given(chain_tree())
+@given(random_dag())
 @settings(max_examples=150, deadline=None)
 def test_tree_score_max_agg_equals_subtree_max(ts):
     """With agg=max, a node's folded score is the max over its own and all
@@ -100,7 +102,7 @@ def test_tree_score_max_agg_equals_subtree_max(ts):
         assert folded[n] == expect, n
 
 
-@given(chain_tree())
+@given(random_dag())
 @settings(max_examples=150, deadline=None)
 def test_tree_score_production_agg_bounds(ts):
     """parent_children_funcs(mean, max): every folded score lies within
@@ -112,3 +114,31 @@ def test_tree_score_production_agg_bounds(ts):
     lo, hi = min(scores.values()), max(scores.values())
     for n, v in folded.items():
         assert lo - 1e-12 <= v <= hi + 1e-12
+
+
+_AGG_FUNCS = {"mean": np.mean, "max": max}
+
+
+@given(random_dag(), st.integers(min_value=1, max_value=5),
+       st.integers(min_value=0, max_value=2**32 - 1))
+@settings(max_examples=150, deadline=None)
+def test_matrix_fold_equals_reference_fold(ts, n_rows, seed):
+    """The level-scheduled matrix fold equals the per-vector reference
+    fold row by row, for every {mean,max}² config: exactly when children
+    reduce by max, to 1e-12 when they average (sum order differs)."""
+    tree, _ = ts
+    classes = list(tree)
+    scores = np.random.default_rng(seed).uniform(0.01, 1.0,
+                                                 (n_rows, len(classes)))
+    levels = fold_schedule(classes, tree)
+    for parent, pf in _AGG_FUNCS.items():
+        for children, cf in _AGG_FUNCS.items():
+            got = fold_scores(scores, levels, parent, children)
+            agg = parent_children_funcs(pf, cf)
+            exp = np.array([[tree_score(dict(zip(classes, row)), tree,
+                                        agg)[c] for c in classes]
+                            for row in scores.tolist()])
+            if children == "max":
+                assert np.array_equal(got, exp), (parent, children)
+            else:
+                np.testing.assert_allclose(got, exp, rtol=0, atol=1e-12)

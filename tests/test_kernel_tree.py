@@ -1,16 +1,18 @@
 """Pin tree_score layered-fold semantics on hand-built trees, including the
 production agg config parent_children_funcs(np.mean, max)
 (`Duke/class_tree.py:63-102`, `Duke/agg_functions.py:16-23`,
-`Duke/DukeRestListener.py:37-39`) and the multi-parent/isolated cases."""
+`Duke/DukeRestListener.py:37-39`) and the multi-parent/isolated cases;
+plus the level schedule and tie/cycle behaviour of the matrix fold."""
 
 import numpy as np
 import pytest
 
 from duke_spark.fixtures.class_tree import mini_tree
 from duke_spark.fixtures.embedding import build_embedding
-from duke_spark.kernel.tree import (PRODUCTION_TREE_AGG, canonical_type,
-                                    normalize_class_tree,
+from duke_spark.kernel.tree import (PRODUCTION_TREE_AGG, fold_schedule,
+                                    fold_scores, normalize_class_tree,
                                     parent_children_funcs, tree_score)
+from duke_spark.operators.linking import LinkContext
 
 THREE_LEVEL = {
     "root": {"parents": [], "children": ["mid1", "mid2"]},
@@ -77,8 +79,53 @@ def test_normalize_class_tree_drops_oov_and_repairs_edges():
     assert "home run" in norm and "album" in norm
 
 
+def test_fold_schedule_levels_mini_tree():
+    """Each class folds at its height above the leaves; leaves and
+    isolated nodes (height 0) get no step."""
+    t = mini_tree()
+    classes = list(t)
+    levels = fold_schedule(classes, t)
+    height = {c: 0 for c in classes}
+    for h, (parents, kids, starts) in enumerate(levels, start=1):
+        for p in parents:
+            height[classes[p]] = h
+        # children concatenated per parent, in child-list order
+        assert [classes[k] for k in kids] == [
+            c for p in parents for c in t[classes[p]]["children"]]
+        assert starts[0] == 0 and (np.diff(starts) > 0).all()
+    assert height["player"] == 0 and height["device"] == 0
+    assert height["athlete"] == 1
+    assert height["person"] == 2
+    assert height["agent"] == 3
+    assert height["record"] == 1  # multi-parent child "album" is a leaf
+
+
 def test_canonical_type_ties_first_wins():
-    tree = {"a": {"parents": [], "children": []},
-            "b": {"parents": [], "children": []}}
-    ct = canonical_type(["a", "b"], np.array([0.5, 0.5]), tree, max)
-    assert ct == "a"
+    """Argmax over a folded row: a tie the fold creates goes to the first
+    class (``np.argmax``, ``Duke/dataset_descriptor.py:84``)."""
+    tree = {"a": {"parents": [], "children": ["b"]},
+            "b": {"parents": ["a"], "children": []}}
+    classes = ["a", "b"]
+    folded = fold_scores(np.array([[0.2, 0.5]]),
+                         fold_schedule(classes, tree), "max", "max")
+    assert folded.tolist() == [[0.5, 0.5]]
+    assert classes[int(folded.argmax(axis=1)[0])] == "a"
+
+
+def test_cyclic_tree_rejected_at_context_build():
+    """A cyclic ontology fails on the driver with a ValueError naming a
+    node on the cycle — never a KeyError inside a Spark task."""
+    tree = {"a": {"parents": ["b"], "children": ["b"]},
+            "b": {"parents": ["a"], "children": ["a"]},
+            "c": {"parents": [], "children": []}}
+    with pytest.raises(ValueError, match="cycle through '[ab]'"):
+        fold_schedule(list(tree), tree)
+    with pytest.raises(ValueError, match="cycle through '[ab]'"):
+        LinkContext(["a", "b", "c"], np.eye(3), tree)
+
+
+def test_fold_rejects_unknown_agg():
+    t = mini_tree()
+    with pytest.raises(ValueError, match="parent/children"):
+        fold_scores(np.ones((1, len(t))), fold_schedule(list(t), t),
+                    "median", "max")

@@ -110,37 +110,43 @@ def test_bad_cardinality_raises(kg):
 
 def test_build_kg_job_validate_and_fact_support(tmp_path):
     """The production job wires both stages: violations + fact_support
-    parquet written, per-rule counts in the metrics JSON."""
+    parquet written, per-rule counts in the metrics JSON. Validate and
+    fact-support consume the RESOLVED triples; a rerun into the same
+    --out that merges nothing skips the identity rewrite and removes the
+    first run's triples_resolved (downstream reads the checkpoint)."""
     import json
     import os
     import subprocess
     import sys
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = tmp_path / "kg"
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "jobs", "build_kg.py"),
-         "--convs", "20", "--out", str(out), "--parallelism", "2",
-         "--validate", "--fact-support", "--resolve", "0.99"],
-        capture_output=True, text=True, timeout=420)
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    rec = json.loads([ln for ln in proc.stdout.splitlines()
-                      if ln.startswith("{")][-1])
+
+    def run(threshold):
+        proc = subprocess.run(
+            [sys.executable, os.path.join(repo, "jobs", "build_kg.py"),
+             "--convs", "20", "--out", str(out), "--parallelism", "2",
+             "--validate", "--fact-support", "--resolve", threshold],
+            capture_output=True, text=True, timeout=420)
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        return json.loads([ln for ln in proc.stdout.splitlines()
+                           if ln.startswith("{")][-1])
+
+    # 0.3 merges several of the fixture's (seed-42) entity labels
+    rec = run("0.3")
     assert "validate_violations" in rec["stages"]
-    assert "resolve_merged" in rec["stages"]
     assert (out / "violations").exists()
     assert (out / "fact_support").exists()
     assert (out / "merge_map").exists()
-    # composition: validate/fact-support consume the RESOLVED triples —
-    # and when resolution merges nothing the identity rewrite is
-    # SKIPPED (no triples_resolved copy; downstream reads the
-    # checkpoint store, which is byte-identical by definition)
-    n_merged = rec["stages"]["resolve_merged"]["rows"]
-    if n_merged:
-        assert (out / "triples_resolved").exists()
-    else:
-        assert rec["stages"]["resolve_merged"]["rewrite"].startswith(
-            "skipped")
-        assert not (out / "triples_resolved").exists()
+    assert rec["stages"]["resolve_merged"]["rows"] > 0
+    assert rec["stages"]["resolve_merged"]["rewrite"] == "written"
+    assert (out / "triples_resolved").exists()
+
+    # no fixture label pair reaches cosine 0.99: zero merges
+    rec = run("0.99")
+    assert rec["stages"]["triples"]["skipped_parts"] > 0  # resumed
+    assert rec["stages"]["resolve_merged"]["rows"] == 0
+    assert rec["stages"]["resolve_merged"]["rewrite"].startswith("skipped")
+    assert not (out / "triples_resolved").exists()
 
 
 # --- fact_support --------------------------------------------------------
@@ -152,6 +158,8 @@ def test_fact_support_rollup(spark):
         ("ent:a", "co_mentioned", "ent:b", "c1", 3, 0.5),
         ("ent:a", "co_mentioned", "ent:b", "c2", 1, 0.7),
         ("ent:a", "used_tool", "tool:t", "c1", 0, 1.0),
+        # no provenance: counts as support, but is not a conversation
+        ("ent:a", "co_mentioned", "ent:b", None, 2, 0.3),
     ]
     df = spark.createDataFrame(pd.DataFrame(
         rows, columns=["subj", "pred", "obj", "conv_id", "turn_idx",
@@ -160,7 +168,7 @@ def test_fact_support_rollup(spark):
                                      r.mean_score)
            for r in fact_support(df).collect()}
     assert got[("ent:a", "co_mentioned", "ent:b")] == (
-        3, 2, 0.9, round((0.9 + 0.5 + 0.7) / 3, 6))
+        4, 2, 0.9, round((0.9 + 0.5 + 0.7 + 0.3) / 4, 6))
     assert got[("ent:a", "used_tool", "tool:t")] == (1, 1, 1.0, 1.0)
 
 
