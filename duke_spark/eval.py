@@ -36,7 +36,6 @@ from pyspark.sql import types as T
 
 from duke_spark.kernel.tree import fold_scores
 from duke_spark.operators.canonical import conversation_class_scores
-from duke_spark.operators.linking import score_mentions_batch
 from duke_spark.operators.mentions import linked_mentions
 
 

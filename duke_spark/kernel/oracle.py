@@ -14,9 +14,10 @@ Per turn (conv_id, turn_idx, role, text, tool):
   1. tokens   = normalize_text(text)                  (Duke/utils.py:12-19)
   2. mentions = greedy ≤3-token runs of consecutive in-vocab tokens
                 (all-or-nothing OOV rule, Duke/embedding.py:41-44)
-  3. vec_i    = unit_norm(mean(word vectors of mention i))
+  3. vec_i    = unit_norm(float64 Σ of the float32 word vectors of
+                mention i) — the unit-normed mean; a zero sum stays zero
                 (Duke/embedding.py:33-34, Duke/utils.py:22-23)
-  4. entity_i = class argmax of dot(vec_i, class_matrix.T)
+  4. entity_i = class argmax of float64 dot(vec_i, class_matrix.T)
                 (Duke/dataset_descriptor.py:57,84); score_i = that dot
   5. triples (order within turn):
        a. (conv:{conv_id},  "mentions",     ent:{entity_i}, score_i)   ∀i
@@ -43,8 +44,7 @@ from duke_spark.kernel.text import normalize_text, pluralize
 from duke_spark.kernel.tree import (PRODUCTION_TREE_AGG, Tree,
                                     aggregate_tree_scores,
                                     normalize_class_tree)
-from duke_spark.kernel.vectors import (VocabEmbedding, chunk_in_vocab_runs,
-                                       score_against_classes, unit_norm_rows)
+from duke_spark.kernel.vectors import VocabEmbedding, chunk_in_vocab_runs
 
 
 class OracleContext:
@@ -66,11 +66,14 @@ def extract_mentions(ctx: OracleContext, text: str) -> List[List[str]]:
 
 def link_mentions(ctx: OracleContext,
                   groups: Sequence[Sequence[str]]) -> Tuple[np.ndarray, np.ndarray]:
-    """Return (top1 class index per mention, full score matrix)."""
-    if not groups:
-        return np.zeros(0, dtype=np.int64), np.zeros((0, len(ctx.classes)))
-    vecs = ctx.embedding.embed_groups(groups)
-    scores = score_against_classes(vecs, ctx.class_matrix)
+    """Return (top1 class index per mention, full score matrix): steps
+    3-4 spelled out per group — sum → norm, then the dots."""
+    vecs = np.zeros((len(groups), ctx.embedding.dim))
+    for vec, g in zip(vecs, groups):
+        for w in g:
+            vec += ctx.embedding.matrix[ctx.embedding.vocab[w]]
+        vec /= np.linalg.norm(vec) or 1.0
+    scores = vecs @ ctx.class_matrix.T.astype(np.float64)
     return np.argmax(scores, axis=1), scores
 
 
@@ -157,8 +160,7 @@ def describe_conversation(ctx: OracleContext, conv: pd.DataFrame,
 
     per_source = []
     for src in data:  # insertion order, as the reference iterates dicts
-        vecs = ctx.embedding.embed_groups(data[src])
-        sim = score_against_classes(vecs, ctx.class_matrix)      # cells × C
+        sim = link_mentions(ctx, data[src])[1]                   # cells × C
         row_scores = row_agg(sim)                                # length C
         tree_scores = aggregate_tree_scores(ctx.classes, row_scores,
                                             ctx.tree, tree_agg)

@@ -8,7 +8,7 @@ Reference semantics being reimplemented (not copied):
   * rows unit-normed so cosine == dot (``Duke/utils.py:22-23`` used at
     ``Duke/dataset.py:91`` and ``Duke/class_tree.py:32``);
   * scoring = one dense matmul of all group vectors against the class
-    matrix (``Duke/dataset_descriptor.py:57``).
+    matrix (``Duke/dataset_descriptor.py:57``): ``score_groups``, float64.
 
 Everything operates on NumPy blocks so the Spark operators can call these
 once per Arrow batch (vectorized), and the oracle can call them per source.
@@ -35,29 +35,21 @@ class VocabEmbedding:
         """All-words-in-vocab rule (``Duke/embedding.py:41-44``)."""
         return all(w in self.vocab for w in words)
 
-    def embed_groups(self, groups: Sequence[Sequence[str]]) -> np.ndarray:
-        """Mean word vector per group → unit-normed rows.
+    def index_groups(self, groups: Sequence[Sequence[str]]):
+        """(lengths, flat vocab rows, start offsets) of OOV-filtered groups."""
+        lengths = np.array([len(g) for g in groups], dtype=np.int64)
+        flat = np.fromiter((self.vocab[w] for g in groups for w in g),
+                           dtype=np.int64)
+        return lengths, flat, np.concatenate(([0], np.cumsum(lengths[:-1])))
 
-        Groups must already be OOV-filtered. Implemented as one gather +
-        reduceat over the flattened index list — no per-word Python loop in
-        the hot path beyond index lookup. All-float32, like the reference
-        (gensim vectors are float32 and ``np.mean`` over them stays float32,
-        ``Duke/utils.py:26-27``); at D=1000 the float32 gather also halves
-        the memory traffic that dominates this kernel.
-        """
+    def embed_groups(self, groups: Sequence[Sequence[str]]) -> np.ndarray:
+        """Mean word vector per group → unit-normed float32 rows, like the
+        reference (``Duke/utils.py:26-27``); scores use ``score_groups``."""
         if not groups:
             return np.zeros((0, self.dim), dtype=np.float32)
-        lengths = np.fromiter((len(g) for g in groups), dtype=np.int64,
-                              count=len(groups))
-        flat_idx = np.fromiter(
-            (self.vocab[w] for g in groups for w in g), dtype=np.int64
-        )
-        gathered = self.matrix[flat_idx]
-        starts = np.zeros(len(groups), dtype=np.int64)
-        np.cumsum(lengths[:-1], out=starts[1:])
-        sums = np.add.reduceat(gathered, starts, axis=0)
-        means = sums / lengths[:, None].astype(np.float32)
-        return unit_norm_rows(means)
+        lengths, flat, starts = self.index_groups(groups)
+        sums = np.add.reduceat(self.matrix[flat], starts, axis=0)
+        return unit_norm_rows(sums / lengths[:, None].astype(np.float32))
 
 
 def unit_norm_rows(vectors: np.ndarray) -> np.ndarray:
@@ -69,18 +61,67 @@ def unit_norm_rows(vectors: np.ndarray) -> np.ndarray:
 
 def score_against_classes(group_vecs: np.ndarray,
                           class_matrix: np.ndarray) -> np.ndarray:
-    """Cosine (== dot, both unit-normed) of every group vs every class —
-    the core kernel (``Duke/dataset_descriptor.py:57``) as one BLAS call.
-
-    Inputs stay float32 (gather/mean/norm, reference numerics + half the
-    memory traffic) but the matmul ACCUMULATES in float64: float32
-    products are exact in float64, so the result is independent of the
-    sgemm blocking that varies with batch shape (M). That makes scores
-    reproducible across any partitioning/batching to ~1e-16 — required
-    for the 6-dp golden-oracle hash gate — where pure-f32 sgemm drifted
-    ~1e-6 between the per-turn oracle and per-batch Spark paths."""
+    """Embedded group rows · class rows in one float64 GEMM — the
+    unfactored form ``perfbench`` times; production uses ``score_groups``."""
     return np.dot(group_vecs.astype(np.float64),
                   class_matrix.T.astype(np.float64))
+
+
+def score_groups(embedding: VocabEmbedding, groups: Sequence[Sequence[str]],
+                 class_matrix: np.ndarray) -> np.ndarray:
+    """Cosine of every (OOV-filtered) word group against every class row,
+    float64 U×C: ``(Σ v_w)·c / ‖Σ v_w‖`` with the sum in float64 over the
+    float32 word vectors, so no score depends on batching; a zero-norm
+    group scores 0 (as ``unit_norm_rows`` leaves zero rows). Of the two
+    associations, the one with fewer operations runs: U groups of ≤k
+    words over W distinct words cost D·W·(C+W) products, then k·U·(C+k)
+    gathered adds through the word table, or k·U·D gathered adds, then
+    D·U·C products direct."""
+    n_cls, dim = class_matrix.shape
+    if not groups:
+        return np.zeros((0, n_cls))
+    vecs, pos = _word_positions(embedding, groups)
+    (n_grp, k), n_words = pos.shape, len(vecs) - 1
+    table_ops = dim * n_words * (n_cls + n_words) + k * n_grp * (n_cls + k)
+    direct_ops = k * n_grp * dim + dim * n_grp * n_cls
+    sums = _word_table_sums if table_ops < direct_ops else _direct_sums
+    scores, sq = sums(vecs, pos, class_matrix.astype(np.float64))
+    norms = np.sqrt(np.maximum(sq, 0.0))
+    return np.divide(scores, np.where(norms == 0.0, 1.0, norms)[:, None],
+                     out=scores)
+
+
+def _word_positions(embedding: VocabEmbedding, groups):
+    """(vecs, pos): the W distinct word vectors in float64 plus an all-zero
+    row W, and each group's rows in ``vecs`` as a U×k matrix padded with W."""
+    lengths, flat, _ = embedding.index_groups(groups)
+    words, inv = np.unique(flat, return_inverse=True)
+    vecs = np.vstack([embedding.matrix[words], np.zeros((1, embedding.dim))])
+    pos = np.full((len(groups), lengths.max()), len(words))
+    pos[np.arange(pos.shape[1]) < lengths[:, None]] = inv
+    return vecs, pos
+
+
+def _word_table_sums(vecs, pos, classes):
+    """(``(Σ v_w)·c``, ``‖Σ v_w‖²``) per group: ``S = V·Cᵀ`` and the Gram
+    ``V·Vᵀ`` once, then k gathered rows of ``S``, k² Gram entries."""
+    gram, k = vecs @ vecs.T, pos.shape[1]
+    sq = sum(gram[pos[:, i], pos[:, j]] for i in range(k) for j in range(k))
+    return _gather_sum(vecs @ classes.T, pos), sq
+
+
+def _direct_sums(vecs, pos, classes):
+    """The same pair from the k-row group sums and one GEMM."""
+    sums = _gather_sum(vecs, pos)
+    return sums @ classes.T, np.einsum("ij,ij->i", sums, sums)
+
+
+def _gather_sum(rows, pos):
+    """Per row of ``pos``, the sum of the ``rows`` it indexes."""
+    out = rows[pos[:, 0]]
+    for p in pos.T[1:]:
+        out += rows[p]
+    return out
 
 
 def top1(scores: np.ndarray) -> np.ndarray:

@@ -25,8 +25,8 @@ from pyspark.sql import types as T
 
 from duke_spark.kernel.text import pluralize
 from duke_spark.kernel.tree import fold_scores
-from duke_spark.kernel.vectors import score_against_classes
-from duke_spark.operators.linking import LinkContext, score_mentions_batch
+from duke_spark.kernel.vectors import score_groups
+from duke_spark.operators.linking import LinkContext
 
 _ENTITY_SCORES_SCHEMA = T.StructType([
     T.StructField("entity", T.StringType()),
@@ -43,7 +43,9 @@ def entity_mean_scores(mentions: DataFrame, ctx_bc) -> DataFrame:
 
     def agg_group(pdf: pd.DataFrame) -> pd.DataFrame:
         ctx: LinkContext = ctx_bc.value
-        mean_vec = score_mentions_batch(pdf["mention"], pdf["cnt"], ctx)
+        mean_vec = np.average(score_groups(
+            ctx.embedding, [m.split(" ") for m in pdf["mention"]],
+            ctx.class_matrix), axis=0, weights=pdf["cnt"])
         return pd.DataFrame({
             "entity": [pdf["entity"].iloc[0]],
             "n_mentions": [int(pdf["cnt"].sum())],
@@ -94,8 +96,8 @@ def _conv_score_partials(mentions: DataFrame, ctx_bc) -> DataFrame:
     combine for all per-conversation scoring (same shape as
     ``describe.source_score_partials``).
 
-    Each distinct mention in the batch is embedded + scored ONCE
-    (factorize → one matmul), then fanned out to its (conv, mention)
+    Each distinct mention in the batch is scored ONCE (factorize → one
+    ``score_groups`` call), then fanned out to its (conv, mention)
     occurrence counts with one weighted ``np.add.at``. A mention appearing
     in 10k conversations is therefore scored once per batch it occurs in —
     never once per conversation, which made the old
@@ -114,10 +116,9 @@ def _conv_score_partials(mentions: DataFrame, ctx_bc) -> DataFrame:
             if len(pdf) == 0:
                 continue
             codes_m, uniq_m = pd.factorize(pdf["mention"])
-            vecs = ctx.embedding.embed_groups(
-                [m.split(" ") for m in uniq_m])
-            scores = score_against_classes(
-                vecs, ctx.class_matrix).astype(np.float64)
+            scores = score_groups(ctx.embedding,
+                                  [m.split(" ") for m in uniq_m],
+                                  ctx.class_matrix)
             codes_c, uniq_c = pd.factorize(pdf["conv_id"])
             # collapse to (conv, mention) pairs so the score gather is
             # O(distinct pairs × C), not O(rows × C)

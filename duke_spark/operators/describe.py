@@ -35,10 +35,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from duke_spark.kernel.text import (normalize_text, pluralize,
-                                    tokenize_series)
+from duke_spark.kernel.text import pluralize, tokenize_series
 from duke_spark.kernel.tree import fold_scores
-from duke_spark.kernel.vectors import score_against_classes
+from duke_spark.kernel.vectors import score_groups
 
 _PARTIAL_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -58,18 +57,11 @@ DESCRIBE_SCHEMA = T.StructType([
 def _cell_scores(texts: pd.Series, ctx) -> tuple[np.ndarray, np.ndarray]:
     """(kept_row_positions, score_matrix) for whole-turn cells passing the
     all-or-nothing OOV rule. Vectorized: tokenize, per-row vocab test,
-    embed survivors, one matmul."""
+    score survivors in one ``score_groups`` call."""
     toks = tokenize_series(texts)
-    vocab = ctx.embedding.vocab
-    keep_mask = toks.map(
-        lambda ws: len(ws) > 0 and all(w in vocab for w in ws))
-    kept = np.flatnonzero(keep_mask.to_numpy())
-    if len(kept) == 0:
-        return kept, np.zeros((0, len(ctx.classes)))
-    groups = toks.iloc[kept].to_list()
-    vecs = ctx.embedding.embed_groups(groups)
-    return kept, score_against_classes(vecs, ctx.class_matrix).astype(
-        np.float64)
+    kept = np.flatnonzero(toks.map(ctx.embedding.in_vocab).to_numpy())
+    return kept, score_groups(ctx.embedding, toks.iloc[kept].to_list(),
+                              ctx.class_matrix)
 
 
 def source_score_partials(transcripts: DataFrame, ctx_bc) -> DataFrame:
@@ -146,12 +138,8 @@ def _headers_source(names: list, ctx) -> list:
     """The synthetic headers source (``Duke/dataset.py:63-69``): role and
     tool names as normalized word groups under the OOV rule → ``[mean
     class-score vector]``, or ``[]`` when none survives."""
-    groups = [g for g in map(normalize_text, names)
-              if g and ctx.embedding.in_vocab(g)]
-    if not groups:
-        return []
-    vecs = ctx.embedding.embed_groups(groups)
-    return [score_against_classes(vecs, ctx.class_matrix).mean(axis=0)]
+    kept, scores = _cell_scores(pd.Series(names, dtype=object), ctx)
+    return [scores.mean(axis=0)] if len(kept) else []
 
 
 def _fold_and_describe(per_source: list, ctx, agg: tuple,

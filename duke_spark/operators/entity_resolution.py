@@ -141,7 +141,7 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
 
     def embed(batches):
         from duke_spark.kernel.tree import fold_scores
-        from duke_spark.kernel.vectors import score_against_classes
+        from duke_spark.kernel.vectors import score_groups
         ctx = ctx_bc.value
         emb = ctx.embedding
         for pdf in batches:
@@ -156,15 +156,15 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
             if not keep.any():
                 continue
             sub = pdf[keep]
-            vecs = emb.embed_groups([g for g, k in zip(groups, keep)
-                                     if k])
+            kept = [g for g, k in zip(groups, keep) if k]
+            vecs = emb.embed_groups(kept)
             out = {"vec_id": sub["idx"].to_numpy(),
                    "embedding": [[float(x) for x in v] for v in vecs]}
             if type_guard:
                 # single-occurrence canonicalization of the surface
                 # form itself: score → tree fold → argmax class, one
                 # matrix fold for the whole batch
-                scores = score_against_classes(vecs, ctx.class_matrix)
+                scores = score_groups(emb, kept, ctx.class_matrix)
                 out["ctype"] = [ctx.classes[i] for i in fold_scores(
                     scores, ctx.fold_levels).argmax(axis=1)]
             yield pd.DataFrame(out)

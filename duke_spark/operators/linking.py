@@ -2,13 +2,13 @@
 
 This is the rebuild of the reference's core path — normalize/tokenize
 (``Duke/utils.py:12-19``), all-or-nothing OOV word-groups
-(``Duke/embedding.py:20-30,41-44``), gather+mean embedding
-(``Duke/embedding.py:33-34``), unit-norm (``Duke/utils.py:22-23``), and the
-cells×classes cosine matmul (``Duke/dataset_descriptor.py:57``) — expressed
+(``Duke/embedding.py:20-30,41-44``), and the cells×classes cosine of the
+unit-normed word-group vectors (``Duke/embedding.py:33-34``,
+``Duke/utils.py:22-23``, ``Duke/dataset_descriptor.py:57``) — expressed
 as ONE pandas function applied per Arrow batch inside ``mapInPandas``.
 All segmentation is pandas-vectorized (explode + cumsum run-ids); the only
-Python-level iteration is the per-group index gather inside
-``VocabEmbedding.embed_groups`` (NumPy fromiter, not a row UDF).
+Python-level iteration is the per-word index lookup inside
+``kernel.vectors.score_groups`` (NumPy fromiter, not a row UDF).
 
 ``LinkContext`` is the broadcastable analogue of the reference's
 driver-loaded gensim model + embedded class tree
@@ -30,8 +30,7 @@ import pandas as pd
 from duke_spark.kernel.text import tokenize_series
 from duke_spark.kernel.tree import (Tree, fold_schedule,
                                     normalize_class_tree)
-from duke_spark.kernel.vectors import (VocabEmbedding, score_against_classes,
-                                       unit_norm_rows)
+from duke_spark.kernel.vectors import VocabEmbedding, score_groups
 
 MAX_MENTION_LEN = 3
 
@@ -91,7 +90,7 @@ def link_batch(pdf: pd.DataFrame, ctx: LinkContext) -> pd.DataFrame:
 
     Fully vectorized segmentation: explode tokens, run-ids via cumsum over
     in-vocab break points, ≤MAX_MENTION_LEN chunks via integer division,
-    one gather+reduceat embed, one BLAS matmul, one argmax.
+    one ``score_groups`` call over the distinct mentions, one argmax.
     """
     empty = pd.DataFrame({
         "conv_id": pd.Series(dtype="object"),
@@ -128,39 +127,26 @@ def link_batch(pdf: pd.DataFrame, ctx: LinkContext) -> pd.DataFrame:
     # per-group pandas Series construction inside the pure-Python agg.
     run_arr = f["run"].to_numpy()
     chunk_arr = f["chunk"].to_numpy()
-    starts = np.empty(0, dtype=np.int64)
-    if len(f):
-        new_grp = np.empty(len(f), dtype=bool)
-        new_grp[0] = True
-        new_grp[1:] = (run_arr[1:] != run_arr[:-1]) | \
-                      (chunk_arr[1:] != chunk_arr[:-1])
-        starts = np.flatnonzero(new_grp)
+    new_grp = np.empty(len(f), dtype=bool)
+    new_grp[0] = True
+    new_grp[1:] = (run_arr[1:] != run_arr[:-1]) | \
+                  (chunk_arr[1:] != chunk_arr[:-1])
+    starts = np.flatnonzero(new_grp)
     ends = np.append(starts[1:], len(f))
     rows = f["row"].to_numpy()[starts]
     toks_list = f["tok"].to_list()
 
-    # Embed + score each DISTINCT mention once, then broadcast back via the
-    # factorize codes. Entities recur heavily in real transcripts, and the
-    # embed gather + (U × D) @ (D × C) matmul is the batch's dominant cost,
-    # so collapsing repeats is a direct FLOP/bandwidth saving with
-    # bit-identical results (same kernel, same inputs).
+    # Score each DISTINCT mention once, then broadcast back via the
+    # factorize codes: entities recur heavily in real transcripts, and
+    # scoring is a pure function of the word group.
     mention_strs = np.asarray(
         [" ".join(toks_list[s:e]) for s, e in zip(starts, ends)],
         dtype=object)
-    codes, _ = pd.factorize(mention_strs)
-    first_pos = np.unique(codes, return_index=True)[1]
-    # slice each unique group's tokens straight out of the flat token
-    # list by its boundary indices — no join/split round trip (the
-    # joined string is still what factorize keys on and what the output
-    # `mention` column carries)
-    uniq_groups = [toks_list[starts[i]:ends[i]] for i in first_pos]
-
-    vecs = ctx.embedding.embed_groups(uniq_groups)
-    scores = score_against_classes(vecs, ctx.class_matrix)
-    top_u = np.argmax(scores, axis=1)
-    top_scores_u = scores[np.arange(len(top_u)), top_u].astype(np.float64)
-    top = top_u[codes]
-    top_scores = top_scores_u[codes]
+    codes, uniq = pd.factorize(mention_strs)
+    scores = score_groups(ctx.embedding, [m.split(" ") for m in uniq],
+                          ctx.class_matrix)
+    top = np.argmax(scores, axis=1)[codes]
+    top_scores = scores.max(axis=1)[codes]
     classes = np.asarray(ctx.classes, dtype=object)
 
     out = pd.DataFrame({
@@ -173,20 +159,8 @@ def link_batch(pdf: pd.DataFrame, ctx: LinkContext) -> pd.DataFrame:
         "entity_score": top_scores,
     })
     # mention_id restarts per input row (one row == one turn); `rows` is
-    # nondecreasing because `grouped` is sorted by (row, run, chunk)
+    # nondecreasing because `f` is in (row, run, chunk) order
     out["mention_id"] = out.groupby(rows, sort=False).cumcount().astype("int32")
     out["turn_idx"] = out["turn_idx"].astype("int32")
     return out[MENTION_COLUMNS]
 
-
-def score_mentions_batch(mentions: pd.Series, counts: pd.Series,
-                         ctx: LinkContext) -> np.ndarray:
-    """Weighted mean class-score vector over (mention, count) pairs — the
-    canonicalization partial. Linearity of the dot product means the mean
-    over mention occurrences equals the count-weighted mean over distinct
-    mention strings (``Duke/dataset_descriptor.py:73-74`` row mean)."""
-    groups = [m.split(" ") for m in mentions]
-    vecs = ctx.embedding.embed_groups(groups)
-    scores = score_against_classes(vecs, ctx.class_matrix).astype(np.float64)
-    w = counts.to_numpy(dtype=np.float64)
-    return (scores * w[:, None]).sum(axis=0) / w.sum()

@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from duke_spark.kernel.tree import fold_scores
-from duke_spark.kernel.vectors import score_against_classes
+from duke_spark.kernel.vectors import score_groups
 
 STATE_SCHEMA = "sum_scores array<double>, n bigint"
 
@@ -44,12 +44,6 @@ OUT_SCHEMA = T.StructType([
     T.StructField("topic", T.StringType()),
     T.StructField("n_mentions", T.LongType()),
 ])
-
-
-def _mention_scores(mentions: pd.Series, ctx) -> np.ndarray:
-    groups = [m.split(" ") for m in mentions]
-    vecs = ctx.embedding.embed_groups(groups)
-    return score_against_classes(vecs, ctx.class_matrix).astype(np.float64)
 
 
 def running_conversation_topics(mentions: DataFrame, ctx_bc,
@@ -71,8 +65,9 @@ def running_conversation_topics(mentions: DataFrame, ctx_bc,
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
-            scores = _mention_scores(pdf["mention"], ctx)
-            s = scores.sum(axis=0)
+            s = score_groups(
+                ctx.embedding, [m.split(" ") for m in pdf["mention"]],
+                ctx.class_matrix).sum(axis=0)
             new_sum = s if new_sum is None else new_sum + s
             n_new += len(pdf)
         if n_new == 0:

@@ -24,11 +24,15 @@ gate fails loudly if either drifts):
   - `_corpus_context`: vocab = top-2000 corpus words by (count desc,
     word asc) + fixture class words; deterministic hash embeddings.
 
-Float policy: `score` columns are stored raw float64; both the Spark
-query and the oracle SQL apply ROUND(score, 6) (the repo-wide float
-comparability convention, cf. the ANN oracles). Spark-vs-oracle raw
-diffs are summation-order noise (~1e-12, printed below) — far inside
-the 1e-6 grid, so rounding is collision-safe.
+Float policy: scores follow the oracle's float64 definition (steps 3-4
+of the `kernel/oracle.py` spec: the float64 sum of a group's float32
+word vectors, unit-normed, dotted with the class rows). `score` columns
+are stored raw float64; both the Spark query and the oracle SQL apply
+ROUND(score, 6) (the repo-wide float comparability convention, cf. the
+ANN oracles). Spark-vs-oracle raw diffs are association-order noise
+(≤1e-15: Spark scores through `kernel.vectors.score_groups`' per-batch
+word table, the oracle sums, norms and dots per group) — far inside the
+1e-6 grid, so rounding is collision-safe.
 
 Usage: python scripts/make_kg_golden.py [sf_dir ...]
 Defaults to sf0.001, sf0.01 and sf0.1.

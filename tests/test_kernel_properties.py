@@ -2,16 +2,23 @@
 property tests (SURVEY §5); these pin the invariants the distributed
 operators rely on."""
 
+import pathlib
+from types import SimpleNamespace
+
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
+from duke_spark.kernel.oracle import link_mentions, oracle_mentions
 from duke_spark.kernel.text import (normalize_text, normalize_text_series,
                                     underscore)
 from duke_spark.kernel.tree import (fold_schedule, fold_scores,
                                     parent_children_funcs, tree_score)
-from duke_spark.kernel.vectors import chunk_in_vocab_runs, unit_norm_rows
+from duke_spark.kernel.vectors import (VocabEmbedding, _direct_sums,
+                                       _word_positions, _word_table_sums,
+                                       chunk_in_vocab_runs, score_groups,
+                                       unit_norm_rows)
 
 TEXT = st.text(
     alphabet=st.characters(codec="ascii", exclude_categories=("Cc", "Cs")),
@@ -142,3 +149,71 @@ def test_matrix_fold_equals_reference_fold(ts, n_rows, seed):
                 assert np.array_equal(got, exp), (parent, children)
             else:
                 np.testing.assert_allclose(got, exp, rtol=0, atol=1e-12)
+
+
+_WORDS = ["york", "new", "city", "guitar", "song", "river", "zero"]
+_rng = np.random.default_rng(7)
+_EMB = VocabEmbedding(_WORDS, np.vstack([
+    _rng.standard_normal((len(_WORDS) - 1, 16)),
+    np.zeros((1, 16))]).astype(np.float32))      # "zero": all-zero vector
+_CLASSES = unit_norm_rows(_rng.standard_normal((9, 16))).astype(np.float32)
+
+
+def _cosine(pair):
+    scores, sq = pair
+    norms = np.sqrt(np.maximum(sq, 0.0))
+    norms[norms == 0.0] = 1.0
+    return scores / norms[:, None]
+
+
+@given(st.lists(st.lists(st.sampled_from(_WORDS), min_size=1, max_size=12),
+                min_size=1, max_size=20))
+@example([["zero"], ["york", "york"], ["zero", "zero", "new"], ["york"]])
+@settings(max_examples=200, deadline=None)
+def test_score_groups_associations_agree(groups):
+    """Word-table and direct associations of ``score_groups`` give the
+    same cosine (to 1e-12) and argmax on groups of 1-12 words with
+    repeats ("york york") and an all-zero word vector; both match the
+    oracle's per-group sum → norm → dot; a zero-norm group scores 0."""
+    vecs, pos = _word_positions(_EMB, groups)
+    classes = _CLASSES.astype(np.float64)
+    table = _cosine(_word_table_sums(vecs, pos, classes))
+    direct = _cosine(_direct_sums(vecs, pos, classes))
+    np.testing.assert_allclose(table, direct, rtol=0, atol=1e-12)
+    assert np.array_equal(table.argmax(axis=1), direct.argmax(axis=1))
+
+    got = score_groups(_EMB, groups, _CLASSES)
+    ctx = SimpleNamespace(embedding=_EMB, class_matrix=_CLASSES)
+    np.testing.assert_allclose(got, link_mentions(ctx, groups)[1], rtol=0,
+                               atol=1e-12)
+    zero = np.array([set(g) == {"zero"} for g in groups])
+    assert (got[zero] == 0.0).all() and (table[zero] == 0.0).all()
+
+
+def test_link_batch_scores_pinned_to_oracle(oracle_ctx,
+                                            tiny_transcripts_pdf):
+    """``link_batch`` entity scores equal the oracle's to 1e-12 on the
+    mini fixture (same mentions and entities, in the same order)."""
+    from duke_spark.fixtures.class_tree import mini_tree
+    from duke_spark.fixtures.embedding import embedding_arrays
+    from duke_spark.operators.linking import LinkContext, link_batch
+
+    ctx = LinkContext(*embedding_arrays(), mini_tree())
+    got = link_batch(tiny_transcripts_pdf, ctx)
+    exp = oracle_mentions(oracle_ctx, tiny_transcripts_pdf)
+    assert len(got) > 0
+    assert got["mention"].tolist() == exp["mention"].tolist()
+    assert got["entity"].tolist() == exp["entity"].tolist()
+    np.testing.assert_allclose(got["entity_score"], exp["entity_score"],
+                               rtol=0, atol=1e-12)
+
+
+def test_one_class_scoring_path():
+    """Every production class-score site goes through ``score_groups``:
+    nothing under ``duke_spark/`` but ``kernel/vectors.py`` (where
+    ``score_groups`` lives) references ``score_against_classes``."""
+    root = pathlib.Path(__file__).resolve().parents[1] / "duke_spark"
+    offenders = [str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+                 if "score_against_classes" in p.read_text()
+                 and p.relative_to(root).as_posix() != "kernel/vectors.py"]
+    assert offenders == []
