@@ -17,7 +17,6 @@ path.
 
 from __future__ import annotations
 
-import json
 from typing import Dict, List
 
 Tree = Dict[str, Dict[str, List[str]]]
@@ -70,11 +69,4 @@ def mini_tree(include_oov_class: bool = False) -> Tree:
         # OOV name → dropped by normalize_class_tree; edge repair removes it
         t["zzyzx thing"] = {"parents": ["work"], "children": []}
         t["work"]["children"] = t["work"]["children"] + ["zzyzx thing"]
-    return t
-
-
-def write_mini_tree(path: str, **kw) -> Tree:
-    t = mini_tree(**kw)
-    with open(path, "w") as f:
-        json.dump(t, f, indent=2)
     return t

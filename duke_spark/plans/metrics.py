@@ -1,7 +1,7 @@
-"""Per-stage metrics (SURVEY B10): rows in/out and throughput without extra
-scans, via Spark's Observation API (metrics piggyback on the action that
-materializes the stage — no ``count()`` re-runs). The reference only has
-wall-clock printfs (``Duke/utils.py:52-57``, ``Duke/DukeRestListener.py:64``).
+"""Per-stage metrics (SURVEY B10): named records of stage wall time and
+whatever counts the caller already has, serialized as one JSON object.
+The reference only has wall-clock printfs (``Duke/utils.py:52-57``,
+``Duke/DukeRestListener.py:64``).
 """
 
 from __future__ import annotations
@@ -10,27 +10,12 @@ import json
 import time
 from typing import Dict
 
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
-
 
 class StageMetrics:
     def __init__(self):
         self.stages: Dict[str, dict] = {}
-        self._obs: Dict[str, Observation] = {}
-
-    def observe_rows(self, df: DataFrame, stage: str) -> DataFrame:
-        """Attach a row-count observation; harvested after the next action."""
-        obs = Observation(stage)
-        self._obs[stage] = obs
-        return df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
     def harvest(self) -> Dict[str, dict]:
-        for stage, obs in self._obs.items():
-            try:
-                self.stages.setdefault(stage, {}).update(obs.get)
-            except Exception:  # action not yet run
-                pass
         return self.stages
 
     def record(self, stage: str, **kv) -> None:

@@ -2,8 +2,8 @@
 completes the build-once / query-many lifecycle of
 ``operators.ann_index`` with append-as-vectors-arrive.
 
-Shape mirrors ``streaming.neardup_stream``: a ``foreachBatch`` processor
-against the bucket-partitioned parquet index. Per micro-batch:
+A ``foreachBatch`` processor against the bucket-partitioned parquet
+index. Per micro-batch:
 
   1. assign each new vector its bucket with the SAME rule the index was
      built with (read from the ``_meta.json`` sidecar — plane family,
@@ -14,9 +14,12 @@ against the bucket-partitioned parquet index. Per micro-batch:
 Replay safety: appends are idempotent-by-dedup — a replayed epoch
 re-appends byte-identical (id, vector, bucket) rows, and the query path
 drops duplicate ids before top-k (`ann_index.query_lsh_index`), so
-at-least-once delivery can repeat rows but never distort results.
-``compact()`` rewrites the index without duplicates (the maintenance
-hook, same tmp-swap pattern as the near-dup band table).
+at-least-once delivery can repeat rows but never distort results. This
+writer deliberately stays off the ``streaming.epochs`` directory layout:
+epoch directories would make ``operators.ann_index`` learn that layout,
+and query-time dedup already makes replays harmless. ``compact()``
+rewrites the index without duplicates through the package's one
+crash-safe directory swap (``epochs.swap_in``).
 
 At scale: each micro-batch writes only the partitions its vectors land
 in; file counts grow with (batches × buckets-hit) until ``compact()``
@@ -27,12 +30,12 @@ contract of every LSM-ish store.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from duke_spark.operators.ann_index import DATA_DIR, _read_meta
 from duke_spark.operators.similarity import coord_sign_bucket, lsh_bucket_ids
+from duke_spark.streaming.epochs import recover, swap_in
 
 
 class StreamingAnnIndexWriter:
@@ -40,7 +43,7 @@ class StreamingAnnIndexWriter:
     (built by ``ann_index.build_lsh_index``)."""
 
     def __init__(self, path: str):
-        self.path = path
+        self.data_dir = os.path.join(path, DATA_DIR)
         self.meta = _read_meta(path)
         if self.meta["kind"] != "lsh":
             raise ValueError("streaming append currently supports LSH "
@@ -58,24 +61,16 @@ class StreamingAnnIndexWriter:
     def process(self, batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
+        recover(self.data_dir)
         (self._assign(batch)
-         .write.mode("append").partitionBy("bucket")
-         .parquet(os.path.join(self.path, DATA_DIR)))
+         .write.mode("append").partitionBy("bucket").parquet(self.data_dir))
 
     def compact(self, spark: SparkSession) -> int:
         """Rewrite the index deduped (replayed epochs fold away) and
         re-partitioned one-dir-per-bucket. Returns the row count."""
-        m = self.meta
-        data_dir = os.path.join(self.path, DATA_DIR)
-        cur = spark.read.parquet(data_dir).dropDuplicates([m["id_col"]])
-        tmp = data_dir.rstrip("/") + ".compact_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (cur.repartition("bucket")
-         .write.mode("overwrite").partitionBy("bucket").parquet(tmp))
-        n = spark.read.parquet(tmp).count()
-        old = data_dir.rstrip("/") + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(data_dir, old)
-        os.replace(tmp, data_dir)
-        shutil.rmtree(old, ignore_errors=True)
-        return n
+        recover(self.data_dir)
+        cur = (spark.read.parquet(self.data_dir)
+               .dropDuplicates([self.meta["id_col"]]))
+        swap_in(cur.repartition("bucket"), self.data_dir,
+                partition_by="bucket")
+        return spark.read.parquet(self.data_dir).count()

@@ -5,30 +5,25 @@ arrive, WITHOUT recomputing over the full corpus per batch.
 The reference rebuilds its whole pipeline per request
 (``Duke/DukeRestListener.py:30-66``); at 100 TB a "refresh the KG"
 operation must instead be incremental: per micro-batch work proportional
-to the BATCH, with read-side folding and periodic compaction — the
-LSM contract ``streaming.ann_stream`` and ``streaming.neardup_stream``
-already follow. Three stores; the edge and fact stores share the
-epoch-delta machinery (``_EpochDeltaStore``), while the component store
-deliberately has no epoch bookkeeping — label merging is idempotent,
-so it needs neither the run-id guard nor delta dirs:
+to the BATCH, with read-side folding and periodic compaction. The edge
+and fact stores keep per-epoch partial aggregates on the package's one
+epoch-commit protocol (``streaming.epochs``); the component store keeps
+one label table, replaced per epoch by the same crash-safe swap:
 
 ``IncrementalEdgeStore`` — the KG edge materialization (B7's
-``build_edges`` output) maintained as per-epoch delta parquet dirs.
-``build_edges`` is a pure sum-aggregate, so per-batch partial aggregates
-fold associatively on read: ``read_edges`` == batch
-``build_edges(all_triples)`` exactly (tested). Degrees and any other
-edge-side analytic derive from the folded state — edge-cardinality,
-never triple-cardinality.
+``build_edges`` output) as per-epoch deltas. ``build_edges`` is a pure
+sum-aggregate, so per-batch partial aggregates fold associatively on
+read: ``read_edges`` == batch ``build_edges(all_triples)`` exactly
+(tested). Degrees and any other edge-side analytic derive from the
+folded state — edge-cardinality, never triple-cardinality.
 
-Exactly-once: each epoch writes mode("overwrite") into a DETERMINISTIC
-``epoch=<run_id>-<epoch_id>`` directory, so an at-least-once replay of
-the same epoch overwrites its own delta instead of double-counting.
+Exactly-once: a replayed epoch overwrites its own ``epoch=<run>-<id>``
+delta instead of double-counting. These stores are additive, so
 ``run_id`` must be 1:1 with the stream's checkpoint location (a restart
 FROM the checkpoint reuses both; a FRESH checkpoint reprocesses the
-source from scratch, so the store must be reset) — the store persists
-the run id in a ``_run_id`` marker and refuses a mismatched writer
-unless ``reset=True``, the failure mode ADVICE r3 flagged on the
-near-dup filter's epoch-keyed state.
+source from scratch and would count it twice) — the store persists the
+run id in a ``_run_id`` marker and refuses a mismatched writer unless
+``reset=True``.
 
 ``IncrementalFactStore`` — the fact-provenance rollup
 (``operators.triples.fact_support``) maintained the same way, with the
@@ -53,59 +48,52 @@ tested per epoch, not just at the end.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duke_spark.operators.dedup import connected_components
 from duke_spark.operators.graph import build_edges, degrees
+from duke_spark.streaming.epochs import EpochDirs, recover, swap_in
 
 DELTA_DIR = "deltas"
 ASSIGN_DIR = "assign"
-_BASE_EPOCH = "base"
 
 
 class _EpochDeltaStore:
-    """Shared epoch-delta machinery: run-id marker, deterministic
-    ``epoch=<run>-<id>`` overwrite dirs, associative-grain fold, and
-    quiesced compaction. Subclasses define ``_delta(batch)`` (the
-    per-batch partial, written per epoch) and ``_fold(deltas)`` (the
+    """Additive epoch store: ``EpochDirs`` deltas under ``<path>/deltas``
+    plus the run-id marker guard. Subclasses define ``_delta(batch)``
+    (the per-batch partial, written per epoch), ``_fold(deltas)`` (the
     associative re-aggregate at the SAME grain as the deltas, so
-    compaction never loses information)."""
+    compaction never loses information) and ``_DELTA_SCHEMA`` (the DDL
+    of the delta rows)."""
+
+    _DELTA_SCHEMA: str = ""
 
     def __init__(self, path: str, run_id: str = "run0",
                  reset: bool = False):
         self.path = path
-        self.run_id = str(run_id)
-        if "-" in self.run_id or "/" in self.run_id:
-            raise ValueError("run_id must not contain '-' or '/'")
+        self.deltas = EpochDirs(os.path.join(path, DELTA_DIR), run_id)
+        run_id = self.deltas.run_id
         marker = os.path.join(path, "_run_id")
         if reset:
-            shutil.rmtree(os.path.join(path, DELTA_DIR),
-                          ignore_errors=True)
+            self.deltas.clear()
             if os.path.exists(marker):
                 os.remove(marker)
         os.makedirs(path, exist_ok=True)
         if os.path.exists(marker):
             with open(marker) as fh:
                 prev = fh.read().strip()
-            if prev != self.run_id:
+            if prev != run_id:
                 raise ValueError(
                     f"store at {path} was written by run_id={prev!r}; a "
-                    f"new run_id ({self.run_id!r}) means a fresh stream "
+                    f"new run_id ({run_id!r}) means a fresh stream "
                     "checkpoint that will re-ingest the source — pass "
                     "reset=True to clear the store, or reuse the "
                     "original run_id with the original checkpoint")
         else:
             with open(marker, "w") as fh:
-                fh.write(self.run_id)
-
-    #: DDL of the per-epoch delta rows; lets read-side calls on a
-    #: freshly-constructed store (no epoch written yet) return empty
-    #: state instead of raising PATH_NOT_FOUND — mirroring
-    #: IncrementalComponentStore.read
-    _DELTA_SCHEMA: str = ""
+                fh.write(run_id)
 
     def _delta(self, batch: DataFrame) -> DataFrame:
         raise NotImplementedError
@@ -113,55 +101,27 @@ class _EpochDeltaStore:
     def _fold(self, deltas: DataFrame) -> DataFrame:
         raise NotImplementedError
 
-    def _empty_deltas(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame([], self._DELTA_SCHEMA)
-
-    def _epoch_dir(self, epoch_id) -> str:
-        return os.path.join(self.path, DELTA_DIR,
-                            f"epoch={self.run_id}-{epoch_id}")
-
     def process(self, batch: DataFrame, epoch_id: int) -> None:
         """One micro-batch: batch-local partial aggregate → its own
         epoch dir. O(batch) shuffle; replay overwrites the same dir."""
         if batch.isEmpty():
             return
-        (self._delta(batch)
-         .write.mode("overwrite").parquet(self._epoch_dir(epoch_id)))
+        self.deltas.write(self._delta(batch), epoch_id)
 
-    def _read_folded(self, spark: SparkSession) -> DataFrame:
-        """Fold every delta at the associative grain. Cost is O(sum of
-        delta sizes) — ``compact()`` keeps that bounded. A store with no
-        epoch yet folds the empty delta schema (empty state, no raise)."""
-        deltas = os.path.join(self.path, DELTA_DIR)
-        if not os.path.exists(deltas):
-            return self._fold(self._empty_deltas(spark))
-        cur = spark.read.parquet(deltas)
-        return self._fold(cur)
+    def _read_folded(self, spark: SparkSession, exclude=None) -> DataFrame:
+        """Fold every delta (but epoch ``exclude``) at the associative
+        grain. Cost is O(sum of delta sizes) — ``compact()`` keeps that
+        bounded. A store with no epoch yet folds to empty state."""
+        return self._fold(self.deltas.read(spark, self._DELTA_SCHEMA,
+                                           exclude))
 
     def compact(self, spark: SparkSession) -> int:
-        """Fold all deltas into a single ``epoch=<run>-base`` dir (the
-        tmp-swap pattern of ``ann_stream.compact``). Returns the folded
-        row count. Replay interaction: a replayed epoch re-creates its
-        delta dir after compaction folded it — double count. Run
-        compact() only at a quiesced stream (stopped, or availableNow
-        drained), same as the ANN/near-dup maintenance hooks."""
-        if not os.path.exists(os.path.join(self.path, DELTA_DIR)):
-            return 0  # nothing ingested yet — no-op
+        """Fold all deltas into one base epoch; returns the folded row
+        count. Quiesced stream only (see ``streaming.epochs``)."""
         folded = self._read_folded(spark)
-        deltas = os.path.join(self.path, DELTA_DIR)
-        tmp = deltas.rstrip("/") + ".compact_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (folded.coalesce(max(1, folded.sparkSession.sparkContext
-                             .defaultParallelism // 4))
-         .write.mode("overwrite")
-         .parquet(os.path.join(tmp, f"epoch={self.run_id}-{_BASE_EPOCH}")))
-        n = spark.read.parquet(tmp).count()
-        old = deltas.rstrip("/") + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(deltas, old)
-        os.replace(tmp, deltas)
-        shutil.rmtree(old, ignore_errors=True)
-        return n
+        self.deltas.compact(folded.coalesce(
+            max(1, spark.sparkContext.defaultParallelism // 4)))
+        return self.deltas.read(spark, self._DELTA_SCHEMA).count()
 
 
 class IncrementalEdgeStore(_EpochDeltaStore):
@@ -217,22 +177,6 @@ class IncrementalFactStore(_EpochDeltaStore):
                      "conv_id string, n bigint, n_score bigint, "
                      "sum_score double, max_score double")
 
-    def _read_folded(self, spark: SparkSession) -> DataFrame:
-        # mergeSchema: delta dirs written before n_score existed must
-        # still read; their rows backfill n_score = n (the legacy code
-        # assumed every score non-NULL, so that is its exact semantics)
-        deltas = os.path.join(self.path, DELTA_DIR)
-        if not os.path.exists(deltas):
-            return self._fold(self._empty_deltas(spark))
-        cur = (spark.read.option("mergeSchema", "true")
-               .parquet(deltas))
-        if "n_score" not in cur.columns:
-            cur = cur.withColumn("n_score", F.col("n"))
-        else:
-            cur = cur.withColumn("n_score",
-                                 F.coalesce("n_score", F.col("n")))
-        return self._fold(cur)
-
     def _fold(self, deltas: DataFrame) -> DataFrame:
         return (deltas.groupBy("subj", "pred", "obj", "conv_id")
                 .agg(F.sum("n").alias("n"),
@@ -270,6 +214,7 @@ class IncrementalComponentStore:
 
     def read(self, spark: SparkSession) -> DataFrame:
         d = self._assign_dir()
+        recover(d)
         if not os.path.exists(d):
             return spark.createDataFrame(
                 [], f"node {self.node_type}, comp {self.node_type}")
@@ -320,13 +265,4 @@ class IncrementalComponentStore:
                      .select("node", F.coalesce("new_comp", F.col("comp"))
                              .alias("comp")))
 
-        d = self._assign_dir()
-        tmp = d.rstrip("/") + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        state.write.mode("overwrite").parquet(tmp)
-        old = d.rstrip("/") + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(d):
-            os.replace(d, old)
-        os.replace(tmp, d)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_in(state, self._assign_dir())

@@ -10,28 +10,28 @@ a persisted bucket table:
   per micro-batch (inside foreachBatch; the source offsets are
   checkpointed):
     1. batch docs → MinHash signatures → (band_idx, band_hash) rows;
-    2. candidates = batch bands ⋈ stored bucket table (bucket table is
-       parquet partitioned by band_idx, so the join prunes to the
-       batch's bands); band rows carry the (RUN, EPOCH) that wrote them,
-       and the history join excludes only the current run's current
-       epoch — so an epoch replayed after a mid-commit crash never
-       collides with the bands it wrote before crashing, while a
-       fresh-checkpoint run (epoch ids restarting at 0) still sees ALL
-       prior runs' rows as history;
+    2. candidates = batch bands ⋈ stored bucket table, read as every
+       epoch except this one (the ``streaming.epochs`` protocol): a
+       replayed epoch never collides with the bands it wrote before a
+       crash, while a fresh-checkpoint run (new ``run_id``, epoch ids
+       restarting at 0) still sees ALL prior runs' epochs as history;
     3. within-batch near-dups resolved by the batch-local
        ``near_dup_filter`` (greedy min-id), cross-batch survivors =
        anti-join against candidates (or, in ``verify=True`` mode, only
        against candidates whose signature-estimated jaccard clears the
        threshold — see below);
-    4. commit order: SURVIVORS first, then their bands (then signatures
-       in verify mode). A crash at any point leaves the pair
-       (out_dir, state_dir) in a state the replay repairs: survivors
-       re-append (duplicate rows removed by downstream exact dedup /
-       ``compact``), bands re-append (duplicates are harmless to a
-       semi-join and rebuilt away by ``compact``). The old bands-first
-       order could permanently LOSE a batch's survivors — crash between
-       the band write and the row write meant replay collided with the
-       batch's own bands and dropped everything.
+    4. commit: survivors, then their bands (partitioned by
+       ``band_idx``), then signatures in verify mode, each into the
+       epoch's own ``epoch=<run_id>-<epoch_id>`` directory with
+       mode("overwrite"). A replay recomputes the same rows against the
+       same history and rewrites all three, so each survivor lands in
+       ``out_dir`` exactly once. Survivors go first so that a run
+       abandoned mid-commit can leave a survivor without bands (a later
+       near-dup slips in) but never bands without their survivor (a
+       lost document).
+
+``spark.read.parquet(out_dir)`` returns the survivors plus a string
+``epoch`` column naming the epoch that admitted each row.
 
 State growth is one row per (surviving doc × bands) — the same footprint
 a batch LSH index carries; compaction/TTL is the operator's user policy
@@ -44,22 +44,24 @@ Cross-batch collision policy:
     rare, and false drops cost little at TB scale while false keeps
     cost training-set duplication.
   * verified (``verify=True``): the state additionally retains each
-    survivor's full MinHash signature (a sidecar parquet,
-    64 × int64 per doc — NOT the text). A band collision is then
-    confirmed by the standard MinHash estimator (fraction of agreeing
-    signature slots ≈ jaccard); only collisions with estimated
-    jaccard ≥ threshold drop the doc, so a single-band fluke collision
-    between genuinely different documents no longer kills a survivor.
+    survivor's full MinHash signature (a sidecar, 64 × int64 per doc —
+    NOT the text). A band collision is then confirmed by the standard
+    MinHash estimator (fraction of agreeing signature slots ≈ jaccard);
+    only collisions with estimated jaccard ≥ threshold drop the doc, so
+    a single-band fluke collision between genuinely different documents
+    no longer kills a survivor. A collision whose historical signature
+    is missing drops the doc, as in conservative mode.
 """
 
 from __future__ import annotations
 
-import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duke_spark.operators.dedup import minhash_signatures, near_dup_filter
+from duke_spark.streaming.epochs import EpochDirs
 
 
 def _bands(sigs: DataFrame, bands: int, id_col: str) -> DataFrame:
@@ -86,8 +88,13 @@ def _sig_agreement(a, b):
 
 class StreamingNearDupFilter:
     """foreachBatch processor: call ``process(batch_df, epoch_id)`` from
-    ``writeStream.foreachBatch``; survivors land in ``out_dir`` parquet,
-    band state in ``state_dir`` (+ ``state_dir``_sigs when verify=True)."""
+    ``writeStream.foreachBatch``; survivors land in ``out_dir``, band
+    state in ``state_dir`` (+ ``state_dir``_sigs when verify=True), each
+    as epoch directories. Pass a ``run_id`` STABLE across restarts of
+    the same checkpoint (e.g. derived from checkpointLocation or the
+    streaming query id) so crash-replays rewrite their own epoch; the
+    default — a fresh UUID per writer — is safe for fresh-checkpoint
+    runs and for same-process retries that reuse this instance."""
 
     def __init__(self, out_dir: str, state_dir: str,
                  text_col: str = "text", id_col: str = "doc_id",
@@ -95,99 +102,44 @@ class StreamingNearDupFilter:
                  jaccard_threshold: float = 0.8,
                  verify: bool = False,
                  run_id: str | None = None):
-        self.out_dir = out_dir
-        self.state_dir = state_dir
-        self.sig_dir = state_dir.rstrip("/") + "_sigs"
+        self.run_id = run_id if run_id is not None else uuid.uuid4().hex
+        self.survivors = EpochDirs(out_dir, self.run_id)
+        self.band_state = EpochDirs(state_dir, self.run_id)
+        self.sig_state = EpochDirs(state_dir.rstrip("/") + "_sigs",
+                                   self.run_id)
         self.text_col, self.id_col = text_col, id_col
         self.num_hashes, self.bands = num_hashes, bands
         self.jaccard_threshold = jaccard_threshold
         self.verify = verify
-        # Replay-exclusion scope (ADVICE r3): state rows are tagged
-        # (run_id, epoch_id), and an epoch excludes only ITS OWN earlier
-        # partial writes — raw epoch equality would make a fresh-checkpoint
-        # run (epochs restarting at 0) silently ignore all historical rows
-        # that happen to share an epoch number, admitting near-dups of
-        # those survivors. Pass a run_id STABLE across restarts of the
-        # same checkpoint (e.g. derived from checkpointLocation or the
-        # streaming query id) so crash-replays still self-exclude; the
-        # default — a fresh UUID per writer — is safe for fresh-checkpoint
-        # runs and for same-process retries that reuse this instance.
-        import uuid
-        self.run_id = run_id if run_id is not None else uuid.uuid4().hex
+        # DDL of the stored rows; minhash_signatures emits bigint ids
+        self._band_ddl = f"{id_col} bigint, band_idx int, band_hash bigint"
+        self._sig_ddl = f"{id_col} bigint, signature array<bigint>"
 
     def compact(self, spark: SparkSession) -> int:
         """Rebuild the band table from the surviving corpus (the TTL /
         compaction policy): recompute signatures over the CURRENT output
-        (post any downstream pruning the user did), write a fresh state
-        dir atomically via rename. Returns the new band count. Run this
-        offline, between streaming runs — not inside foreachBatch."""
-        import shutil
-
-        survivors = spark.read.parquet(self.out_dir) \
-            .dropDuplicates([self.id_col])
+        (post any downstream pruning the user did) and swap them in as
+        one base epoch. Returns the new band count. Run this offline,
+        between streaming runs — not inside foreachBatch."""
+        survivors = spark.read.parquet(self.survivors.path)
         sigs = minhash_signatures(survivors, self.text_col, self.id_col,
                                   self.num_hashes).persist()
-        fresh = _bands(sigs, self.bands, self.id_col) \
-            .select(self.id_col, "band_idx", "band_hash",
-                    F.lit(-1).cast("long").alias("epoch_id"),
-                    F.lit(None).cast("string").alias("run_id"))
-
-        def _swap_in(df: DataFrame, dest: str, partition_by=None) -> int:
-            tmp = dest.rstrip("/") + ".compact_tmp"
-            shutil.rmtree(tmp, ignore_errors=True)
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(partition_by)
-            w.parquet(tmp)
-            n = spark.read.parquet(tmp).count()
-            old = dest.rstrip("/") + ".old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.isdir(dest):
-                os.replace(dest, old)
-            os.replace(tmp, dest)
-            shutil.rmtree(old, ignore_errors=True)
-            return n
-
-        n = _swap_in(fresh, self.state_dir, partition_by="band_idx")
+        self.band_state.compact(_bands(sigs, self.bands, self.id_col),
+                                partition_by="band_idx")
         if self.verify:
-            _swap_in(sigs.select(self.id_col, "signature",
-                                 F.lit(-1).cast("long").alias("epoch_id"),
-                                 F.lit(None).cast("string").alias("run_id")),
-                     self.sig_dir)
+            self.sig_state.compact(sigs)
         sigs.unpersist()
-        return n
-
-    def _read_state(self, spark: SparkSession, path: str) -> DataFrame | None:
-        if not os.path.isdir(path):
-            return None
-        try:
-            # mergeSchema: state written by older code lacks run_id; mixed
-            # files must still surface the column (as null) on new rows
-            return spark.read.option("mergeSchema", "true").parquet(path)
-        except Exception:
-            return None
-
-    def _exclude_own(self, df: DataFrame, epoch_id: int) -> DataFrame:
-        """Drop THIS (run_id, epoch_id)'s own earlier partial writes —
-        and nothing else. Rows with a null/absent run_id (legacy state,
-        compact()-rebuilt rows) are genuine history and always kept;
-        legacy tables without the run_id column fall back to epoch-only
-        exclusion (the pre-run_id behavior) until their first new append."""
-        if "epoch_id" not in df.columns:
-            return df
-        own = F.col("epoch_id") == F.lit(int(epoch_id))
-        if "run_id" in df.columns:
-            own = own & (F.col("run_id") == F.lit(self.run_id))
-        return df.filter(~F.coalesce(own, F.lit(False)))
+        return self.band_state.read(spark, self._band_ddl).count()
 
     def _history_hits(self, my_bands: DataFrame, my_sigs: DataFrame,
-                      stored: DataFrame, spark: SparkSession,
                       epoch_id: int) -> DataFrame:
         """ids (single column ``id_col``) of batch docs that near-match
-        history. ``stored`` already excludes the current epoch's rows."""
-        if not self.verify or self.id_col not in stored.columns:
-            # conservative: any band collision drops the doc. Also the
-            # fallback for legacy state written without doc ids.
+        history: the stored rows of every epoch but ``epoch_id``."""
+        spark = my_bands.sparkSession
+        stored = self.band_state.read(spark, self._band_ddl,
+                                      exclude=epoch_id)
+        if not self.verify:
+            # conservative: any band collision drops the doc
             return (my_bands
                     .join(stored.select("band_idx", "band_hash"),
                           ["band_idx", "band_hash"], "left_semi")
@@ -200,17 +152,14 @@ class StreamingNearDupFilter:
                      F.col(self.id_col).alias("_hist_id")),
                      ["band_idx", "band_hash"])
                  .select(self.id_col, "_hist_id").distinct())
-        hist_sigs = self._read_state(spark, self.sig_dir)
-        if hist_sigs is None:
-            return pairs.select(self.id_col).distinct()
-        hist_sigs = (self._exclude_own(hist_sigs, epoch_id)
+        hist_sigs = (self.sig_state.read(spark, self._sig_ddl,
+                                         exclude=epoch_id)
                      .select(F.col(self.id_col).alias("_hist_id"),
-                             F.col("signature").alias("_hist_sig"))
-                     .dropDuplicates(["_hist_id"]))
+                             F.col("signature").alias("_hist_sig")))
         # LEFT join the signature sidecar: a collision whose historical
-        # signature is missing (crash between the bands and sigs appends,
-        # partial sidecar state) must resolve to the CONSERVATIVE drop,
-        # not a silent false keep — null _hist_sig counts as a hit.
+        # signature is missing (a run abandoned between the bands and
+        # sigs writes) must resolve to the CONSERVATIVE drop, not a
+        # silent false keep — null _hist_sig counts as a hit.
         return (pairs
                 .join(hist_sigs, "_hist_id", "left")
                 .join(my_sigs.select(self.id_col, "signature"), self.id_col)
@@ -223,7 +172,6 @@ class StreamingNearDupFilter:
     def process(self, batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
-        spark = batch.sparkSession
         # 1. resolve near-dups WITHIN the batch first (full verify path)
         local = near_dup_filter(
             batch, self.text_col, self.id_col, self.num_hashes,
@@ -231,41 +179,21 @@ class StreamingNearDupFilter:
         sigs = minhash_signatures(local, self.text_col, self.id_col,
                                   self.num_hashes).persist()
         my_bands = _bands(sigs, self.bands, self.id_col).persist()
-        # 2. drop anything colliding with history — EXCLUDING band rows this
-        # same epoch wrote before a crash, so replay can't collide with
-        # itself (the bands carry the epoch that wrote them).
-        stored = self._read_state(spark, self.state_dir)
-        if stored is not None:
-            stored = self._exclude_own(stored, int(epoch_id))
-            hit = self._history_hits(my_bands, sigs, stored, spark,
-                                     int(epoch_id))
-            survivors_ids = (local.select(self.id_col)
-                             .join(hit, self.id_col, "left_anti"))
-        else:
-            survivors_ids = local.select(self.id_col)
-        # localCheckpoint BEFORE mutating the state dir: writing to a path
-        # invalidates every cached plan that scans it, so a merely-persisted
-        # survivors DF would be re-evaluated after the band append and
-        # collide with its own bands. Checkpointing materializes the rows
-        # AND truncates the lineage, so nothing re-reads the bucket table.
-        survivors = local.join(survivors_ids, self.id_col, "left_semi") \
+        # 2. drop anything colliding with history. localCheckpoint
+        # BEFORE writing: writing to a path invalidates every cached plan
+        # that scans it, so the three writes below would each re-run the
+        # history join; checkpointing materializes the survivors once AND
+        # truncates the lineage, so no write re-reads the state.
+        hit = self._history_hits(my_bands, sigs, epoch_id)
+        survivors = local.join(hit, self.id_col, "left_anti") \
             .localCheckpoint()
-        # 3. commit: survivors FIRST (a crash after this write re-appends
-        # identical rows on replay — removed downstream; the old bands-first
-        # order could lose the batch's survivors forever), then bands, then
-        # signatures. Band/sig rows are epoch-tagged for the step-2 filter.
-        survivors.write.mode("append").parquet(self.out_dir)
-        ep = F.lit(int(epoch_id)).cast("long").alias("epoch_id")
-        rid = F.lit(self.run_id).alias("run_id")
-        new_bands = (my_bands.join(survivors.select(self.id_col),
-                                   self.id_col, "left_semi")
-                     .select(self.id_col, "band_idx", "band_hash", ep, rid))
-        new_bands.write.mode("append").partitionBy("band_idx") \
-            .parquet(self.state_dir)
+        ids = survivors.select(self.id_col)
+        # 3. commit survivors, then bands, then signatures
+        self.survivors.write(survivors, epoch_id)
+        self.band_state.write(my_bands.join(ids, self.id_col, "left_semi"),
+                              epoch_id, partition_by="band_idx")
         if self.verify:
-            (sigs.join(survivors.select(self.id_col), self.id_col,
-                       "left_semi")
-             .select(self.id_col, "signature", ep, rid)
-             .write.mode("append").parquet(self.sig_dir))
+            self.sig_state.write(sigs.join(ids, self.id_col, "left_semi"),
+                                 epoch_id)
         for df in (local, sigs, my_bands):
             df.unpersist()

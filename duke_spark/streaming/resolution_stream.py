@@ -19,12 +19,13 @@ Composition of two audited parts (VERDICT-r4 #8, C48 × C41):
    batch resolution over all vectors ever processed (tested per epoch,
    not just at the end).
 
-Vector history lives in the same epoch-delta machinery as the
-edge/fact stores (deterministic ``epoch=<run>-<id>`` overwrite dirs,
-run-id guard, quiesced compaction), with identity delta/fold — the
-history is the rows themselves. Replay safety: a replayed epoch
-overwrites its own vector delta, and re-inserting the same pairs into
-the component store merges nothing (label merging is idempotent).
+Vector history is an additive epoch store (``graph_state``'s
+``_EpochDeltaStore`` on the ``streaming.epochs`` protocol: run-id guard,
+quiesced compaction) with identity delta/fold — the history is the rows
+themselves. Replay safety: the pair delta is computed against every
+epoch but the replayed one, a replayed epoch overwrites its own vector
+delta, and re-inserting the same pairs into the component store merges
+nothing (label merging is idempotent).
 
 ``vec_id``s must be unique across the stream's lifetime (append-only
 entity arrivals); re-sending an id in a LATER epoch double-counts it
@@ -55,8 +56,8 @@ class _VectorDeltaStore(_EpochDeltaStore):
         # drop the Hive epoch partition column the delta-dir read adds
         return deltas.select("vec_id", "embedding")
 
-    def read_vectors(self, spark: SparkSession) -> DataFrame:
-        return self._read_folded(spark)
+    def read_vectors(self, spark: SparkSession, exclude=None) -> DataFrame:
+        return self._read_folded(spark, exclude)
 
 
 class IncrementalResolutionStore:
@@ -78,7 +79,7 @@ class IncrementalResolutionStore:
     def process(self, vec_batch: DataFrame, epoch_id: int = 0) -> None:
         """One micro-batch of (vec_id, embedding) arrivals: emit the
         new-touching pair delta against the stored history, merge it
-        into the label state, then append the batch to the history.
+        into the label state, then add the batch to the history.
         Candidate work is O(new × history) within LSH buckets — the
         has-new block pruning inside ``cosine_near_dup_pairs`` drops
         every history×history block pair before the shuffle."""
@@ -86,11 +87,9 @@ class IncrementalResolutionStore:
             return
         spark = vec_batch.sparkSession
         batch = vec_batch.select("vec_id", "embedding").persist()
-        prev = self.vectors.read_vectors(spark)
+        prev = self.vectors.read_vectors(spark, exclude=epoch_id)
         union = (prev.withColumn("_new", F.lit(False))
                  .unionByName(batch.withColumn("_new", F.lit(True))))
-        # a==b only under replay (the epoch's own vectors already in
-        # history); self-loops merge nothing, but cheap to drop.
         # persist the delta: comp.process walks it several times
         # (isEmpty, endpoint labeling x2, reduced-graph CC) and each
         # walk would otherwise re-run the O(new x history) pair kernel
@@ -98,7 +97,6 @@ class IncrementalResolutionStore:
                                        num_planes=self.num_planes,
                                        max_bucket=self.max_bucket,
                                        new_col="_new")
-                 .filter(F.col("a") != F.col("b"))
                  .select("a", "b").persist())
         self.comp.process(pairs, epoch_id)
         self.vectors.process(batch, epoch_id)

@@ -1,7 +1,8 @@
 """Incremental KG maintenance (streaming.graph_state): per-epoch edge
 deltas fold to the exact batch edge aggregate; incremental connected
-components match batch labels after EVERY epoch; replays don't
-double-count; a mismatched run_id is refused."""
+components match batch labels after EVERY epoch; a mismatched run_id is
+refused. Replay and compaction of every epoch store are tested once, in
+test_epoch_protocol.py."""
 
 import pandas as pd
 import pytest
@@ -81,25 +82,6 @@ def test_fresh_stores_read_empty_state(spark, tmp_path):
     assert fs.compact(spark) == 0
 
 
-def test_edge_store_replay_and_compact(spark, tmp_path):
-    batches = _edge_batches(spark)
-    store = IncrementalEdgeStore(str(tmp_path / "es"))
-    for i, b in enumerate(batches):
-        store.process(b, epoch_id=i)
-    before = _edge_key(store.read_edges(spark))
-    store.process(batches[1], epoch_id=1)  # at-least-once replay
-    assert _edge_key(store.read_edges(spark)) == before
-    n = store.compact(spark)
-    assert n == len(before)
-    assert _edge_key(store.read_edges(spark)) == before
-    # deltas keep accumulating after compaction
-    extra = _triples(spark, [("d", 0, "conv:d", "mentions", "ent:x", 1.0)])
-    store.process(extra, epoch_id=3)
-    after = _edge_key(store.read_edges(spark))
-    assert after[("conv:d", "ent:x", "mentions")] == (1.0, 1)
-    assert len(after) == len(before) + 1
-
-
 def test_edge_store_run_id_guard(spark, tmp_path):
     p = str(tmp_path / "es")
     store = IncrementalEdgeStore(p, run_id="runA")
@@ -134,28 +116,6 @@ def test_fact_store_matches_batch_every_epoch(spark, tmp_path):
             _fact_key(fact_support(seen)), f"epoch {i}"
 
 
-def test_fact_store_replay_and_compact(spark, tmp_path):
-    batches = _edge_batches(spark)
-    store = IncrementalFactStore(str(tmp_path / "fs"))
-    for i, b in enumerate(batches):
-        store.process(b, epoch_id=i)
-    before = _fact_key(store.read_facts(spark))
-    store.process(batches[0], epoch_id=0)  # at-least-once replay
-    assert _fact_key(store.read_facts(spark)) == before
-    store.compact(spark)
-    assert _fact_key(store.read_facts(spark)) == before
-    # distinct-conv counting still exact across the compaction boundary:
-    # conv "d" re-asserts a fact conv "a" already supports
-    extra = _triples(spark, [("d", 0, "conv:a", "mentions", "ent:x", 0.1)])
-    store.process(extra, epoch_id=3)
-    after = _fact_key(store.read_facts(spark))
-    want = _fact_key(fact_support(
-        batches[0].unionByName(batches[1]).unionByName(batches[2])
-        .unionByName(extra)))
-    assert after == want
-    assert after[("conv:a", "mentions", "ent:x")][1] == 2  # convs {a, d}
-
-
 def test_fact_store_null_scores_match_batch(spark, tmp_path):
     """avg() skips NULL scores in batch fact_support; the incremental
     mean divides by the non-NULL count (n_score), not the row count —
@@ -174,28 +134,6 @@ def test_fact_store_null_scores_match_batch(spark, tmp_path):
     assert got == _fact_key(fact_support(b))
     assert got[("f:x", "p", "o")] == (2, 1, 0.8, 0.8)  # mean over 1 row
     assert got[("f:y", "p", "o")][3] is None
-
-
-def test_fact_store_reads_legacy_deltas_without_n_score(spark, tmp_path):
-    """Delta dirs written before the n_score column existed must still
-    read: legacy rows backfill n_score = n (the old code's semantics)."""
-    import glob
-    import os
-    batches = _edge_batches(spark)
-    store = IncrementalFactStore(str(tmp_path / "fs"))
-    store.process(batches[0], epoch_id=0)
-    # rewrite epoch 0 WITHOUT n_score, simulating the old writer
-    [d] = glob.glob(os.path.join(str(tmp_path / "fs"), "deltas",
-                                 "epoch=*"))
-    legacy = spark.read.parquet(d).drop("n_score")
-    legacy.toPandas().to_parquet(os.path.join(d, "legacy.parquet"),
-                                 index=False)
-    for f in glob.glob(os.path.join(d, "part-*.parquet")):
-        os.remove(f)
-    store.process(batches[1], epoch_id=1)  # new-schema delta alongside
-    got = _fact_key(store.read_facts(spark))
-    want = _fact_key(fact_support(batches[0].unionByName(batches[1])))
-    assert got == want
 
 
 def test_fact_store_run_id_guard(spark, tmp_path):

@@ -379,6 +379,7 @@ def test_neardup_verified_missing_sig_drops_conservatively(spark, tmp_path):
     """verify=True with a band collision whose historical signature is
     MISSING from the sidecar (crash between the bands and sigs appends)
     must fall back to the conservative drop, not a silent keep."""
+    import glob
     import pandas as pd
     import shutil
     from duke_spark.streaming.neardup_stream import StreamingNearDupFilter
@@ -393,17 +394,43 @@ def test_neardup_verified_missing_sig_drops_conservatively(spark, tmp_path):
     # simulate the partial-sidecar crash: bands persisted, but doc 1's
     # signature row never landed — the sidecar exists yet lacks the
     # colliding doc, so the verify join finds no signature for it
-    sig_dir = state.rstrip("/") + "_sigs"
-    sigs = spark.read.option("mergeSchema", "true").parquet(sig_dir)
-    orphaned = sigs.filter("doc_id <> 1").localCheckpoint()
-    shutil.rmtree(sig_dir)
-    orphaned.write.parquet(sig_dir)
+    [epoch_dir] = glob.glob(os.path.join(state + "_sigs", "epoch=*"))
+    orphaned = spark.read.parquet(epoch_dir).filter("doc_id <> 1") \
+        .localCheckpoint()
+    shutil.rmtree(epoch_dir)
+    orphaned.write.parquet(epoch_dir)
     proc.process(spark.createDataFrame(pd.DataFrame({
         "doc_id": pd.array([10], dtype="int64"),
         "text": ["the quick brown fox jumps over the lazy dog"]})),
         epoch_id=1)
     got = set(spark.read.parquet(out).toPandas()["doc_id"])
     assert 10 not in got, "missing sidecar signature became a false keep"
+
+
+def test_neardup_corrupt_state_raises(spark, tmp_path):
+    """An unreadable band file is an error, never "no history": admitting
+    the batch would let every near-duplicate of the lost bands through."""
+    import glob
+    import pandas as pd
+    from py4j.protocol import Py4JJavaError
+    from duke_spark.streaming.neardup_stream import StreamingNearDupFilter
+
+    out, state = str(tmp_path / "out"), str(tmp_path / "state")
+    proc = StreamingNearDupFilter(out, state, jaccard_threshold=0.7)
+    doc = "the quick brown fox jumps over the lazy dog"
+    proc.process(spark.createDataFrame(pd.DataFrame({
+        "doc_id": pd.array([1], dtype="int64"), "text": [doc]})),
+        epoch_id=0)
+    for f in glob.glob(os.path.join(state, "**", "*.parquet"),
+                       recursive=True):
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Py4JJavaError,
+                       match="FAILED_READ_FILE.*state/epoch="):
+        proc.process(spark.createDataFrame(pd.DataFrame({
+            "doc_id": pd.array([10], dtype="int64"), "text": [doc]})),
+            epoch_id=1)
+    assert list(spark.read.parquet(out).toPandas()["doc_id"]) == [1]
 
 
 def test_stream_dedup_state_bounded_by_watermark(spark, tmp_path):
