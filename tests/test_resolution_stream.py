@@ -1,6 +1,7 @@
 """Incremental entity resolution (streaming.resolution_stream):
 per-epoch parity with batch resolve_entities, real foreachBatch wiring,
-the run-id guard. Replay and compaction: test_epoch_protocol.py."""
+replay idempotence, compaction, the run-id guard. The cross-store
+replay/compaction contract: test_epoch_protocol.py."""
 
 import numpy as np
 import pandas as pd
@@ -58,6 +59,34 @@ def test_epoch_parity_vs_batch(spark, tmp_path):
     assert merged
     assert any(e >= 12 > final[e] for e in merged), \
         "no cross-epoch merge happened — fixture is vacuous"
+
+
+def test_replay_idempotent(spark, tmp_path):
+    batches = _vec_batches()
+    store = IncrementalResolutionStore(str(tmp_path / "rs"), **KW)
+    for i, b in enumerate(batches):
+        store.process(spark.createDataFrame(b), epoch_id=i)
+    before = _map(store.read_map(spark))
+    # at-least-once replay of the last epoch
+    store.process(spark.createDataFrame(batches[-1]),
+                  epoch_id=len(batches) - 1)
+    assert _map(store.read_map(spark)) == before
+
+
+def test_compact_preserves_map(spark, tmp_path):
+    batches = _vec_batches(n_batches=2)
+    store = IncrementalResolutionStore(str(tmp_path / "rs"), **KW)
+    for i, b in enumerate(batches):
+        store.process(spark.createDataFrame(b), epoch_id=i)
+    before = _map(store.read_map(spark))
+    n = store.compact(spark)
+    assert n == sum(len(b) for b in batches)
+    assert _map(store.read_map(spark)) == before
+    # and the store still accepts new epochs after compaction
+    extra = _vec_batches(seed=9, n_batches=1)[0]
+    extra["vec_id"] += 1000
+    store.process(spark.createDataFrame(extra), epoch_id=99)
+    assert len(_map(store.read_map(spark))) == len(before) + len(extra)
 
 
 def test_run_id_guard(spark, tmp_path):
