@@ -2,13 +2,14 @@
 
 transcripts ──mapInPandas──► linked mentions ──► triples (fused one-pass)
                      │                               │
-                     ├─► canonicalization (tiny shuffle + driver fold)
+                     ├─► canonicalization (string/count shuffle + worker fold)
                      └─► vertices/edges (hash aggregates, broadcast joins)
 
-Physical profile: one narrow UDF stage over the scan + two small shuffles
-(entity/mention counts; edge aggregation) + a ≤788-row driver fold — the
-shape SURVEY §4 calls for. Skew: the UDF stage is per-split (hot
-conversations don't matter there); grouped stages lean on AQE skew
+Physical profile: one narrow UDF stage over the scan, small shuffles
+((entity, mention) counts and their per-entity lists; edge aggregation),
+and a worker-side fold that sends only ≤C (entity, type) rows to the
+driver — the shape SURVEY §4 calls for. Skew: the UDF stage is per-split
+(hot conversations don't matter there); grouped stages lean on AQE skew
 handling, enabled in config.get_spark.
 """
 

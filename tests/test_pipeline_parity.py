@@ -166,8 +166,7 @@ def test_describe_dataset_matches_oracle(spark, tiny_transcripts, ctx_bc,
 
 def test_conversation_scores_ignore_null_mentions(spark, ctx_bc):
     """Null mentions must be dropped, not mis-attributed: pd.factorize
-    codes NaN as -1, and before the dropna guard the pair decode
-    (puniq % len(uniq)) silently credited null rows' weight to the LAST
+    codes NaN as -1, which an index decode would credit to the LAST
     distinct mention. Scores with injected nulls must equal scores
     without them, and n_mentions must not count the null rows."""
     from duke_spark.operators.canonical import conversation_class_scores
