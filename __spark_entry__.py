@@ -1032,8 +1032,9 @@ def kg_typed_pattern(spark, sf_dir):
     vertices = build_vertices(
         mentions, canonical_types_df(spark, mentions, ctx_bc))
     # both the vertex side and the triple side branch off the SAME
-    # persisted mentions — the linking matmul runs once, not twice
-    # (triples_from_mentions == extract_triples output, tested)
+    # persisted mentions — the linking matmul runs once, not twice;
+    # triples_from_mentions runs extract_triples' own assembler
+    # (triples_batch) over them, so the triples are the same (tested)
     triples = (triples_from_mentions(mentions)
                .select("subj", "pred", "obj"))
     bindings = match_pattern(triples, [("?conv", "mentions", "?e")])

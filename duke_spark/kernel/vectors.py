@@ -71,12 +71,14 @@ def score_groups(embedding: VocabEmbedding, groups: Sequence[Sequence[str]],
                  class_matrix: np.ndarray) -> np.ndarray:
     """Cosine of every (OOV-filtered) word group against every class row,
     float64 U×C: ``(Σ v_w)·c / ‖Σ v_w‖`` with the sum in float64 over the
-    float32 word vectors, so no score depends on batching; a zero-norm
-    group scores 0 (as ``unit_norm_rows`` leaves zero rows). Of the two
-    associations, the one with fewer operations runs: U groups of ≤k
-    words over W distinct words cost D·W·(C+W) products, then k·U·(C+k)
-    gathered adds through the word table, or k·U·D gathered adds, then
-    D·U·C products direct."""
+    float32 word vectors; a zero-norm group scores 0 (as
+    ``unit_norm_rows`` leaves zero rows). Of the two associations, the
+    one with fewer operations runs: U groups of ≤k words over W distinct
+    words cost D·W·(C+W) products, then k·U·(C+k) gathered adds through
+    the word table, or k·U·D gathered adds, then D·U·C products direct.
+    The choice depends on the batch's U and W, so a score can move with
+    batching by rounding only: the two associations agree to 1e-12 with
+    the same argmax (``test_score_groups_associations_agree``)."""
     n_cls, dim = class_matrix.shape
     if not groups:
         return np.zeros((0, n_cls))
@@ -128,15 +130,6 @@ def top1(scores: np.ndarray) -> np.ndarray:
     """Winning class index per row; ties → first occurrence, matching
     ``np.argmax`` at ``Duke/dataset_descriptor.py:84``."""
     return np.argmax(scores, axis=1)
-
-
-def topk_desc(scores: np.ndarray, k: int) -> List[List[int]]:
-    """Top-k class indices per row, score desc, ties by ascending index —
-    the sort semantics of ``Duke/dataset_descriptor.py:91-97``."""
-    k = min(k, scores.shape[1])
-    # argsort on (-score, index): stable mergesort preserves index order.
-    order = np.argsort(-scores, axis=1, kind="stable")
-    return order[:, :k].tolist()
 
 
 def chunk_in_vocab_runs(tokens: Sequence[str], vocab: Dict[str, int],

@@ -1,13 +1,12 @@
-"""Triple extraction (SURVEY B4) — two equivalent implementations.
+"""Triple extraction (SURVEY B4): one assembler, ``triples_batch``.
 
-``extract_triples`` (hot path): transcripts → triples in ONE narrow
-mapInPandas pass — mention linking and triple assembly fused, zero
-shuffles, scan read once. This is what the bench and the KG job run.
+``extract_triples``: transcripts → triples in ONE narrow mapInPandas
+pass — mention linking and triple assembly fused, zero shuffles, scan
+read once. This is what the bench, the checkpoint and streaming run.
 
-``triples_from_mentions`` (declarative path): when linked mentions are
-already materialized (e.g. checkpointed), derive the same triples with
-window functions — Catalyst/AQE owns the plan. Both are tested equal to
-the NumPy oracle.
+``triples_from_mentions``: the same ``triples_batch`` over an already
+linked mention table (``build_kg`` persists mentions for its other
+consumers), again one narrow mapInPandas with no shuffle.
 
 Triple spec is normative in ``duke_spark/kernel/oracle.py``.
 """
@@ -18,11 +17,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from duke_spark.operators.linking import LinkContext, link_batch
+from duke_spark.operators.mentions import map_linked
 
 TRIPLE_SCHEMA = T.StructType([
     T.StructField("subj", T.StringType()),
@@ -37,8 +36,13 @@ TRIPLE_COLUMNS = [f.name for f in TRIPLE_SCHEMA.fields]
 
 
 def triples_batch(mentions: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized triple assembly from a linked-mention batch (rows sorted
-    by input row, mention_id — as link_batch emits them)."""
+    """Vectorized triple assembly from linked-mention rows.
+
+    Precondition: each turn's mentions are contiguous and in
+    ``mention_id`` order, as ``link_batch`` emits them. ``mention_id``
+    restarts at 0 on every input row, so two adjacent rows are in the
+    same turn exactly when the id steps by one — which holds whatever
+    the (possibly NULL) ``conv_id``/``turn_idx`` keys are."""
     if len(mentions) == 0:
         return pd.DataFrame(columns=TRIPLE_COLUMNS)
     m = mentions
@@ -50,9 +54,7 @@ def triples_batch(mentions: pd.DataFrame) -> pd.DataFrame:
         "score": m["entity_score"],
     })
     # (b) adjacent-mention co-occurrence within a turn
-    same_turn = (m["conv_id"].shift(-1) == m["conv_id"]) & \
-                (m["turn_idx"].shift(-1) == m["turn_idx"]) & \
-                (m["mention_id"].shift(-1) == m["mention_id"] + 1)
+    same_turn = m["mention_id"].shift(-1) == m["mention_id"] + 1
     nxt_ent = ent.shift(-1)
     nxt_score = m["entity_score"].shift(-1)
     t2 = pd.DataFrame({
@@ -80,54 +82,37 @@ def triples_batch(mentions: pd.DataFrame) -> pd.DataFrame:
 
 def extract_triples(transcripts: DataFrame, ctx_bc) -> DataFrame:
     """One-pass transcripts → triples (B3+B4+B5 fused, zero shuffle)."""
-    pruned = (transcripts
-              .select("conv_id", "turn_idx", "role", "text", "tool")
-              .filter(F.col("text").isNotNull()))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx: LinkContext = ctx_bc.value
-        for pdf in batches:
-            mentions = link_batch(pdf, ctx)
-            out = triples_batch(mentions)
-            if len(out):
-                yield out
-
-    return pruned.mapInPandas(run, schema=TRIPLE_SCHEMA)
+    return map_linked(transcripts, ctx_bc, triples_batch, TRIPLE_SCHEMA)
 
 
 def triples_from_mentions(mentions: DataFrame) -> DataFrame:
-    """Declarative equivalent over a materialized mention table.
+    """Triples from a linked mention table, one narrow mapInPandas.
 
-    One shuffle (window over conv_id); AQE skew handling applies. Window
-    partitions by conv_id only (not conv×turn) to keep key cardinality
-    sane; the lead() is guarded by turn equality.
+    Precondition: each turn's mentions are contiguous and in
+    ``mention_id`` order within one partition. ``linked_mentions`` output
+    always satisfies it, also when an evicted cache is recomputed from
+    lineage. An Arrow batch can end inside a turn, so each batch's last
+    turn (its rows from the last ``mention_id == 0`` on) is held back and
+    prepended to the next batch.
     """
-    m = mentions
-    ent = F.concat(F.lit("ent:"), F.col("entity"))
-    t1 = m.select(
-        F.concat(F.lit("conv:"), F.col("conv_id")).alias("subj"),
-        F.lit("mentions").alias("pred"), ent.alias("obj"),
-        "conv_id", "turn_idx", F.col("entity_score").alias("score"))
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        held = None
+        for pdf in batches:
+            if held is not None:
+                pdf = pd.concat([held, pdf], ignore_index=True)
+            starts = np.flatnonzero(pdf["mention_id"].to_numpy() == 0)
+            cut = starts[-1] if len(starts) else 0
+            held = pdf.iloc[cut:]
+            out = triples_batch(pdf.iloc[:cut])
+            if len(out):
+                yield out
+        if held is not None and len(held):
+            yield triples_batch(held)
 
-    w = Window.partitionBy("conv_id").orderBy("turn_idx", "mention_id")
-    nxt = (m.withColumn("nxt_turn", F.lead("turn_idx").over(w))
-             .withColumn("nxt_mid", F.lead("mention_id").over(w))
-             .withColumn("nxt_entity", F.lead("entity").over(w))
-             .withColumn("nxt_score", F.lead("entity_score").over(w)))
-    t2 = (nxt.filter((F.col("nxt_turn") == F.col("turn_idx")) &
-                     (F.col("nxt_mid") == F.col("mention_id") + 1))
-          .select(ent.alias("subj"), F.lit("co_mentioned").alias("pred"),
-                  F.concat(F.lit("ent:"), F.col("nxt_entity")).alias("obj"),
-                  "conv_id", "turn_idx",
-                  F.least("entity_score", "nxt_score").alias("score")))
-
-    t3 = (m.filter((F.col("mention_id") == 0) & F.col("tool").isNotNull())
-          .select(ent.alias("subj"), F.lit("used_tool").alias("pred"),
-                  F.concat(F.lit("tool:"), F.col("tool")).alias("obj"),
-                  "conv_id", "turn_idx",
-                  F.col("entity_score").alias("score")))
-
-    return t1.unionByName(t2).unionByName(t3)
+    return (mentions
+            .select("conv_id", "turn_idx", "tool", "mention_id", "entity",
+                    "entity_score")
+            .mapInPandas(run, schema=TRIPLE_SCHEMA))
 
 
 def fact_support(triples: DataFrame) -> DataFrame:

@@ -1,21 +1,20 @@
 """End-to-end KG construction pipeline (SURVEY §7 step 2-4 spine).
 
-transcripts ──mapInPandas──► linked mentions ──► triples (fused one-pass)
-                     │                               │
-                     ├─► canonicalization (string/count shuffle + worker fold)
-                     └─► vertices/edges (hash aggregates, broadcast joins)
+transcripts ──mapInPandas──► linked mentions (persisted)
+                                   ├─► triples (mapInPandas: triples_batch)
+                                   ├─► canonicalization (count shuffle, fold)
+                                   └─► vertices/edges (aggregates, joins)
 
-Physical profile: one narrow UDF stage over the scan, small shuffles
+Physical profile: one narrow UDF stage over the scan, whose persisted
+output feeds a second narrow UDF stage for triples; small shuffles
 ((entity, mention) counts and their per-entity lists; edge aggregation),
 and a worker-side fold that sends only ≤C (entity, type) rows to the
-driver — the shape SURVEY §4 calls for. Skew: the UDF stage is per-split
-(hot conversations don't matter there); grouped stages lean on AQE skew
-handling, enabled in config.get_spark.
+driver — the shape SURVEY §4 calls for. Skew: the UDF stages are
+per-split (hot conversations don't matter there); grouped stages lean on
+AQE skew handling, enabled in config.get_spark.
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -23,8 +22,7 @@ from duke_spark.operators.canonical import canonical_types_df
 from duke_spark.operators.graph import build_edges, build_vertices
 from duke_spark.operators.linking import LinkContext
 from duke_spark.operators.mentions import linked_mentions
-from duke_spark.operators.triples import (extract_triples,
-                                          triples_from_mentions)
+from duke_spark.operators.triples import triples_from_mentions
 
 
 def make_context(spark: SparkSession, vocab=None, matrix=None,
@@ -41,20 +39,15 @@ def make_context(spark: SparkSession, vocab=None, matrix=None,
     return spark.sparkContext.broadcast(ctx)
 
 
-def build_kg(spark: SparkSession, transcripts: DataFrame, ctx_bc,
-             persist_mentions: bool = True) -> dict:
+def build_kg(spark: SparkSession, transcripts: DataFrame, ctx_bc) -> dict:
     """Run the full pipeline; returns dict of DataFrames (lazy where
-    possible). Mentions are persisted because three consumers share them
-    (the reference's embed-once-reuse pattern, ``Duke/evaluate.py:78-86``).
+    possible). Mentions are linked once and persisted because three
+    consumers share them (the reference's embed-once-reuse pattern,
+    ``Duke/evaluate.py:78-86``); the persisted rows only save time — a
+    recomputed partition yields the same triples.
     """
-    mentions = linked_mentions(transcripts, ctx_bc)
-    if persist_mentions:
-        mentions = mentions.persist()
-        # reuse the persisted (already embedded+linked) mentions — one
-        # window shuffle beats re-scanning + re-embedding the input
-        triples = triples_from_mentions(mentions)
-    else:
-        triples = extract_triples(transcripts, ctx_bc)
+    mentions = linked_mentions(transcripts, ctx_bc).persist()
+    triples = triples_from_mentions(mentions)
     canonical = canonical_types_df(spark, mentions, ctx_bc)
     vertices = build_vertices(mentions, canonical)
     edges = build_edges(triples)

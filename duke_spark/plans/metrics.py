@@ -1,12 +1,12 @@
 """Per-stage metrics (SURVEY B10): named records of stage wall time and
-whatever counts the caller already has, serialized as one JSON object.
+whatever counts the caller already has; ``harvest`` returns them for the
+caller to serialize as one JSON object.
 The reference only has wall-clock printfs (``Duke/utils.py:52-57``,
 ``Duke/DukeRestListener.py:64``).
 """
 
 from __future__ import annotations
 
-import json
 import time
 from typing import Dict
 
@@ -33,6 +33,3 @@ class StageMetrics:
                 metrics.record(stage, wall_seconds=time.time() - self.t0)
 
         return _Timer()
-
-    def to_json(self) -> str:
-        return json.dumps(self.harvest(), sort_keys=True)

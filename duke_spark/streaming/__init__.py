@@ -1,6 +1,6 @@
 from duke_spark.streaming.transcripts_stream import (  # noqa: F401
-    run_stream_to_triples, stream_transcripts, stream_triples,
-    turn_rate_windows, write_triples_stream)
+    run_stream_to_triples, stream_transcripts, turn_rate_windows,
+    write_triples_stream)
 from duke_spark.streaming.stateful import (  # noqa: F401
     running_conversation_topics)
 from duke_spark.streaming.dedup_stream import (  # noqa: F401

@@ -49,7 +49,7 @@ OUT_SCHEMA = T.StructType([
 def running_conversation_topics(mentions: DataFrame, ctx_bc,
                                 idle_timeout_ms: int = 0) -> DataFrame:
     """mentions: streaming DF with (conv_id, mention) columns (from
-    ``stream_triples``-style linking). Emits one row per conversation per
+    ``linked_mentions`` over a stream). Emits one row per conversation per
     micro-batch with its current topic. ``idle_timeout_ms`` > 0 evicts
     state for conversations idle that long (processing-time timeout)."""
 

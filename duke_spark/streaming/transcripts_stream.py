@@ -9,10 +9,10 @@ engine's forward path for continuously-arriving transcript partitions:
     parquet/Iceberg layout the batch source reads (schema is the
     input_hint schema, supplied explicitly — streaming sources cannot
     infer);
-  * ``stream_triples`` — the SAME fused ``mapInPandas`` kernel as batch
-    (``duke_spark.operators.triples.extract_triples``); because the stage
-    is stateless/narrow it is trivially streamable, and batch/stream
-    parity is exact (tested);
+  * triples come from the batch kernel itself,
+    ``duke_spark.operators.triples.extract_triples``: the fused stage is
+    stateless and narrow, so it runs unchanged on a stream, and
+    batch/stream parity is exact (tested);
   * ``write_triples_stream`` — parquet sink + Spark's own checkpoint dir;
     with ``Trigger.AvailableNow`` this is an incremental batch job that
     resumes from the source offset log, complementing the manifest-based
@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from duke_spark.operators.triples import extract_triples
+
 TRANSCRIPT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
     T.StructField("turn_idx", T.IntegerType()),
@@ -52,12 +54,6 @@ def stream_transcripts(spark: SparkSession, input_dir: str,
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(input_dir)
-
-
-def stream_triples(transcripts: DataFrame, ctx_bc) -> DataFrame:
-    """Stateless narrow kernel — identical code path to batch."""
-    from duke_spark.operators.triples import extract_triples
-    return extract_triples(transcripts, ctx_bc)
 
 
 def write_triples_stream(triples: DataFrame, out_dir: str,
@@ -80,7 +76,7 @@ def run_stream_to_triples(spark: SparkSession, input_dir: str, out_dir: str,
                           timeout_sec: int = 300) -> None:
     """One availableNow cycle: ingest all new files → append triples."""
     q = write_triples_stream(
-        stream_triples(stream_transcripts(spark, input_dir), ctx_bc),
+        extract_triples(stream_transcripts(spark, input_dir), ctx_bc),
         out_dir, checkpoint_dir)
     q.awaitTermination(timeout_sec)
     if q.isActive:

@@ -151,8 +151,7 @@ def test_edge_store_foreachbatch_e2e(spark, ctx_bc, tmp_path):
     state equals the batch KG edges over both files."""
     from duke_spark.fixtures.transcripts import generate_transcripts
     from duke_spark.operators.triples import extract_triples
-    from duke_spark.streaming.transcripts_stream import (stream_transcripts,
-                                                         stream_triples)
+    from duke_spark.streaming.transcripts_stream import stream_transcripts
 
     in_dir, ck = str(tmp_path / "in"), str(tmp_path / "ck")
     store = IncrementalEdgeStore(str(tmp_path / "es"))
@@ -163,7 +162,7 @@ def test_edge_store_foreachbatch_e2e(spark, ctx_bc, tmp_path):
     os.makedirs(in_dir)
 
     def _cycle():
-        q = (stream_triples(stream_transcripts(spark, in_dir), ctx_bc)
+        q = (extract_triples(stream_transcripts(spark, in_dir), ctx_bc)
              .writeStream.foreachBatch(store.process)
              .option("checkpointLocation", ck)
              .trigger(availableNow=True).start())

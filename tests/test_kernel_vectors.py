@@ -1,5 +1,5 @@
 """Pin vector kernels: OOV all-or-nothing, embed gather+mean+unit-norm,
-matmul scoring, top-k ordering, mention chunking (SURVEY hard part #2)."""
+matmul scoring, top-1 ties, mention chunking (SURVEY hard part #2)."""
 
 import numpy as np
 import pytest
@@ -7,7 +7,7 @@ import pytest
 from duke_spark.fixtures.embedding import build_embedding
 from duke_spark.kernel.vectors import (VocabEmbedding, chunk_in_vocab_runs,
                                        score_against_classes, top1,
-                                       topk_desc, unit_norm_rows)
+                                       unit_norm_rows)
 
 
 @pytest.fixture(scope="module")
@@ -56,11 +56,6 @@ def test_score_is_cosine(emb):
 def test_top1_tie_first_wins():
     s = np.array([[0.5, 0.5, 0.1]])
     assert top1(s)[0] == 0
-
-
-def test_topk_desc_tie_by_index():
-    s = np.array([[0.2, 0.9, 0.9, 0.1]])
-    assert topk_desc(s, 3) == [[1, 2, 0]]
 
 
 def test_chunk_runs(emb):

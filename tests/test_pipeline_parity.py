@@ -49,14 +49,102 @@ def test_triples_one_pass_prf(spark, tiny_transcripts, tiny_transcripts_pdf,
 
 def test_triples_declarative_equals_one_pass(spark, tiny_transcripts,
                                              ctx_bc):
-    one = extract_triples(tiny_transcripts, ctx_bc)
-    two = triples_from_mentions(linked_mentions(tiny_transcripts, ctx_bc))
+    """Triples from persisted mentions equal the fused pass exactly when
+    both link in the same Arrow batches — also when small batches cut
+    turns, whose held-back tail must join the next batch."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf)
+    key = ["subj", "pred", "obj", "conv_id", "turn_idx", "score"]
+    try:
+        for rows in (before, 7, 3, 1):
+            spark.conf.set(conf, str(rows))
+            mentions = linked_mentions(tiny_transcripts, ctx_bc).persist()
+            two = triples_from_mentions(mentions).toPandas()
+            mentions.unpersist()
+            one = extract_triples(tiny_transcripts, ctx_bc).toPandas()
+            a = one.sort_values(key).reset_index(drop=True)
+            b = two.sort_values(key).reset_index(drop=True)
+            pd.testing.assert_frame_equal(a, b, obj=f"batch rows {rows}")
+            assert (b["pred"] == "co_mentioned").any()
+    finally:
+        spark.conf.set(conf, before)
+
+
+def test_triples_from_mentions_plan(spark, tiny_transcripts, ctx_bc):
+    """Over persisted mentions the triple stage is one narrow Python
+    stage: no Window, no Exchange, exactly one MapInPandas."""
+    from test_canonical import _plan_nodes
+
+    mentions = linked_mentions(tiny_transcripts, ctx_bc).persist()
+    try:
+        df = triples_from_mentions(mentions)
+        df.collect()
+        names = [n for n, _, _ in
+                 _plan_nodes(df._jdf.queryExecution().executedPlan())]
+    finally:
+        mentions.unpersist()
+    assert not [n for n in names if "Window" in n or "Exchange" in n], names
+    assert names.count("MapInPandas") == 1, names
+
+
+def test_null_conv_id_triples_match_oracle(spark, ctx_bc, oracle_ctx,
+                                           tmp_path):
+    """Rows with a NULL ``conv_id`` — two of them in the same turn, one
+    with a tool — give the oracle's triples on every path: the fused
+    pass, persisted mentions, and the checkpoint. The one difference is
+    named, not hidden: the oracle writes a NULL conversation's
+    ``mentions`` subject as ``"conv:None"``, Spark's string concat gives
+    NULL."""
+    from duke_spark.fixtures.transcripts import spark_transcripts
+    from duke_spark.plans.checkpoint import TripleCheckpoint
+
+    pdf = pd.DataFrame([
+        (None, 0, "user", "agent plays baseball with the team", None),
+        (None, 0, "tool", "artist wrote song on guitar", "search"),
+        (None, 1, "assistant", "coach and player team", None),
+        ("c1", 0, "user", "baseball player wrote song", "browser"),
+        ("c1", 1, "assistant", "river water", None),
+    ], columns=["conv_id", "turn_idx", "role", "text", "tool"])
+    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
+    pdf["ts"] = pd.Timestamp("2026-01-01").as_unit("us")
+    df = spark_transcripts(spark, pdf).repartition(2)
+
+    exp = oracle_triples(oracle_ctx, pdf)
+    null_subj = (exp["pred"] == "mentions") & exp["conv_id"].isna()
+    assert null_subj.any() and (exp.loc[null_subj, "subj"]
+                                == "conv:None").all()
+    assert ((exp["pred"] == "co_mentioned") & exp["conv_id"].isna()).any()
+    assert ((exp["pred"] == "used_tool") & exp["conv_id"].isna()).any()
+
+    mentions = linked_mentions(df, ctx_bc).persist()
+    ck = TripleCheckpoint(str(tmp_path / "ck"), num_parts=4)
+    ck.run(spark, df, ctx_bc)
+    try:
+        paths = {"extract_triples": extract_triples(df, ctx_bc).toPandas(),
+                 "triples_from_mentions":
+                     triples_from_mentions(mentions).toPandas(),
+                 "checkpoint": ck.read_triples(spark).toPandas()}
+    finally:
+        mentions.unpersist()
+
     key = ["subj", "pred", "obj", "conv_id", "turn_idx"]
-    a = one.toPandas().sort_values(key + ["score"]).reset_index(drop=True)
-    b = two.toPandas().sort_values(key + ["score"]).reset_index(drop=True)
-    assert len(a) == len(b)
-    pd.testing.assert_frame_equal(a[key], b[key])
-    np.testing.assert_allclose(a["score"], b["score"], atol=1e-6)
+
+    def comparable(t, null_subj):
+        t = t[key + ["score"]].copy()
+        t.loc[null_subj, "subj"] = "<null conv>"
+        t["conv_id"] = t["conv_id"].fillna("<null>")
+        return t.sort_values(key + ["score"]).reset_index(drop=True)
+
+    want = comparable(exp, null_subj)
+    for name, got in paths.items():
+        got_null = (got["pred"] == "mentions") & got["conv_id"].isna()
+        assert got.loc[got_null, "subj"].isna().all(), name
+        got = comparable(got, got_null)
+        assert len(got) == len(want), name
+        pd.testing.assert_frame_equal(got[key], want[key],
+                                      check_dtype=False, obj=name)
+        np.testing.assert_allclose(got["score"], want["score"], rtol=0,
+                                   atol=1e-12, err_msg=name)
 
 
 def test_canonical_types_match_oracle(spark, tiny_transcripts, ctx_bc,
