@@ -540,8 +540,8 @@ def embedding_near_dups_docs(spark, sf_dir):
 def entity_resolution_docs(spark, sf_dir):
     """Embedding-based entity resolution (C48): total merge map over
     the embeddings table — LSH-bucketed cosine pairs (≥0.3, the proven
-    near-dups setting) → connected components → canonical = component
-    min, identity for isolates. Oracle: the pair CTE from
+    near-dups setting) → per-bucket min-label closure → canonical =
+    component min, identity for isolates. Oracle: the pair CTE from
     embedding_near_dups_docs feeding a RECURSIVE-CTE closure, left
     joined back onto every vec_id."""
     from duke_spark.operators.entity_resolution import resolve_entities

@@ -14,9 +14,12 @@ operators this repo already trusts:
   1. candidate pairs = ``similarity.cosine_near_dup_pairs`` (cosine ≥
      threshold inside coordinate-sign LSH buckets, hot buckets split
      into ≤max_bucket block-pair tasks — banded, never all-pairs, never
-     one quadratic straggler, oracle-proven);
-  2. transitive closure = ``dedup.connected_components`` (iterative
-     min-label, O(diameter) rounds);
+     one quadratic straggler, oracle-proven), each tagged with its
+     bucket; ids may be the entity strings themselves;
+  2. transitive closure per LSH bucket = ``min_label_components`` in
+     one ``groupBy(bucket)`` pandas UDF: no pair crosses its bucket, so
+     no component does either, and the whole closure is one shuffle —
+     a fixed number of Spark jobs whatever the component diameter;
   3. canonical id = component minimum; entities with no near-dup map
      to themselves, so the returned map is TOTAL over the input.
 
@@ -30,11 +33,70 @@ compose with ``fact_support`` or ``distinct()`` downstream as needed.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from duke_spark.operators.dedup import connected_components
-from duke_spark.operators.similarity import cosine_near_dup_pairs
+from duke_spark.operators.similarity import _near_dup_pairs_by_bucket
+
+
+def min_label_components(a: np.ndarray, b: np.ndarray) -> tuple:
+    """(nodes, comp) for the undirected graph with edges (a[i], b[i]):
+    ``nodes`` the sorted distinct endpoints, ``comp`` each node's
+    component minimum. Min-label propagation over node ranks
+    (``np.minimum.at`` along both edge directions) plus pointer jumping
+    (label ← label[label]) until no label moves. A label only ever
+    points at a smaller-or-equal node of the same component, and the
+    component's minimum keeps its own, so the fixed point is the
+    minimum. Ids may be any sortable dtype, ``object`` str included:
+    ``np.unique`` then sorts with Python's ``str`` order — code points,
+    the order of Spark's string ``min``."""
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = inv[:len(a)], inv[len(a):]
+    lab = np.arange(len(nodes))
+    while True:
+        new = lab.copy()
+        np.minimum.at(new, ia, new[ib])
+        np.minimum.at(new, ib, new[ia])
+        new = new[new]
+        if np.array_equal(new, lab):
+            return nodes, nodes[lab]
+        lab = new
+
+
+def _components(vectors: DataFrame, threshold: float, num_planes: int,
+                id_col: str, vec_col: str, max_bucket: int,
+                type_col: str | None) -> DataFrame:
+    """(node, comp) for every id with at least one (guarded) near-dup
+    pair; comp = its component's minimum id."""
+    pairs = _near_dup_pairs_by_bucket(vectors, threshold, num_planes,
+                                      vec_col, id_col, max_bucket, None)
+    if type_col is not None:
+        t = vectors.select(F.col(id_col), F.col(type_col))
+        pairs = (pairs
+                 .join(t.select(F.col(id_col).alias("a"),
+                                F.col(type_col).alias("_ta")), "a")
+                 .join(t.select(F.col(id_col).alias("b"),
+                                F.col(type_col).alias("_tb")), "b")
+                 .filter(F.col("_ta") == F.col("_tb")))
+    id_type = vectors.schema[id_col].dataType
+    schema = T.StructType([T.StructField("node", id_type),
+                           T.StructField("comp", id_type)])
+
+    def close(pdf):
+        nodes, comp = min_label_components(pdf["a"].to_numpy(),
+                                           pdf["b"].to_numpy())
+        return pd.DataFrame({"node": nodes, "comp": comp})
+
+    # each group holds one bucket's pairs, never embeddings; partitions
+    # beyond the 2^num_planes buckets would be empty, and beyond one
+    # wave of cores each Python task pays its worker round trip again
+    n = min(1 << max(num_planes, 0),
+            vectors.sparkSession.sparkContext.defaultParallelism)
+    return (pairs.select("bucket", "a", "b").repartition(n, "bucket")
+            .groupBy("bucket").applyInPandas(close, schema=schema))
 
 
 def resolve_entities(vectors: DataFrame, threshold: float = 0.95,
@@ -44,8 +106,9 @@ def resolve_entities(vectors: DataFrame, threshold: float = 0.95,
                      type_col: str | None = None) -> DataFrame:
     """Total merge map (entity, canonical) over ``vectors``; canonical
     is the minimum entity id of the cosine-similarity component, the
-    entity's own id when it has no neighbor ≥ threshold. ``max_bucket``
-    caps the per-task pair kernel (block-pair splitting inside hot LSH
+    entity's own id when it has no neighbor ≥ threshold. Ids are
+    unique (one vector per id), integer or string. ``max_bucket`` caps
+    the per-task pair kernel (block-pair splitting inside hot LSH
     buckets) without changing the pair set — the 100 TB guard.
 
     ``type_col``: optional agreement guard — candidate pairs whose
@@ -55,19 +118,8 @@ def resolve_entities(vectors: DataFrame, threshold: float = 0.95,
     forms merge. NULL-typed entities never merge (null-rejecting
     equality, deliberately conservative: no evidence ⇒ no merge). The
     joins are vertex-cardinality against the candidate pairs."""
-    pairs = cosine_near_dup_pairs(vectors, threshold=threshold,
-                                  num_planes=num_planes,
-                                  vec_col=vec_col, id_col=id_col,
-                                  max_bucket=max_bucket)
-    if type_col is not None:
-        t = vectors.select(F.col(id_col), F.col(type_col))
-        pairs = (pairs
-                 .join(t.select(F.col(id_col).alias("a"),
-                                F.col(type_col).alias("_ta")), "a")
-                 .join(t.select(F.col(id_col).alias("b"),
-                                F.col(type_col).alias("_tb")), "b")
-                 .filter(F.col("_ta") == F.col("_tb")))
-    comp = connected_components(pairs.select("a", "b"))
+    comp = _components(vectors, threshold, num_planes, id_col, vec_col,
+                       max_bucket, type_col)
     return (vectors.select(F.col(id_col).alias("entity"))
             .join(comp.withColumnRenamed("node", "entity"),
                   "entity", "left")
@@ -102,12 +154,17 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
     distinct ``prefix``-terms from subj/obj, embed each label with the
     broadcast context (one mapInPandas batch gather — the same matrix
     the linker scored against, so "similar" means similar in the
-    linking space), index them densely (ids must be integral for the
-    pair kernel), run ``resolve_entities``, translate the id map back
-    to term strings, and ``apply_entity_merge``. Returns
+    linking space) keyed by the term string itself, run the pair kernel
+    and the per-bucket closure of ``resolve_entities`` on those string
+    ids, keep the merged rows (entity ≠ canonical), and
+    ``apply_entity_merge``. The canonical term is the component's
+    minimum string in Spark's (code-point) order. Returns
     (merge_map_df with (entity, canonical) STRING terms, rewritten
-    triples). Labels missing from the embedding vocabulary map to
-    themselves (no vector ⇒ no merge evidence).
+    triples); the map holds only merged terms and is persisted and
+    counted. Labels missing from the embedding vocabulary map to
+    themselves (no vector ⇒ no merge evidence). The Spark job count is
+    fixed: it does not grow with the component diameter or the number
+    of merges.
 
     ``type_guard``: corroborate cosine with canonicalization (B6,
     reference ``Duke/dataset_descriptor.py:65-80``): each label's class
@@ -116,11 +173,6 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
     high-cosine pair of a person-name and a place-name stays split.
     Computed in the same embed pass (one extra matmul against the class
     matrix per batch; vertex-cardinality)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from duke_spark.operators.kg_train import dense_entity_index
-
     # one scan, not a self-union: explode([subj, obj]) enumerates both
     # positions from a single pass over the fact table (the distinct
     # output is vertex-sized either way, but the union form scanned the
@@ -128,10 +180,9 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
     terms = (triples
              .select(F.explode(F.array("subj", "obj")).alias("t"))
              .filter(F.col("t").startswith(prefix)).distinct())
-    idx = dense_entity_index(terms, col="t")  # (entity=str, idx)
 
     fields = [
-        T.StructField("vec_id", T.LongType()),
+        T.StructField("vec_id", T.StringType()),
         T.StructField("embedding", T.ArrayType(T.DoubleType())),
     ]
     if type_guard:
@@ -150,7 +201,7 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
             # multi-word labels split into word groups, exactly how the
             # linker embeds class names (linking.py c.split(" ")) — a
             # whole multi-word label is never itself a vocab token
-            groups = [lbl[plen:].split(" ") for lbl in pdf["entity"]]
+            groups = [lbl[plen:].split(" ") for lbl in pdf["t"]]
             keep = pd.Series([emb.in_vocab(g) for g in groups],
                              index=pdf.index)
             if not keep.any():
@@ -158,7 +209,7 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
             sub = pdf[keep]
             kept = [g for g, k in zip(groups, keep) if k]
             vecs = emb.embed_groups(kept)
-            out = {"vec_id": sub["idx"].to_numpy(),
+            out = {"vec_id": sub["t"].to_numpy(),
                    "embedding": [[float(x) for x in v] for v in vecs]}
             if type_guard:
                 # single-occurrence canonicalization of the surface
@@ -169,37 +220,35 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
                     scores, ctx.fold_levels).argmax(axis=1)]
             yield pd.DataFrame(out)
 
-    # persist: the embed pass (the pipeline's dominant matmul, plus the
-    # tree fold under type_guard) fans out to several plan branches —
-    # the pair kernel scans it twice (bucket counts + rows), the type
-    # guard twice more (a/b-side joins), and the total-map tail once;
-    # uncached it would re-embed every label ~5x. Unpersisted below
-    # once str_map is materialized.
-    vectors = idx.mapInPandas(embed, schema=vec_schema).persist()
-    id_map = resolve_entities(vectors, threshold=threshold,
-                              num_planes=num_planes,
-                              max_bucket=max_bucket,
-                              type_col="ctype" if type_guard else None)
-    # ids → term strings (two joins against the vertex-sized index)
-    a = idx.select(F.col("idx").alias("entity"),
-                   F.col("entity").alias("ent_str"))
-    b = idx.select(F.col("idx").alias("canonical"),
-                   F.col("entity").alias("canon_str"))
-    str_map = (id_map.join(a, "entity").join(b, "canonical")
-               .filter(F.col("ent_str") != F.col("canon_str"))
-               .select(F.col("ent_str").alias("entity"),
-                       F.col("canon_str").alias("canonical"))
-               .persist())
+    # persist and materialize: the embed pass (the pipeline's dominant
+    # matmul, plus the tree fold under type_guard) fans out to several
+    # plan branches — the pair kernel scans it twice (bucket counts +
+    # rows) and the type guard twice more (a/b-side joins); uncached it
+    # would re-embed every label ~4x, and counting first keeps those
+    # concurrent scans from each computing it. Unpersisted below once
+    # the map is materialized. One embed task per core: the stage is
+    # vertex-sized, and every extra wave of Python tasks pays the
+    # per-task worker round trip again.
+    cores = triples.sparkSession.sparkContext.defaultParallelism
+    vectors = (terms.coalesce(cores)
+               .mapInPandas(embed, schema=vec_schema).persist())
+    vectors.count()
+    merges = (_components(vectors, threshold, num_planes, "vec_id",
+                          "embedding", max_bucket,
+                          "ctype" if type_guard else None)
+              .filter(F.col("node") != F.col("comp"))
+              .select(F.col("node").alias("entity"),
+                      F.col("comp").alias("canonical"))
+              .persist())
     # materialize the (vertex-sized) map once: the rewrite joins it per
     # column, and callers typically write both the map and the rewrite —
-    # without this the embed+CC pipeline would re-run per consumer
-    n_merges = str_map.count()
+    # without this the embed+closure pipeline would re-run per consumer
+    n_merges = merges.count()
     vectors.unpersist()
-    idx.unpersist()
     # empty map ⇒ the rewrite is the identity: skip the per-column joins
     # (and let callers skip re-materializing the fact table — at 100 TB
     # an identity copy of the triples is the most expensive no-op in the
     # pipeline). The count is already in hand from the persist above.
     if n_merges == 0:
-        return str_map, triples
-    return str_map, apply_entity_merge(triples, str_map)
+        return merges, triples
+    return merges, apply_entity_merge(triples, merges)

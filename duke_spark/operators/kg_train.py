@@ -56,7 +56,7 @@ def dense_entity_index(entities: DataFrame, col: str = "entity",
     # persist the distinct DOMAIN first: repartitionByRange runs a
     # separate range-bound SAMPLING job over its child, which would
     # otherwise recompute the whole upstream distinct (a second scan of
-    # the fact table when called from resolve_kg_entities) — and its
+    # the fact table when the pool is drawn from the triples) — and its
     # sample must see the same rows as the fill. Then persist the
     # range-partitioned result BEFORE the counts collect: the counts
     # job and the index job MUST see the same partitioning — the

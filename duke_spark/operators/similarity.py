@@ -210,8 +210,15 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
                           id_col: str = "vec_id",
                           max_bucket: int = 4096,
                           new_col: str | None = None) -> DataFrame:
-    """Near-duplicate pairs by cosine ≥ threshold within coordinate-sign
-    LSH buckets — the oracle-checkable twin of ``embedding_near_dups``.
+    """Near-duplicate pairs (a, b, cosine), a < b, by cosine ≥ threshold
+    within coordinate-sign LSH buckets — the oracle-checkable twin of
+    ``embedding_near_dups``.
+
+    Ids may be any orderable Spark type — integers or strings (entity
+    resolution keys pairs by the term string itself); ``a``/``b`` take
+    ``id_col``'s type, and ``a < b`` is Spark's ordering (code-point for
+    strings, which Python's ``str`` comparison shares).
+
     Bucket bits are Catalyst; the pair kernel runs per group in NumPy
     using ``seq_gram_matrix``, whose per-pair accumulation order equals
     the SQL fold — every cosine matches DuckDB bit for bit at NumPy
@@ -238,6 +245,19 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
     any-new aggregate, broadcast back), so an epoch against a large
     history costs O(new × history) candidate work, never
     O(history²)."""
+    return _near_dup_pairs_by_bucket(
+        df, threshold, num_planes, vec_col, id_col, max_bucket,
+        new_col).select("a", "b", "cosine")
+
+
+def _near_dup_pairs_by_bucket(df: DataFrame, threshold: float,
+                              num_planes: int, vec_col: str, id_col: str,
+                              max_bucket: int,
+                              new_col: str | None) -> DataFrame:
+    """``cosine_near_dup_pairs`` plus each pair's LSH ``bucket``. A
+    bucket is a function of the vector, so both ends of every pair — and
+    hence every connected component of the pair graph — live in one
+    bucket: a per-bucket closure is the global closure."""
     bucket = (F.lit(0) if num_planes < 1   # explicit exact full-pairs
               else coord_sign_bucket(vec_col, num_planes))
     keep = [F.col(id_col), F.col(vec_col), bucket.alias("bucket")]
@@ -268,16 +288,19 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
                .filter((F.col("_hn") == 1) | (F.col("_hnj") == 1))
                .drop("_hn", "_hnj"))
 
+    id_type = df.schema[id_col].dataType
     schema = T.StructType([
-        T.StructField("a", T.LongType()),
-        T.StructField("b", T.LongType()),
+        T.StructField("bucket", T.IntegerType()),
+        T.StructField("a", id_type),
+        T.StructField("b", id_type),
         T.StructField("cosine", T.DoubleType()),
     ])
+    empty = pd.DataFrame(columns=["bucket", "a", "b", "cosine"])
 
     def pairs(key, pdf):
         # untyped on purpose (see embedding_near_dups.pairs)
         if len(pdf) < 2:
-            return pd.DataFrame(columns=["a", "b", "cosine"])
+            return empty
         lo_blk, hi_blk = key[1], key[2]
         order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
         ids = pdf[id_col].to_numpy()[order]
@@ -300,7 +323,7 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
             left = pdf["blk"].to_numpy()[order] == lo_blk
             li, ri = np.flatnonzero(left), np.flatnonzero(~left)
             if len(li) == 0 or len(ri) == 0:
-                return pd.DataFrame(columns=["a", "b", "cosine"])
+                return empty
             gram = seq_gram_matrix(mat[li], mat[ri])
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = gram / (nrm[li][:, None] * nrm[ri][None, :])
@@ -309,14 +332,19 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
                 hit &= new[li][:, None] | new[ri][None, :]
             ai, bi = np.nonzero(hit)
             x, y = ids[li[ai]], ids[ri[bi]]
-            a, bb = np.minimum(x, y), np.maximum(x, y)
+            # selects, not np.minimum/maximum: those have no loop for
+            # object (string) arrays
+            lt = x < y
+            a, bb = np.where(lt, x, y), np.where(lt, y, x)
             cos = sims[ai, bi]
-        return pd.DataFrame({"a": a, "b": bb, "cosine": cos})
+        return pd.DataFrame({"bucket": key[0], "a": a, "b": bb,
+                             "cosine": cos})
 
     raw = rep.groupBy("bucket", "lo", "hi").applyInPandas(
         pairs, schema=schema)
     # HALF_UP rounding JVM-side, matching the SQL oracle's ROUND
-    return raw.select("a", "b", F.round("cosine", 6).alias("cosine"))
+    return raw.select("bucket", "a", "b",
+                      F.round("cosine", 6).alias("cosine"))
 
 
 def ivf_cosine_topk_md5(df: DataFrame, query_vec: Sequence[float],

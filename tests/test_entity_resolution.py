@@ -1,12 +1,21 @@
 """Embedding-based entity resolution (operators.entity_resolution):
-merge-map correctness vs a hand-computed closure, totality, and the
-graph rewrite."""
+merge-map correctness vs a hand-computed closure, totality, the graph
+rewrite, the per-bucket NumPy closure, string-keyed resolution and the
+fixed Spark job count."""
+
+import inspect
+import uuid
 
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
+from duke_spark.operators import entity_resolution
 from duke_spark.operators.entity_resolution import (apply_entity_merge,
+                                                    min_label_components,
                                                     resolve_entities)
 
 DIM = 8
@@ -219,3 +228,213 @@ def test_merge_then_fact_support_consolidates(spark):
     fs = fact_support(merged).collect()
     assert len(fs) == 1
     assert fs[0].n_support == 2 and fs[0].n_convs == 2
+
+
+def _arc(spark, ids, ctypes=None):
+    """Unit vectors 0.1 rad apart along a circle, ``ids[k]`` at angle
+    0.1·k: cos 0.1 ≈ 0.995 ≥ 0.99 > cos 0.2 ≈ 0.980, so at threshold
+    0.99 only arc neighbours pair and the pair graph is a path."""
+    cols = {"vec_id": [int(i) for i in ids],
+            "embedding": [[float(np.cos(0.1 * k)), float(np.sin(0.1 * k))]
+                          + [0.0] * (DIM - 2) for k in range(len(ids))]}
+    if ctypes is not None:
+        cols["ctype"] = ctypes
+    return spark.createDataFrame(pd.DataFrame(cols))
+
+
+def _resolved(df, **kw):
+    return {r.entity: r.canonical for r in resolve_entities(
+        df, threshold=0.99, num_planes=0, **kw).collect()}
+
+
+def test_long_arc_resolves_in_one_closure(spark):
+    """A 40-node path whose minimum id sits at the far end: one-hop-per-
+    round label propagation needs 39 rounds (past the 25-round cap of
+    ``dedup.connected_components``); the per-bucket closure maps all 40
+    to the minimum. Guarded, a type change mid-arc cuts the path in
+    two."""
+    ids = np.random.default_rng(5).permutation(np.arange(100, 140))
+    k = int(np.flatnonzero(ids == 100)[0])
+    ids[[k, 39]] = ids[[39, k]]          # minimum at the arc's far end
+    assert _resolved(_arc(spark, ids)) == {int(i): 100 for i in ids}
+    head, tail = ids[:20], ids[20:]
+    typed = _arc(spark, ids, ["x"] * 20 + ["y"] * 20)
+    want = {int(i): int(head.min()) for i in head}
+    want.update({int(i): 100 for i in tail})
+    assert _resolved(typed, type_col="ctype") == want
+
+
+def _union_find(edges):
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:  # the smaller root wins, so roots are minima
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+# 'ﬀ' (U+FB00) < '𝔸' (U+1D538) by code point, but '𝔸' is a surrogate
+# pair in UTF-16 and sorts first there
+ALPHABET = "az\u00e9\ufb00\uff71\U0001d538"
+INT_IDS = st.integers(min_value=-2**40, max_value=2**40)
+STR_IDS = st.text(alphabet=ALPHABET, max_size=4)
+
+
+@st.composite
+def _edges(draw, ids, min_edges=0):
+    nodes = draw(st.lists(ids, min_size=1, max_size=60, unique=True))
+    pick = st.sampled_from(nodes)
+    return draw(st.lists(st.tuples(pick, pick), min_size=min_edges,
+                         max_size=200))
+
+
+def _closure(edges, dtype):
+    a = np.array([e[0] for e in edges], dtype=dtype)
+    b = np.array([e[1] for e in edges], dtype=dtype)
+    nodes, comp = min_label_components(a, b)
+    assert list(nodes) == sorted(nodes)
+    return dict(zip(nodes.tolist(), comp.tolist()))
+
+
+@given(edges=_edges(INT_IDS))
+@settings(max_examples=300, deadline=None)
+def test_closure_equals_union_find_int(edges):
+    assert _closure(edges, np.int64) == _union_find(edges)
+
+
+@given(edges=_edges(STR_IDS))
+@example(edges=[("\U0001d538", "\ufb00")])
+@settings(max_examples=300, deadline=None)
+def test_closure_equals_union_find_str(edges):
+    assert _closure(edges, object) == _union_find(edges)
+
+
+def _spark_components(spark, edges, ddl):
+    from duke_spark.operators.dedup import connected_components
+    pairs = spark.createDataFrame(edges, f"a {ddl}, b {ddl}")
+    return {r.node: r.comp
+            for r in connected_components(pairs, max_iter=60).collect()}
+
+
+@given(edges=_edges(INT_IDS, min_edges=1))
+@settings(max_examples=8, deadline=None)
+def test_closure_equals_connected_components_int(spark, edges):
+    assert _closure(edges, np.int64) == _spark_components(spark, edges,
+                                                          "bigint")
+
+
+@given(edges=_edges(STR_IDS, min_edges=1))
+@example(edges=[("\U0001d538", "\ufb00"), ("\uff71a", "\U0001d538")])
+@settings(max_examples=8, deadline=None)
+def test_closure_equals_connected_components_str(spark, edges):
+    """Spark's string min (UTF-8 bytes = code points) is the order the
+    closure's ``np.unique`` uses."""
+    assert _closure(edges, object) == _spark_components(spark, edges,
+                                                        "string")
+
+
+def _alias_context(spark, groups):
+    """LinkContext whose vocab holds each group's words on one direction
+    (alias vectors ≤1e-4 apart), plus the mini tree's class words."""
+    from duke_spark.fixtures.class_tree import mini_tree
+    from duke_spark.operators.linking import LinkContext
+
+    rng = np.random.default_rng(13)
+    words, vecs = [], []
+    for group in groups:
+        base = rng.normal(0, 1, DIM)
+        for j, w in enumerate(group):
+            words.append(w)
+            vecs.append(base + 1e-4 * j)
+    for w in sorted({w for c in mini_tree() for w in c.split(" ")}):
+        if w not in words:
+            words.append(w)
+            vecs.append(rng.normal(0, 1, DIM))
+    ctx = LinkContext(words, np.asarray(vecs, dtype=np.float32),
+                      mini_tree())
+    return spark.sparkContext.broadcast(ctx)
+
+
+def test_resolve_kg_entities_canonical_is_spark_min(spark):
+    """Non-ASCII planted aliases: each component's canonical term is
+    Spark's ``min`` of its terms (code-point order — UTF-16 order would
+    pick 'ent:𝔸')."""
+    from duke_spark.operators.entity_resolution import resolve_kg_entities
+
+    groups = [["\U0001d538", "\ufb00", "\uff71"], ["\u00e9", "e"]]
+    ctx_bc = _alias_context(spark, groups)
+    terms = ["ent:" + w for g in groups for w in g]
+    triples = spark.createDataFrame(pd.DataFrame(
+        [("conv:1", "mentions", t) for t in terms],
+        columns=["subj", "pred", "obj"]))
+    mm, _ = resolve_kg_entities(triples, ctx_bc, threshold=0.99)
+    got = {(r.entity, r.canonical) for r in mm.collect()}
+    comp = spark.createDataFrame(
+        [(g, "ent:" + w) for g, grp in enumerate(groups) for w in grp],
+        "g int, t string")
+    mins = {r.g: r.m for r in
+            comp.groupBy("g").agg(F.min("t").alias("m")).collect()}
+    want = {("ent:" + w, mins[g]) for g, grp in enumerate(groups)
+            for w in grp if "ent:" + w != mins[g]}
+    assert mins == {0: "ent:\ufb00", 1: "ent:e"}
+    assert got == want
+
+
+def _job_count(spark, action) -> int:
+    sc = spark.sparkContext
+    group = f"er-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "entity resolution job count")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resolution_job_count_is_fixed(spark):
+    """The closure is one shuffle, not a loop of Spark actions: a
+    3-vector and a 20-vector arc (path diameters 2 and 19) launch the
+    same number of Spark jobs, and the module no longer reaches the
+    iterative components or the dense index."""
+    short = _arc(spark, [7, 3, 5])
+    long = _arc(spark, range(20))
+    n_short = _job_count(spark, lambda: _resolved(short))
+    n_long = _job_count(spark, lambda: _resolved(long))
+    assert n_short > 0
+    assert n_short == n_long
+    src = inspect.getsource(entity_resolution)
+    assert "connected_components" not in src
+    assert "dense_entity_index" not in src
+
+
+def test_resolve_kg_job_count_same_with_and_without_merges(spark):
+    """Pipeline form: the planted aliases merge at 0.99 and nothing
+    merges at 1.5, with the same number of Spark jobs."""
+    from duke_spark.operators.entity_resolution import resolve_kg_entities
+
+    groups = [["acme", "acmecorp", "acmeinc"], ["zebra"]]
+    ctx_bc = _alias_context(spark, groups)
+    triples = spark.createDataFrame(pd.DataFrame(
+        [("conv:1", "mentions", "ent:" + w) for g in groups for w in g],
+        columns=["subj", "pred", "obj"]))
+    counts, merges = [], []
+    for threshold in (0.99, 1.5):
+        def run():
+            mm, _ = resolve_kg_entities(triples, ctx_bc,
+                                        threshold=threshold,
+                                        type_guard=True)
+            merges.append(mm.count())
+            mm.unpersist()
+        counts.append(_job_count(spark, run))
+    assert merges == [2, 0]
+    assert counts[0] == counts[1]

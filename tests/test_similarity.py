@@ -202,6 +202,56 @@ def test_cosine_pairs_capped_equals_uncapped(spark, emb):
         cap.sort_values(key).reset_index(drop=True))
 
 
+def _mixed_strings(n):
+    """n distinct ids over ASCII, BMP and supplementary-plane characters
+    (UTF-16 and code-point orders disagree on 'ﬀ' vs '𝔸')."""
+    alphabet = "a\u00e9\ufb00\uff71\U0001d538z"
+    out = []
+    for i in range(n):
+        digits = []
+        for _ in range(3):
+            i, d = divmod(i, len(alphabet))
+            digits.append(alphabet[d])
+        out.append("ent:" + "".join(reversed(digits)))
+    return out
+
+
+@pytest.mark.parametrize("max_bucket", [13, 100000])
+def test_cosine_pairs_string_ids_match_ranked_long_ids(spark, emb_pdf,
+                                                       max_bucket):
+    """String ids (entity resolution keys pairs by the term) give the
+    long-id pair set mapped through the sorted rank — same a < b
+    orientation, bit-identical cosines — capped and uncapped; ``a``/``b``
+    follow the id type."""
+    from duke_spark.operators.similarity import cosine_near_dup_pairs
+    strs = _mixed_strings(N)
+    rank = {s: r for r, s in enumerate(sorted(strs))}
+    vec = T.StructField("embedding", T.ArrayType(T.FloatType()))
+    by_str = spark.createDataFrame(
+        pd.DataFrame({"vec_id": strs, "embedding": emb_pdf["embedding"]}),
+        schema=T.StructType([T.StructField("vec_id", T.StringType()),
+                             vec]))
+    by_rank = spark.createDataFrame(
+        pd.DataFrame({"vec_id": [rank[s] for s in strs],
+                      "embedding": emb_pdf["embedding"]}),
+        schema=T.StructType([T.StructField("vec_id", T.LongType()),
+                             vec]))
+    kw = dict(threshold=0.5, num_planes=2, max_bucket=max_bucket)
+    got = cosine_near_dup_pairs(by_str, **kw)
+    want = cosine_near_dup_pairs(by_rank, **kw)
+    assert got.columns == want.columns == ["a", "b", "cosine"]
+    assert got.schema["a"].dataType == T.StringType()
+    assert want.schema["a"].dataType == T.LongType()
+    got = got.toPandas()
+    got["a"] = got["a"].map(rank)
+    got["b"] = got["b"].map(rank)
+    key = ["a", "b"]
+    pd.testing.assert_frame_equal(
+        want.toPandas().sort_values(key).reset_index(drop=True),
+        got.sort_values(key).reset_index(drop=True), check_exact=True)
+    assert len(got) > 0
+
+
 def test_cosine_pairs_group_sizes_bounded(spark, emb):
     """Scale proof for the ER path: with coord-sign bucketing (2 planes
     → ~N/4 rows per bucket) and max_bucket=13, no pair task may see
