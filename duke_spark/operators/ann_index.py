@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duke_spark.operators.similarity import (coord_sign_bucket, cosine_topk,
-                                             ivf_assign, ivf_centroids,
+                                             hyperplane_buckets, ivf_assign,
+                                             ivf_centroids, ivf_probe,
                                              lsh_bucket_ids)
 
 META_FILE = "_meta.json"
@@ -53,6 +54,18 @@ def _read_meta(path: str) -> dict:
         return json.load(f)
 
 
+def assign_lsh_buckets(df: DataFrame, meta: dict) -> DataFrame:
+    """(id, vec, bucket) rows under the index's plane family — the one
+    data-side assignment the batch build and the streaming append share.
+    ``'coord'`` stays Catalyst (the form the SQL oracle reproduces)."""
+    base = df.select(meta["id_col"], meta["vec_col"])
+    if meta["planes"] == "coord":
+        return base.withColumn(
+            "bucket", coord_sign_bucket(meta["vec_col"], meta["num_planes"]))
+    return lsh_bucket_ids(base, meta["dim"], meta["num_planes"],
+                          meta["seed"], meta["vec_col"])
+
+
 def build_lsh_index(df: DataFrame, path: str, dim: int,
                     num_planes: int = 8, seed: int = 7,
                     planes: str = "gaussian", vec_col: str = "embedding",
@@ -61,17 +74,11 @@ def build_lsh_index(df: DataFrame, path: str, dim: int,
     the seeded random-hyperplane family (production); ``'coord'`` uses
     coordinate-sign planes (SQL-reproducible, used by the driver oracle).
     """
-    base = df.select(id_col, vec_col)
-    if planes == "coord":
-        bucketed = base.withColumn(
-            "bucket", coord_sign_bucket(vec_col, num_planes))
-    else:
-        bucketed = lsh_bucket_ids(base, dim, num_planes, seed, vec_col)
-    (bucketed.repartition("bucket")
-     .write.mode("overwrite").partitionBy("bucket")
-     .parquet(os.path.join(path, DATA_DIR)))
     meta = {"kind": "lsh", "planes": planes, "num_planes": num_planes,
             "seed": seed, "dim": dim, "vec_col": vec_col, "id_col": id_col}
+    (assign_lsh_buckets(df, meta).repartition("bucket")
+     .write.mode("overwrite").partitionBy("bucket")
+     .parquet(os.path.join(path, DATA_DIR)))
     _write_meta(path, meta)
     return meta
 
@@ -101,13 +108,11 @@ def _lsh_probe_buckets(qvec: Sequence[float], meta: dict,
     neighbor differs in at most a few plane signs)."""
     q = np.asarray(qvec, dtype=np.float64)
     p = meta["num_planes"]
-    if meta["planes"] == "coord":
-        signs = q[:p] >= 0
+    if meta["planes"] == "coord":   # coord_sign_bucket's rule
+        qb = int((q[:p] >= 0) @ (1 << np.arange(p, dtype=np.int64)))
     else:
-        rng = np.random.default_rng(meta["seed"])
-        planes = rng.standard_normal((meta["dim"], p))
-        signs = (q @ planes) >= 0
-    qb = int(signs @ (1 << np.arange(p, dtype=np.int64)))
+        qb = int(hyperplane_buckets(q[None, :], meta["dim"], p,
+                                    meta["seed"])[0, 0])
     probes = {qb}
     if hamming >= 1:
         probes.update(qb ^ (1 << j) for j in range(p))
@@ -142,11 +147,8 @@ def query_ivf_index(spark: SparkSession, path: str,
                     qvec: Sequence[float], k: int = 10,
                     n_probe: int = 4) -> DataFrame:
     meta = _read_meta(path)
-    cents = np.asarray(meta["centroids"], dtype=np.float64)
-    q = np.asarray(qvec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    qu = q / qn if qn else q
-    probe = np.argsort(-(cents @ qu), kind="stable")[:n_probe].tolist()
+    probe = ivf_probe(np.asarray(meta["centroids"], dtype=np.float64),
+                      qvec, n_probe)
     idx = (open_index(spark, path)
            .filter(F.col("cluster").isin(probe))
            .dropDuplicates([meta["id_col"]]))

@@ -9,6 +9,7 @@ inside mapInPandas. Shuffle shape notes per operator.
                          the consumer needs it).
   * minhash_signatures — k independent xxhash64 perms, min per perm;
                          vectorized NumPy per Arrow batch; narrow stage.
+  * signature_bands    — the band rule: xxhash64 per signature slice.
   * lsh_candidate_pairs— band the signature, groupBy band-hash; candidate
                          pairs only within buckets (classic MinHash-LSH).
   * ngram_jaccard_pairs— exact Jaccard via explode + self-join on shingle;
@@ -105,22 +106,14 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     return base.mapInPandas(run, schema=schema)
 
 
-def hash64(s: str) -> int:
-    """Stable 64-bit string hash (FNV-1a), process-independent."""
-    h = 0xCBF29CE484222325
-    for b in s.encode():
-        h ^= b
-        h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
-
-
-def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
-                        bands: int = 16) -> DataFrame:
-    """Band the signature; docs sharing any band bucket are candidates.
-    Shuffle keys are (band_idx, band_hash) — uniform by construction, so
-    no skew salting needed. Returns distinct (a, b) with a < b."""
+def signature_bands(signatures: DataFrame, bands: int,
+                    id_col: str = "doc_id") -> DataFrame:
+    """The MinHash band rule: one (id, band_idx, band_hash) row per
+    band, band_hash = xxhash64 of the band's signature slice, seeded by
+    the band index. Batch candidate pairs and the streaming near-dup
+    state both band through here, so they always agree."""
     rows_per_band = (F.size("signature") / F.lit(bands)).cast("int")
-    banded = signatures.select(
+    return signatures.select(
         F.col(id_col),
         F.posexplode(
             F.transform(
@@ -131,6 +124,14 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
                             rows_per_band).cast("string"),
                     b))
         ).alias("band_idx", "band_hash"))
+
+
+def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
+                        bands: int = 16) -> DataFrame:
+    """Band the signature; docs sharing any band bucket are candidates.
+    Shuffle keys are (band_idx, band_hash) — uniform by construction, so
+    no skew salting needed. Returns distinct (a, b) with a < b."""
+    banded = signature_bands(signatures, bands, id_col)
     left = banded.alias("l")
     right = banded.alias("r")
     return (left.join(right,

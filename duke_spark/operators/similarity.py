@@ -10,6 +10,14 @@ Two paths:
     bucket id is a pre-shuffle key, so the candidate scan is a partition-
     pruned fraction of the corpus. Hyperplanes are seeded and broadcast.
 
+One home per LSH rule, shared with ``operators.ann_index`` and the
+streaming writers: ``hyperplane_buckets`` (Gaussian planes),
+``coord_sign_bucket`` (Catalyst coordinate signs), ``ivf_probe``, and
+``_block_paired_pairs``, the one near-dup join — bucket, split hot
+buckets into hash blocks, score each block pair — run with the SQL-exact
+``seq_gram_matrix`` fold (``cosine_near_dup_pairs``, entity resolution)
+or one GEMM of unit rows (``embedding_near_dups``).
+
 Embedding-based near-dup (cosine ≥ τ within LSH buckets) composes the
 two; the Duke anchor is the same unit-norm + dot kernel
 (``Duke/dataset_descriptor.py:57``).
@@ -57,29 +65,51 @@ def cosine_topk(df: DataFrame, query_vec: Sequence[float], k: int = 10,
             .limit(k))
 
 
-def lsh_bucket_ids(df: DataFrame, dim: int, num_planes: int = 8,
-                   seed: int = 7, vec_col: str = "embedding",
-                   out_col: str = "bucket") -> DataFrame:
-    """Random-hyperplane LSH bucket per row (sign pattern → int bucket).
-    NumPy matmul per Arrow batch; narrow stage."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, num_planes)).astype(np.float64)
-    out_fields = df.schema.fields + [T.StructField(out_col, T.IntegerType())]
-    schema = T.StructType(out_fields)
-    cols = [f.name for f in df.schema.fields]
-    weights = (1 << np.arange(num_planes, dtype=np.int64))
+def hyperplane_buckets(mat: np.ndarray, dim: int, num_planes: int,
+                       seed: int, num_bands: int = 1) -> np.ndarray:
+    """The Gaussian random-hyperplane bucket rule: an n × ``num_bands``
+    int32 matrix whose column t is the sign pattern of the rows of
+    ``mat`` (n × dim, float64) against the ``num_planes`` seeded N(0, 1)
+    planes of ``seed + t``, plane j → bit j. Stored index rows, the
+    in-flight ANN, near-dup bands and query probes all come from here,
+    so a query lands in the bucket its twins were written to."""
+    weights = 1 << np.arange(num_planes, dtype=np.int64)
+    out = np.empty((mat.shape[0], num_bands), dtype=np.int32)
+    for t in range(num_bands):
+        planes = np.random.default_rng(seed + t).standard_normal(
+            (dim, num_planes))
+        out[:, t] = ((mat @ planes) >= 0) @ weights
+    return out
+
+
+def _with_int_column(df: DataFrame, vec_col: str, out_col: str,
+                     rule) -> DataFrame:
+    """``df`` plus an int ``out_col`` = ``rule`` of each Arrow batch's
+    float64 n × dim vector matrix; narrow stage."""
+    schema = T.StructType(df.schema.fields
+                          + [T.StructField(out_col, T.IntegerType())])
+    cols = df.columns
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mat = np.stack(pdf[vec_col].to_list()).astype(np.float64)
-            signs = (mat @ planes) >= 0
             pdf = pdf[cols].copy()
-            pdf[out_col] = (signs @ weights).astype(np.int32)
+            pdf[out_col] = rule(mat)
             yield pdf
 
     return df.mapInPandas(run, schema=schema)
+
+
+def lsh_bucket_ids(df: DataFrame, dim: int, num_planes: int = 8,
+                   seed: int = 7, vec_col: str = "embedding",
+                   out_col: str = "bucket") -> DataFrame:
+    """Random-hyperplane LSH bucket per row (``hyperplane_buckets``),
+    one NumPy matmul per Arrow batch."""
+    return _with_int_column(
+        df, vec_col, out_col,
+        lambda mat: hyperplane_buckets(mat, dim, num_planes, seed)[:, 0])
 
 
 def ann_cosine_topk(df: DataFrame, query_vec: Sequence[float], k: int = 10,
@@ -91,10 +121,7 @@ def ann_cosine_topk(df: DataFrame, query_vec: Sequence[float], k: int = 10,
     into partition pruning; here it's a pushable equality filter."""
     q = np.asarray(query_vec, dtype=np.float64)
     dim = dim or len(q)
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, num_planes))
-    weights = (1 << np.arange(num_planes, dtype=np.int64))
-    qbucket = int(((q @ planes) >= 0) @ weights)
+    qbucket = int(hyperplane_buckets(q[None, :], dim, num_planes, seed)[0, 0])
     bucketed = lsh_bucket_ids(df, dim, num_planes, seed, vec_col)
     return cosine_topk(bucketed.filter(F.col("bucket") == qbucket),
                        query_vec, k, vec_col, id_col)
@@ -122,22 +149,21 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray,
     Arrow batch against the broadcast centroid matrix. At 100 TB the
     cluster id is the stored index's partition key (probe = partition
     pruning), exactly like the LSH bucket column."""
-    out_fields = df.schema.fields + [T.StructField(out_col, T.IntegerType())]
-    schema = T.StructType(out_fields)
-    cols = [f.name for f in df.schema.fields]
+    return _with_int_column(
+        df, vec_col, out_col,
+        lambda mat: np.argmax(unit_norm_rows(mat) @ centroids.T,
+                              axis=1).astype(np.int32))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf[vec_col].to_list()).astype(np.float64)
-            unit = unit_norm_rows(mat)
-            pdf = pdf[cols].copy()
-            pdf[out_col] = np.argmax(unit @ centroids.T,
-                                     axis=1).astype(np.int32)
-            yield pdf
 
-    return df.mapInPandas(run, schema=schema)
+def ivf_probe(centroids: np.ndarray, query_vec: Sequence[float],
+              n_probe: int) -> List[int]:
+    """The IVF probe rule: the ``n_probe`` unit centroids with the
+    highest cosine to the (unit-normed) query, best first, ties by
+    centroid index."""
+    q = np.asarray(query_vec, dtype=np.float64)
+    qn = np.linalg.norm(q)
+    q = q / qn if qn else q
+    return np.argsort(-(centroids @ q), kind="stable")[:n_probe].tolist()
 
 
 def ivf_cosine_topk(df: DataFrame, query_vec: Sequence[float], k: int = 10,
@@ -148,10 +174,7 @@ def ivf_cosine_topk(df: DataFrame, query_vec: Sequence[float], k: int = 10,
     ``n_probe`` clusters nearest the query, brute-force within.
     ``n_probe == k_clusters`` degrades to exact search (tested)."""
     cents = ivf_centroids(df, k_clusters, seed, vec_col, id_col)
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    q = q / qn if qn else q
-    probe = np.argsort(-(cents @ q), kind="stable")[:n_probe].tolist()
+    probe = ivf_probe(cents, query_vec, n_probe)
     assigned = ivf_assign(df, cents, vec_col)
     return cosine_topk(assigned.filter(F.col("cluster").isin(probe)),
                        query_vec, k, vec_col, id_col)
@@ -204,6 +227,122 @@ def _seq_sq_norms(mat: np.ndarray) -> np.ndarray:
     return acc
 
 
+def _seq_cosines(x: np.ndarray, y: np.ndarray | None = None) -> np.ndarray:
+    """Cosines of x's rows against y's (x's own when ``y`` is None) from
+    the sequential ``seq_gram_matrix`` fold — bit-identical to the SQL
+    engines'; a zero row scores NaN, so it never clears a threshold."""
+    nx = np.sqrt(_seq_sq_norms(x))
+    ny = nx if y is None else np.sqrt(_seq_sq_norms(y))
+    gram = seq_gram_matrix(x, y)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return gram / (nx[:, None] * ny[None, :])
+
+
+def _unit_cosines(x: np.ndarray, y: np.ndarray | None = None) -> np.ndarray:
+    """Cosines of x's rows against y's (x's own when ``y`` is None) as
+    one BLAS GEMM of unit rows; a zero row scores 0."""
+    ux = unit_norm_rows(x)
+    return ux @ (ux if y is None else unit_norm_rows(y)).T
+
+
+def _block_paired_pairs(rows: DataFrame, keys: List[str], threshold: float,
+                        cosine, id_col: str, vec_col: str,
+                        max_bucket: int) -> DataFrame:
+    """The block-paired cosine join: (*keys, a, b, cosine) for every
+    pair of rows sharing their ``keys`` values (an LSH bucket) with
+    ``cosine(x, y)`` ≥ threshold, a < b in Spark's ordering of
+    ``id_col``'s type.
+
+    A hot bucket is never one quadratic task: its rows are hash-split
+    into ``ceil(|bucket| / max_bucket)`` blocks and every block PAIR is
+    its own ``applyInPandas`` group (a row is replicated once per
+    block), so per-task memory is ≤ 2·max_bucket rows and the
+    O(|bucket|²) work spreads over nb² tasks. Block pairing is
+    exhaustive within the bucket, and each group sorts its rows by id,
+    so the pair set does not depend on ``max_bucket``; with the
+    sequential fold neither does any cosine (the cross-gram reuses the
+    self-gram's floats), which is why the SQL oracle needs no
+    max_bucket awareness.
+
+    If ``rows`` has a boolean ``_new`` column, only pairs touching a new
+    row are emitted, and block pairs where NEITHER block holds a new row
+    are pruned before the shuffle (a per-(bucket, block) any-new
+    aggregate, broadcast back): an epoch against a large history costs
+    O(new × history) candidate work, never O(history²)."""
+    with_new = "_new" in rows.columns
+    counts = rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
+    sized = (rows.join(F.broadcast(counts), keys)
+             .withColumn("nb", F.ceil(F.col("cnt") / max_bucket)
+                         .cast("int"))
+             .withColumn("blk", F.pmod(F.xxhash64(F.col(id_col)),
+                                       F.col("nb")).cast("int")))
+    cols = [id_col, vec_col, *keys, "blk"] + (["_new"] if with_new else [])
+    rep = (sized.select(
+        *cols,
+        F.explode(F.sequence(F.lit(0), F.col("nb") - 1)).alias("j"))
+        .withColumn("lo", F.least("blk", "j"))
+        .withColumn("hi", F.greatest("blk", "j")))
+    if with_new:
+        has_new = (sized.groupBy(*keys, "blk")
+                   .agg(F.max(F.col("_new").cast("int")).alias("_hn")))
+        rep = (rep
+               .join(F.broadcast(has_new), [*keys, "blk"])
+               .join(F.broadcast(has_new.select(
+                   *keys, F.col("blk").alias("j"),
+                   F.col("_hn").alias("_hnj"))), [*keys, "j"])
+               .filter((F.col("_hn") == 1) | (F.col("_hnj") == 1))
+               .drop("_hn", "_hnj"))
+
+    id_type = rows.schema[id_col].dataType
+    schema = T.StructType(
+        [T.StructField(k, rows.schema[k].dataType) for k in keys] + [
+            T.StructField("a", id_type),
+            T.StructField("b", id_type),
+            T.StructField("cosine", T.DoubleType()),
+        ])
+    empty = pd.DataFrame(columns=schema.fieldNames())
+    nk = len(keys)
+
+    def pairs(key, pdf):
+        # untyped on purpose: PySpark's hint inference can't type the
+        # (key, pdf) grouped-map form and warns on partial annotations
+        if len(pdf) < 2:
+            return empty
+        lo_blk, hi_blk = key[nk], key[nk + 1]
+        order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
+        ids = pdf[id_col].to_numpy()[order]
+        mat = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
+        new = pdf["_new"].to_numpy()[order].astype(bool) if with_new else None
+        if lo_blk == hi_blk:
+            iu = np.triu_indices(len(ids), k=1)
+            vals = cosine(mat)[iu]
+            mask = vals >= threshold
+            if new is not None:  # pair must touch a new row
+                mask &= new[iu[0]] | new[iu[1]]
+            a, b = ids[iu[0][mask]], ids[iu[1][mask]]
+            cos = vals[mask]
+        else:
+            left = pdf["blk"].to_numpy()[order] == lo_blk
+            li, ri = np.flatnonzero(left), np.flatnonzero(~left)
+            if len(li) == 0 or len(ri) == 0:
+                return empty
+            sims = cosine(mat[li], mat[ri])
+            hit = sims >= threshold
+            if new is not None:
+                hit &= new[li][:, None] | new[ri][None, :]
+            ai, bi = np.nonzero(hit)
+            x, y = ids[li[ai]], ids[ri[bi]]
+            # selects, not np.minimum/maximum: those have no loop for
+            # object (string) arrays
+            lt = x < y
+            a, b = np.where(lt, x, y), np.where(lt, y, x)
+            cos = sims[ai, bi]
+        return pd.DataFrame({**dict(zip(keys, key[:nk])),
+                             "a": a, "b": b, "cosine": cos})
+
+    return rep.groupBy(*keys, "lo", "hi").applyInPandas(pairs, schema=schema)
+
+
 def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
                           num_planes: int = 4,
                           vec_col: str = "embedding",
@@ -223,28 +362,17 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
     using ``seq_gram_matrix``, whose per-pair accumulation order equals
     the SQL fold — every cosine matches DuckDB bit for bit at NumPy
     speed (the per-pair Catalyst higher-order-function fold is
-    interpreted and ~5× slower).
+    interpreted and ~5× slower). Cosines are rounded HALF_UP to 6 dp,
+    as the SQL oracle's ROUND does.
 
-    Scale: a hot bucket is never one quadratic task. Like
-    ``embedding_near_dups``, rows are hash-split into
-    ``ceil(|bucket| / max_bucket)`` blocks and every block PAIR is its
-    own ``applyInPandas`` group, so per-task memory is ≤ 2·max_bucket
-    rows and the O(|bucket|²) work spreads over nb² tasks — with 16
-    coord-sign buckets (num_planes=4) over 10⁸ entities the old
-    single-task path would build a ~6M×6M gram matrix; this one never
-    exceeds max_bucket². The pair SET and every cosine are unchanged
-    (block pairing is exhaustive within the bucket; cross-block dots
-    reuse the same sequential fold), so the SQL oracle needs no
-    max_bucket awareness. Capped-vs-uncapped identity is pytest-pinned.
+    Scale: ``max_bucket`` caps the rows of one pair task without
+    changing the output (``_block_paired_pairs``).
 
     ``new_col`` (incremental mode, the C41 composition): a boolean
     column marking this epoch's NEW rows. Only pairs touching at least
     one new row are emitted — exactly the edge delta an incremental
-    component store needs — and block pairs where NEITHER block holds a
-    new row are pruned before the shuffle (a per-(bucket, block)
-    any-new aggregate, broadcast back), so an epoch against a large
-    history costs O(new × history) candidate work, never
-    O(history²)."""
+    component store needs — and block pairs with no new row are pruned
+    before the shuffle."""
     return _near_dup_pairs_by_bucket(
         df, threshold, num_planes, vec_col, id_col, max_bucket,
         new_col).select("a", "b", "cosine")
@@ -263,85 +391,8 @@ def _near_dup_pairs_by_bucket(df: DataFrame, threshold: float,
     keep = [F.col(id_col), F.col(vec_col), bucket.alias("bucket")]
     if new_col is not None:
         keep.append(F.col(new_col).cast("boolean").alias("_new"))
-    b = df.select(*keep)
-    counts = b.groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))
-    sized = (b.join(F.broadcast(counts), "bucket")
-             .withColumn("nb", F.ceil(F.col("cnt") / max_bucket)
-                         .cast("int"))
-             .withColumn("blk", F.pmod(F.xxhash64(F.col(id_col)),
-                                       F.col("nb")).cast("int")))
-    cols = [id_col, vec_col, "bucket", "blk"] + \
-        (["_new"] if new_col is not None else [])
-    rep = (sized.select(
-        *cols,
-        F.explode(F.sequence(F.lit(0), F.col("nb") - 1)).alias("j"))
-        .withColumn("lo", F.least("blk", "j"))
-        .withColumn("hi", F.greatest("blk", "j")))
-    if new_col is not None:
-        has_new = (sized.groupBy("bucket", "blk")
-                   .agg(F.max(F.col("_new").cast("int")).alias("_hn")))
-        rep = (rep
-               .join(F.broadcast(has_new), ["bucket", "blk"])
-               .join(F.broadcast(has_new.select(
-                   "bucket", F.col("blk").alias("j"),
-                   F.col("_hn").alias("_hnj"))), ["bucket", "j"])
-               .filter((F.col("_hn") == 1) | (F.col("_hnj") == 1))
-               .drop("_hn", "_hnj"))
-
-    id_type = df.schema[id_col].dataType
-    schema = T.StructType([
-        T.StructField("bucket", T.IntegerType()),
-        T.StructField("a", id_type),
-        T.StructField("b", id_type),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-    empty = pd.DataFrame(columns=["bucket", "a", "b", "cosine"])
-
-    def pairs(key, pdf):
-        # untyped on purpose (see embedding_near_dups.pairs)
-        if len(pdf) < 2:
-            return empty
-        lo_blk, hi_blk = key[1], key[2]
-        order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
-        ids = pdf[id_col].to_numpy()[order]
-        mat = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
-        nrm = np.sqrt(_seq_sq_norms(mat))
-        new = (pdf["_new"].to_numpy()[order].astype(bool)
-               if new_col is not None else None)
-        if lo_blk == hi_blk:
-            gram = seq_gram_matrix(mat)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = gram / (nrm[:, None] * nrm[None, :])
-            iu = np.triu_indices(len(ids), k=1)
-            vals = sims[iu]
-            mask = vals >= threshold
-            if new is not None:  # pair must touch a new row
-                mask &= new[iu[0]] | new[iu[1]]
-            a, bb = ids[iu[0][mask]], ids[iu[1][mask]]
-            cos = vals[mask]
-        else:
-            left = pdf["blk"].to_numpy()[order] == lo_blk
-            li, ri = np.flatnonzero(left), np.flatnonzero(~left)
-            if len(li) == 0 or len(ri) == 0:
-                return empty
-            gram = seq_gram_matrix(mat[li], mat[ri])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = gram / (nrm[li][:, None] * nrm[ri][None, :])
-            hit = sims >= threshold
-            if new is not None:
-                hit &= new[li][:, None] | new[ri][None, :]
-            ai, bi = np.nonzero(hit)
-            x, y = ids[li[ai]], ids[ri[bi]]
-            # selects, not np.minimum/maximum: those have no loop for
-            # object (string) arrays
-            lt = x < y
-            a, bb = np.where(lt, x, y), np.where(lt, y, x)
-            cos = sims[ai, bi]
-        return pd.DataFrame({"bucket": key[0], "a": a, "b": bb,
-                             "cosine": cos})
-
-    raw = rep.groupBy("bucket", "lo", "hi").applyInPandas(
-        pairs, schema=schema)
+    raw = _block_paired_pairs(df.select(*keep), ["bucket"], threshold,
+                              _seq_cosines, id_col, vec_col, max_bucket)
     # HALF_UP rounding JVM-side, matching the SQL oracle's ROUND
     return raw.select("bucket", "a", "b",
                       F.round("cosine", 6).alias("cosine"))
@@ -405,14 +456,10 @@ def ivf_cosine_topk_md5(df: DataFrame, query_vec: Sequence[float],
 
 def _band_buckets(df: DataFrame, dim: int, num_planes: int, seed: int,
                   num_bands: int, vec_col: str, id_col: str) -> DataFrame:
-    """One narrow pass assigning every row its bucket in each of
-    ``num_bands`` independent plane sets (band t uses seed+t, so band 0
-    reproduces the single-band assignment exactly). Rows are replicated
-    once per band: (id, vec, band, bucket)."""
-    planes_all = np.concatenate(
-        [np.random.default_rng(seed + t).standard_normal((dim, num_planes))
-         for t in range(num_bands)], axis=1)
-    weights = (1 << np.arange(num_planes, dtype=np.int64))
+    """One narrow pass assigning every row its ``hyperplane_buckets``
+    bucket in each of ``num_bands`` independent plane sets (band 0 is
+    ``lsh_bucket_ids``'s bucket). Rows are replicated once per band:
+    (id, vec, band, bucket)."""
     schema = T.StructType([
         T.StructField(id_col, T.LongType()),
         T.StructField(vec_col, T.ArrayType(T.FloatType())),
@@ -425,17 +472,13 @@ def _band_buckets(df: DataFrame, dim: int, num_planes: int, seed: int,
             if len(pdf) == 0:
                 continue
             mat = np.stack(pdf[vec_col].to_list()).astype(np.float64)
-            signs = (mat @ planes_all) >= 0
             n = len(pdf)
-            buckets = np.empty((n, num_bands), dtype=np.int32)
-            for t in range(num_bands):
-                block = signs[:, t * num_planes:(t + 1) * num_planes]
-                buckets[:, t] = (block @ weights).astype(np.int32)
             yield pd.DataFrame({
                 id_col: np.repeat(pdf[id_col].to_numpy(), num_bands),
                 vec_col: np.repeat(pdf[vec_col].to_numpy(), num_bands),
                 "band": np.tile(np.arange(num_bands, dtype=np.int32), n),
-                "bucket": buckets.reshape(-1),
+                "bucket": hyperplane_buckets(mat, dim, num_planes, seed,
+                                             num_bands).reshape(-1),
             })
 
     return df.select(id_col, vec_col).mapInPandas(run, schema=schema)
@@ -454,65 +497,13 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
     OR, the MinHash-LSH banding trick) — miss probability decays as
     ``(1 - p^planes)^bands``.
 
-    Scale: a skewed bucket is never one quadratic task. Rows are split
-    into ``ceil(|bucket| / max_bucket)`` hash blocks and every block PAIR
-    becomes its own ``applyInPandas`` group (a row is replicated
-    ``nb`` times), so per-task memory is ≤ 2·max_bucket rows and the
-    O(|bucket|²) pair work spreads over nb² parallel tasks instead of
-    straggling on one. Exhaustive within bucket: capped and uncapped
-    results are identical (pytest-verified)."""
+    Scale: ``max_bucket`` caps the rows of one pair task without
+    changing the pair set (``_block_paired_pairs``)."""
     bucketed = _band_buckets(df, dim, num_planes, seed, num_bands,
                              vec_col, id_col)
-    counts = (bucketed.groupBy("band", "bucket")
-              .agg(F.count(F.lit(1)).alias("cnt")))
-    sized = (bucketed.join(F.broadcast(counts), ["band", "bucket"])
-             .withColumn("nb", F.ceil(F.col("cnt") / max_bucket)
-                         .cast("int"))
-             .withColumn("blk", F.pmod(F.xxhash64(F.col(id_col)),
-                                       F.col("nb")).cast("int")))
-    rep = (sized.select(
-        id_col, vec_col, "band", "bucket", "blk",
-        F.explode(F.sequence(F.lit(0), F.col("nb") - 1)).alias("j"))
-        .withColumn("lo", F.least("blk", "j"))
-        .withColumn("hi", F.greatest("blk", "j")))
-
-    schema = T.StructType([
-        T.StructField("a", T.LongType()),
-        T.StructField("b", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
-    def pairs(key, pdf):
-        # untyped on purpose: PySpark's hint inference can't type the
-        # (key, pdf) grouped-map form and warns on partial annotations
-        if len(pdf) < 2:
-            return pd.DataFrame(columns=["a", "b", "cosine"])
-        lo_blk, hi_blk = key[2], key[3]
-        ids = pdf[id_col].to_numpy()
-        mat = np.stack(pdf[vec_col].to_list()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        unit = mat / norms
-        if lo_blk == hi_blk:
-            sims = unit @ unit.T
-            iu = np.triu_indices(len(ids), k=1)
-            mask = sims[iu] >= threshold
-            a, b = ids[iu[0][mask]], ids[iu[1][mask]]
-            cos = sims[iu][mask]
-        else:
-            left = pdf["blk"].to_numpy() == lo_blk
-            li, ri = np.flatnonzero(left), np.flatnonzero(~left)
-            if len(li) == 0 or len(ri) == 0:
-                return pd.DataFrame(columns=["a", "b", "cosine"])
-            sims = unit[li] @ unit[ri].T
-            ai, bi = np.nonzero(sims >= threshold)
-            a, b = ids[li[ai]], ids[ri[bi]]
-            cos = sims[ai, bi]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame({"a": lo, "b": hi, "cosine": cos})
-
-    raw = rep.groupBy("band", "bucket", "lo", "hi").applyInPandas(
-        pairs, schema=schema)
+    raw = _block_paired_pairs(bucketed, ["band", "bucket"], threshold,
+                              _unit_cosines, id_col, vec_col,
+                              max_bucket).select("a", "b", "cosine")
     if num_bands == 1:
         return raw
     # same pair found in several bands: cosine is a pure function of the

@@ -5,9 +5,9 @@ completes the build-once / query-many lifecycle of
 A ``foreachBatch`` processor against the bucket-partitioned parquet
 index. Per micro-batch:
 
-  1. assign each new vector its bucket with the SAME rule the index was
-     built with (read from the ``_meta.json`` sidecar — plane family,
-     seed, dim), so queries keep pruning correctly;
+  1. assign each new vector its bucket through the build's own
+     ``ann_index.assign_lsh_buckets`` and the ``_meta.json`` sidecar
+     (plane family, seed, dim), so queries keep pruning correctly;
   2. append ``partitionBy(bucket)`` — the same row schema the batch
      build writes, so readers never face schema drift.
 
@@ -33,8 +33,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from duke_spark.operators.ann_index import DATA_DIR, _read_meta
-from duke_spark.operators.similarity import coord_sign_bucket, lsh_bucket_ids
+from duke_spark.operators.ann_index import (DATA_DIR, _read_meta,
+                                            assign_lsh_buckets)
 from duke_spark.streaming.epochs import recover, swap_in
 
 
@@ -49,20 +49,11 @@ class StreamingAnnIndexWriter:
             raise ValueError("streaming append currently supports LSH "
                              f"indexes, not {self.meta['kind']!r}")
 
-    def _assign(self, batch: DataFrame) -> DataFrame:
-        m = self.meta
-        base = batch.select(m["id_col"], m["vec_col"])
-        if m["planes"] == "coord":
-            return base.withColumn(
-                "bucket", coord_sign_bucket(m["vec_col"], m["num_planes"]))
-        return lsh_bucket_ids(base, m["dim"], m["num_planes"], m["seed"],
-                              m["vec_col"])
-
     def process(self, batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
         recover(self.data_dir)
-        (self._assign(batch)
+        (assign_lsh_buckets(batch, self.meta)
          .write.mode("append").partitionBy("bucket").parquet(self.data_dir))
 
     def compact(self, spark: SparkSession) -> int:

@@ -9,7 +9,8 @@ a persisted bucket table:
 
   per micro-batch (inside foreachBatch; the source offsets are
   checkpointed):
-    1. batch docs → MinHash signatures → (band_idx, band_hash) rows;
+    1. batch docs → MinHash signatures → (band_idx, band_hash) rows
+       (``dedup.signature_bands``, the batch path's band rule);
     2. candidates = batch bands ⋈ stored bucket table, read as every
        epoch except this one (the ``streaming.epochs`` protocol): a
        replayed epoch never collides with the bands it wrote before a
@@ -60,23 +61,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duke_spark.operators.dedup import minhash_signatures, near_dup_filter
+from duke_spark.operators.dedup import (minhash_signatures, near_dup_filter,
+                                       signature_bands)
 from duke_spark.streaming.epochs import EpochDirs
-
-
-def _bands(sigs: DataFrame, bands: int, id_col: str) -> DataFrame:
-    rows_per_band = (F.size("signature") / F.lit(bands)).cast("int")
-    return sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    F.slice(F.col("signature"),
-                            (b * rows_per_band + F.lit(1)).cast("int"),
-                            rows_per_band).cast("string"),
-                    b))
-        ).alias("band_idx", "band_hash"))
 
 
 def _sig_agreement(a, b):
@@ -124,8 +111,9 @@ class StreamingNearDupFilter:
         survivors = spark.read.parquet(self.survivors.path)
         sigs = minhash_signatures(survivors, self.text_col, self.id_col,
                                   self.num_hashes).persist()
-        self.band_state.compact(_bands(sigs, self.bands, self.id_col),
-                                partition_by="band_idx")
+        self.band_state.compact(
+            signature_bands(sigs, self.bands, self.id_col),
+            partition_by="band_idx")
         if self.verify:
             self.sig_state.compact(sigs)
         sigs.unpersist()
@@ -178,7 +166,7 @@ class StreamingNearDupFilter:
             self.bands, jaccard_threshold=self.jaccard_threshold).persist()
         sigs = minhash_signatures(local, self.text_col, self.id_col,
                                   self.num_hashes).persist()
-        my_bands = _bands(sigs, self.bands, self.id_col).persist()
+        my_bands = signature_bands(sigs, self.bands, self.id_col).persist()
         # 2. drop anything colliding with history. localCheckpoint
         # BEFORE writing: writing to a path invalidates every cached plan
         # that scans it, so the three writes below would each re-run the

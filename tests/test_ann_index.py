@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from duke_spark.operators.ann_index import (build_ivf_index, build_lsh_index,
+from duke_spark.operators.ann_index import (_lsh_probe_buckets,
+                                            build_ivf_index, build_lsh_index,
                                             open_index, query_ivf_index,
                                             query_lsh_index)
 from duke_spark.operators.similarity import cosine_topk
@@ -111,15 +112,11 @@ def test_ivf_partial_probe_prunes_and_recalls(spark, emb, emb_pdf,
     assert {20, 21} <= got  # query's own cluster holds the planted twin
 
 
-def test_streaming_append_matches_batch_build(spark, emb_pdf, tmp_path,
-                                              emb):
+def _append_matches_batch_build(spark, emb_pdf, emb, tmp_path, planes):
     """Incremental ingest (streaming/ann_stream.py): build from the first
     half, stream the second half in two micro-batches (one replayed),
     then query — results must equal a batch index built over the full
     corpus, and the replayed epoch must not distort top-k."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from duke_spark.streaming.ann_stream import StreamingAnnIndexWriter
 
     schema = T.StructType([
@@ -130,16 +127,21 @@ def test_streaming_append_matches_batch_build(spark, emb_pdf, tmp_path,
     def sdf(pdf: pd.DataFrame):
         return spark.createDataFrame(pdf.reset_index(drop=True), schema)
 
+    kw = dict(dim=DIM, num_planes=5, seed=7, planes=planes)
     inc_path = str(tmp_path / "inc")
-    build_lsh_index(sdf(emb_pdf.iloc[:150]), inc_path, dim=DIM,
-                    num_planes=5, seed=7)
+    build_lsh_index(sdf(emb_pdf.iloc[:150]), inc_path, **kw)
     writer = StreamingAnnIndexWriter(inc_path)
     writer.process(sdf(emb_pdf.iloc[150:220]), epoch_id=0)
     writer.process(sdf(emb_pdf.iloc[220:]), epoch_id=1)
     writer.process(sdf(emb_pdf.iloc[220:]), epoch_id=1)   # epoch REPLAY
 
     full_path = str(tmp_path / "full")
-    build_lsh_index(emb, full_path, dim=DIM, num_planes=5, seed=7)
+    build_lsh_index(emb, full_path, **kw)
+    key = ["vec_id", "bucket"]
+    assert (open_index(spark, inc_path).select(*key).distinct()
+            .orderBy(*key).collect()
+            == open_index(spark, full_path).select(*key)
+            .orderBy(*key).collect())   # appends land where builds do
 
     q = emb_pdf.iloc[20]["embedding"]
     got = query_lsh_index(spark, inc_path, q, k=8, hamming=1).toPandas()
@@ -151,3 +153,37 @@ def test_streaming_append_matches_batch_build(spark, emb_pdf, tmp_path,
     assert n == N
     after = query_lsh_index(spark, inc_path, q, k=8, hamming=1).toPandas()
     assert list(after["vec_id"]) == list(exp["vec_id"])
+
+
+def test_streaming_append_matches_batch_build(spark, emb_pdf, tmp_path,
+                                              emb):
+    _append_matches_batch_build(spark, emb_pdf, emb, tmp_path, "gaussian")
+
+
+def test_streaming_append_matches_batch_build_coord(spark, emb_pdf, tmp_path,
+                                                    emb):
+    _append_matches_batch_build(spark, emb_pdf, emb, tmp_path, "coord")
+
+
+@pytest.mark.parametrize("planes", ["coord", "gaussian"])
+def test_probe_bucket_equals_stored_bucket(spark, emb_pdf, tmp_path, planes):
+    """The data-side and query-side bucket rules agree: every stored
+    vector's hamming-0 probe is exactly the bucket it was written to —
+    including a vector with -0.0 coordinates, which both rules read as
+    a non-negative sign."""
+    vecs = emb_pdf["embedding"].to_list()
+    vecs[0] = [-0.0, 0.0, -0.0] + list(vecs[0][3:])
+    pdf = pd.DataFrame({"vec_id": emb_pdf["vec_id"], "embedding": vecs})
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.FloatType())),
+    ])
+    path = str(tmp_path / planes)
+    meta = build_lsh_index(spark.createDataFrame(pdf, schema), path,
+                           dim=DIM, num_planes=4, planes=planes)
+    idx = open_index(spark, path).toPandas()
+    assert len(idx) == N
+    for vec, bucket in zip(idx["embedding"], idx["bucket"]):
+        assert _lsh_probe_buckets(vec, meta, hamming=0) == [bucket]
+    if planes == "coord":   # -0.0 is a set bit on both sides
+        assert idx.loc[idx["vec_id"] == 0, "bucket"].item() & 0b111 == 0b111

@@ -4,8 +4,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from duke_spark.operators.dedup import (exact_dedup, hash64,
-                                        lsh_candidate_pairs,
+from duke_spark.operators.dedup import (exact_dedup, lsh_candidate_pairs,
                                         minhash_signatures,
                                         ngram_jaccard_pairs, simhash64,
                                         with_shingles)
@@ -111,12 +110,6 @@ def test_minhash_lsh_md5_pairs(spark, docs):
     got = set(map(tuple, pairs[["a", "b"]].itertuples(index=False)))
     assert (0, 1) in got
     assert all(a < b for a, b in got)
-
-
-def test_hash64_stable():
-    assert hash64("spark") == hash64("spark")
-    assert hash64("spark") != hash64("spork")
-    assert 0 <= hash64("x") < 2 ** 64
 
 
 def test_near_dup_filter_keeps_lowest_id(spark, docs):

@@ -115,28 +115,32 @@ def test_near_dups_capped_equals_uncapped(spark, emb):
         cap.sort_values(key).reset_index(drop=True))
 
 
+def _pair_task_sizes(rows, keys, cap):
+    """(largest bucket, largest pair task) of the block-paired join over
+    ``rows``: a probe cosine scores every pair with its task's row
+    count, so the join's own output reports its group sizes."""
+    from duke_spark.operators.similarity import _block_paired_pairs
+
+    def task_rows(x, y=None):
+        m = len(x) if y is None else len(y)
+        return np.full((len(x), m), float(len(x) + (0 if y is None else m)))
+
+    out = _block_paired_pairs(rows, keys, 0.0, task_rows, "vec_id",
+                              "embedding", cap)
+    biggest = rows.groupBy(*keys).count().agg(F.max("count")).head()[0]
+    return biggest, out.agg(F.max("cosine")).head()[0]
+
+
 def test_near_dups_group_sizes_bounded(spark, emb):
     """On a skewed bucketing (2 planes → ~N/4 per bucket) no pair task
     sees more than ~2·max_bucket rows."""
     from duke_spark.operators.similarity import _band_buckets
     cap = 13
     bucketed = _band_buckets(emb, DIM, 2, 7, 1, "embedding", "vec_id")
-    counts = (bucketed.groupBy("band", "bucket")
-              .agg(F.count(F.lit(1)).alias("cnt")))
-    sized = (bucketed.join(F.broadcast(counts), ["band", "bucket"])
-             .withColumn("nb", F.ceil(F.col("cnt") / cap).cast("int"))
-             .withColumn("blk", F.pmod(F.xxhash64(F.col("vec_id")),
-                                       F.col("nb")).cast("int")))
-    rep = (sized.select(
-        "vec_id", "band", "bucket", "blk",
-        F.explode(F.sequence(F.lit(0), F.col("nb") - 1)).alias("j"))
-        .withColumn("lo", F.least("blk", "j"))
-        .withColumn("hi", F.greatest("blk", "j")))
-    group_sizes = (rep.groupBy("band", "bucket", "lo", "hi").count()
-                   .toPandas()["count"])
+    biggest, task = _pair_task_sizes(bucketed, ["band", "bucket"], cap)
     # hash-split blocks wobble around cnt/nb; 3x the cap bounds the tail
-    assert group_sizes.max() <= 3 * cap
-    assert len(group_sizes) > 4  # the fat buckets really did split
+    assert biggest > 3 * cap   # the fat buckets really did split
+    assert task <= 3 * cap
 
 
 def test_near_dups_band_or_improves_recall(spark):
@@ -259,22 +263,11 @@ def test_cosine_pairs_group_sizes_bounded(spark, emb):
     block-pair groups instead of one quadratic task."""
     from duke_spark.operators.similarity import coord_sign_bucket
     cap = 13
-    b = emb.select("vec_id", coord_sign_bucket("embedding", 2)
+    b = emb.select("vec_id", "embedding", coord_sign_bucket("embedding", 2)
                    .alias("bucket"))
-    counts = b.groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))
-    sized = (b.join(F.broadcast(counts), "bucket")
-             .withColumn("nb", F.ceil(F.col("cnt") / cap).cast("int"))
-             .withColumn("blk", F.pmod(F.xxhash64(F.col("vec_id")),
-                                       F.col("nb")).cast("int")))
-    rep = (sized.select(
-        "vec_id", "bucket", "blk",
-        F.explode(F.sequence(F.lit(0), F.col("nb") - 1)).alias("j"))
-        .withColumn("lo", F.least("blk", "j"))
-        .withColumn("hi", F.greatest("blk", "j")))
-    group_sizes = (rep.groupBy("bucket", "lo", "hi").count()
-                   .toPandas()["count"])
-    assert group_sizes.max() <= 3 * cap
-    assert len(group_sizes) > 4  # the fat buckets really did split
+    biggest, task = _pair_task_sizes(b, ["bucket"], cap)
+    assert biggest > 3 * cap   # the fat buckets really did split
+    assert task <= 3 * cap
 
 
 def test_cosine_pairs_new_col_is_exact_delta(spark, emb, emb_pdf):
@@ -318,3 +311,40 @@ def test_ivf_assignment_deterministic(spark, emb):
     b = ivf_assign(emb.repartition(5), c1).toPandas() \
         .set_index("vec_id")["cluster"]
     assert a.sort_index().equals(b.sort_index())
+
+
+def test_band_zero_is_lsh_bucket(spark, emb):
+    """Band 0 of the multi-band assignment is the single-band bucket of
+    the same seed (later bands use seed+t)."""
+    from duke_spark.operators.similarity import _band_buckets
+    bands = (_band_buckets(emb, DIM, 6, 11, 3, "embedding", "vec_id")
+             .filter(F.col("band") == 0).select("vec_id", "bucket")
+             .toPandas().sort_values("vec_id").reset_index(drop=True))
+    single = (lsh_bucket_ids(emb, DIM, num_planes=6, seed=11)
+              .select("vec_id", "bucket").toPandas()
+              .sort_values("vec_id").reset_index(drop=True))
+    assert len(bands) == N
+    pd.testing.assert_frame_equal(bands, single)
+
+
+def test_one_lsh_layer():
+    """Each LSH rule has one home: the streaming writers carry no
+    plane-family branch, plane sampling or band hashing of their own,
+    and the Gaussian planes are drawn in ``hyperplane_buckets`` only."""
+    import inspect
+    import pathlib
+
+    from duke_spark.operators import similarity
+    root = pathlib.Path(similarity.__file__).resolve().parents[1]
+    for name in ("ann_stream.py", "neardup_stream.py"):
+        src = (root / "streaming" / name).read_text()
+        for tok in ('"coord"', "standard_normal", "posexplode"):
+            assert tok not in src, (name, tok)
+    ops = [(root / "operators" / n).read_text()
+           for n in ("similarity.py", "ann_index.py")]
+    assert sum(s.count("standard_normal(") for s in ops) == 1
+    assert "standard_normal(" in inspect.getsource(
+        similarity.hyperplane_buckets)
+    # one block-paired join and one IVF probe
+    assert ops[0].count(".applyInPandas(") == 1
+    assert sum(s.count("argsort(-(") for s in ops) == 1

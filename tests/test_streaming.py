@@ -84,6 +84,26 @@ def test_turn_rate_windows_streaming(spark, stream_dirs, tiny_transcripts_pdf,
     assert got == want
 
 
+def test_approx_count_distinct_tracks_exact(spark):
+    """HLL sketch cardinality (the 10^12-row path) lands within its rsd
+    bound of exact countDistinct."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(pd.DataFrame({
+        "g": ["a"] * 5000 + ["b"] * 5000,
+        "u": list(range(1000)) * 5 + list(range(300)) * 10
+        + list(range(2000, 4000)),
+    }))
+    got = (df.groupBy("g")
+           .agg(F.countDistinct("u").alias("exact"),
+                F.approx_count_distinct("u", 0.02).alias("approx"))
+           .toPandas().set_index("g"))
+    for g in ("a", "b"):
+        exact, approx = got.loc[g, "exact"], got.loc[g, "approx"]
+        assert abs(approx - exact) / exact < 0.06   # 3x rsd margin
+
+
 def test_stateful_running_topics(spark, ctx_bc, stream_dirs,
                                  tiny_transcripts_pdf, tiny_transcripts):
     """applyInPandasWithState: after streaming the input in two chunks,
