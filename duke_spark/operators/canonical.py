@@ -13,7 +13,8 @@ means and folds them up the tree in one ``kernel.tree.fold_scores`` call
 (``Duke/dataset_descriptor.py:99-107`` → ``Duke/class_tree.py:63-91``),
 so only (key, type) rows leave the workers. Rows with a NULL key or
 mention name no key and are dropped before the shuffle, as pandas
-``groupby`` drops them.
+``groupby`` drops them. The chunked scorer, ``weighted_score_sums``, also
+scores the Duke cells of ``operators.describe``.
 """
 
 from __future__ import annotations
@@ -29,21 +30,39 @@ from duke_spark.kernel.tree import fold_scores
 from duke_spark.kernel.vectors import score_groups
 from duke_spark.operators.linking import LinkContext
 
-# Mentions scored per ``score_groups`` call (the linker's Arrow batch), so
-# a hot key or a batch of many keys holds at most this many C-float rows.
+# Word groups scored per ``score_groups`` call (the linker's Arrow batch),
+# so a hot key, a batch of many keys or a conversation's Duke cells hold at
+# most this many C-float rows.
 _CHUNK = 10_000
+
+
+def weighted_score_sums(ctx: LinkContext, owner: np.ndarray,
+                        cells: np.ndarray, w: np.ndarray,
+                        n_owners: int) -> np.ndarray:
+    """``n_owners``×C count-weighted class-score sums of ``cells`` (word
+    groups joined by single spaces) with counts ``w`` and non-decreasing
+    ``owner`` rows. Each chunk of ``_CHUNK`` cells scores its distinct
+    cells once and adds one ``reduceat`` over its owner runs."""
+    sums = np.zeros((n_owners, len(ctx.classes)))
+    for lo in range(0, len(cells), _CHUNK):
+        hi = lo + _CHUNK
+        codes, uniq = pd.factorize(cells[lo:hi])
+        scores = score_groups(ctx.embedding, [c.split(" ") for c in uniq],
+                              ctx.class_matrix)
+        rows = scores[codes]
+        rows *= w[lo:hi, None]
+        own = owner[lo:hi]
+        starts = np.flatnonzero(np.r_[True, own[1:] != own[:-1]])
+        sums[own[starts]] += np.add.reduceat(rows, starts, axis=0)
+    return sums
 
 
 def _key_means(mentions: DataFrame, ctx_bc, key: str, finish,
                schema: T.StructType) -> DataFrame:
     """Per-key mean class-score vectors, handed to ``finish(pdf, means,
     ctx)`` one Arrow batch (an N×C matrix; ``pdf`` holds ``key`` and
-    ``n_mentions``) at a time.
-
-    A batch's flattened (mention, count) lists are scored in chunks of
-    ``_CHUNK``: each chunk factorizes its mentions, scores each distinct
-    one once, and adds its count-weighted per-key sums (one ``reduceat``
-    over the key runs) into an N×C accumulator."""
+    ``n_mentions``) at a time, from ``weighted_score_sums`` over the
+    batch's flattened (mention, count) lists."""
     grouped = (mentions.select(key, "mention").dropna()
                .groupBy(key, "mention").agg(F.count(F.lit(1)).alias("cnt"))
                .groupBy(key).agg(F.collect_list("mention").alias("ms"),
@@ -58,18 +77,7 @@ def _key_means(mentions: DataFrame, ctx_bc, key: str, finish,
             owner = np.repeat(np.arange(len(pdf)), pdf["ms"].map(len))
             ms = np.concatenate(pdf.pop("ms").to_numpy())
             w = np.concatenate(pdf.pop("cnts").to_numpy()).astype(np.float64)
-            sums = np.zeros((len(pdf), len(ctx.classes)))
-            for lo in range(0, len(ms), _CHUNK):
-                hi = lo + _CHUNK
-                codes, uniq = pd.factorize(ms[lo:hi])
-                scores = score_groups(ctx.embedding,
-                                      [m.split(" ") for m in uniq],
-                                      ctx.class_matrix)
-                rows = scores[codes]
-                rows *= w[lo:hi, None]
-                own = owner[lo:hi]
-                starts = np.flatnonzero(np.r_[True, own[1:] != own[:-1]])
-                sums[own[starts]] += np.add.reduceat(rows, starts, axis=0)
+            sums = weighted_score_sums(ctx, owner, ms, w, len(pdf))
             yield finish(pdf, sums / pdf["n_mentions"].to_numpy()[:, None],
                          ctx)
 

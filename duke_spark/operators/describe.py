@@ -15,19 +15,17 @@ Per source: row agg = mean of cell score vectors
 then source agg = mean across sources (``:110-114``); argmax → pluralized
 summary sentence (``:82-88``).
 
-Physical shape: one narrow ``mapInPandas`` computes per-(conv, role)
-PARTIAL sums of cell score vectors (so shuffle volume is
-O(convs × roles × C), never O(turns × C)); one ``groupBy(conv_id)``
-``applyInPandas`` finalizes: merge partials, build + score the headers
-source, fold the stacked source vectors up the tree in one
-``kernel.tree.fold_scores`` call, mean across sources, argmax. The tree
-fold is a pure function of the broadcast context, so nothing but
-(conv_id, description) rows reach the driver at any scale.
+Physical shape: no score vector crosses a shuffle. Scoring is linear, so
+a source's mean over its cells is the count-weighted mean over its
+distinct raw cells, and ``_source_rows`` shuffles only those strings and
+counts. Per conversation, ONE ``mapInPandas`` after a ``collect_list``
+scores each batch's distinct cells once (``canonical.weighted_score_sums``),
+folds every source up the tree in one ``kernel.tree.fold_scores`` call,
+means across sources and takes the argmax; ``describe_dataset`` adds up
+per-batch source sums on the driver.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -35,16 +33,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from duke_spark.kernel.text import pluralize, tokenize_series
+from duke_spark.kernel.text import normalize_text_series, pluralize
 from duke_spark.kernel.tree import fold_scores
-from duke_spark.kernel.vectors import score_groups
-
-_PARTIAL_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("source", T.StringType()),
-    T.StructField("sum_scores", T.ArrayType(T.DoubleType())),
-    T.StructField("n_cells", T.LongType()),
-])
+from duke_spark.operators.canonical import _CHUNK, weighted_score_sums
 
 DESCRIBE_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -54,46 +45,47 @@ DESCRIBE_SCHEMA = T.StructType([
 ])
 
 
-def _cell_scores(texts: pd.Series, ctx) -> tuple[np.ndarray, np.ndarray]:
-    """(kept_row_positions, score_matrix) for whole-turn cells passing the
-    all-or-nothing OOV rule. Vectorized: tokenize, per-row vocab test,
-    score survivors in one ``score_groups`` call."""
-    toks = tokenize_series(texts)
-    kept = np.flatnonzero(toks.map(ctx.embedding.in_vocab).to_numpy())
-    return kept, score_groups(ctx.embedding, toks.iloc[kept].to_list(),
-                              ctx.class_matrix)
+def _source_rows(transcripts: DataFrame, keys: list) -> DataFrame:
+    """Duke's sources as (keys…, hdr, src, cell, w) string-and-count rows:
+    each distinct turn text under its role (``src``) with ``w`` = its turn
+    count, plus each distinct role and tool name under the headers source
+    (``hdr``) with ``w`` = 1 — a name that is both counts twice, as the
+    reference lists it twice (``Duke/dataset.py:63-69``). Rows with a NULL
+    key, role, text or name are dropped, as pandas ``groupby`` drops them."""
+    rows = transcripts.select(*keys, F.lit(False).alias("hdr"),
+                              F.col("role").alias("src"),
+                              F.col("text").alias("cell"))
+    for name in ("role", "tool"):
+        rows = rows.unionByName(transcripts.select(
+            *keys, F.lit(True).alias("hdr"), F.lit(name).alias("src"),
+            F.col(name).alias("cell")))
+    hdr = F.col("hdr")
+    return (rows.dropna().groupBy(*keys, "hdr", "src", "cell").count()
+            .select(*keys, "hdr",
+                    F.when(hdr, "").otherwise(F.col("src")).alias("src"),
+                    "cell", F.when(hdr, 1).otherwise(F.col("count"))
+                    .alias("w")))
 
 
-def source_score_partials(transcripts: DataFrame, ctx_bc) -> DataFrame:
-    """Per-Arrow-batch partial sums of whole-turn score vectors keyed by
-    (conv_id, role) — the map-side combine of Duke's row aggregation."""
-    pruned = (transcripts.select("conv_id", "role", "text")
-              .filter(F.col("text").isNotNull()))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = ctx_bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.reset_index(drop=True)
-            kept, scores = _cell_scores(pdf["text"], ctx)
-            if len(kept) == 0:
-                continue
-            key = pd.MultiIndex.from_arrays(
-                [pdf["conv_id"].to_numpy()[kept],
-                 pdf["role"].to_numpy()[kept]])
-            codes, uniq = pd.factorize(key)
-            sums = np.zeros((len(uniq), scores.shape[1]))
-            np.add.at(sums, codes, scores)
-            counts = np.bincount(codes, minlength=len(uniq))
-            yield pd.DataFrame({
-                "conv_id": [c for c, _ in uniq],
-                "source": [s for _, s in uniq],
-                "sum_scores": list(sums),
-                "n_cells": counts.astype(np.int64),
-            })
-
-    return pruned.mapInPandas(run, schema=_PARTIAL_SCHEMA)
+def _source_sums(ctx, keys: list, cells: np.ndarray, w: np.ndarray):
+    """(sources, sums, weights) of one batch's source rows: ``keys``
+    (arrays aligned with ``cells``) name each cell's source, and
+    ``sources`` is their sorted MultiIndex. Each distinct raw cell is
+    normalized once; a cell with any OOV token is dropped whole
+    (``Duke/embedding.py:41-44``)."""
+    codes, raw = pd.factorize(cells)
+    norm = normalize_text_series(pd.Series(raw, dtype=object))
+    ok = norm.str.split(" ").map(ctx.embedding.in_vocab).to_numpy()[codes]
+    cell_src = pd.MultiIndex.from_arrays([k[ok] for k in keys])
+    sources = cell_src.unique().sort_values()
+    owner = sources.get_indexer(cell_src)
+    order = np.argsort(owner, kind="stable")
+    owner, w = owner[order], w[ok][order].astype(np.float64)
+    sums = weighted_score_sums(ctx, owner,
+                               norm.to_numpy()[codes[ok][order]], w,
+                               len(sources))
+    return sources, sums, np.bincount(owner, weights=w,
+                                      minlength=len(sources))
 
 
 def describe_dataset(transcripts: DataFrame, ctx_bc, top_n: int = 10) -> dict:
@@ -102,9 +94,7 @@ def describe_dataset(transcripts: DataFrame, ctx_bc, top_n: int = 10) -> dict:
     headers source; returns {"description", "top"} exactly like
     ``DatasetDescriptor.get_dataset_description`` + ``get_top_n_words``.
 
-    Distributed shape: the per-batch partials (B3 kernel) are reduced to
-    one (source → mean vector) map with a single hash-aggregate shuffle
-    keyed by source (≤ #roles keys); the per-source vectors fold on the
+    The per-source mean vectors (``dataset_source_means``) fold on the
     driver like the reference. Top-k sort semantics match
     ``Duke/dataset_descriptor.py:91-97`` (score desc, stable)."""
     per_source = dataset_source_means(transcripts, ctx_bc)
@@ -116,30 +106,25 @@ def dataset_source_means(transcripts: DataFrame, ctx_bc) -> list:
     """Per-source mean class-score vectors for the whole table (headers
     source first, then roles sorted) — the embed-once intermediate shared
     by ``describe_dataset`` and the heuristic config grid
-    (``Duke/evaluate.py:78-91`` reuse pattern)."""
-    partials = source_score_partials(transcripts, ctx_bc)
-    # one hash-agg shuffle keyed by source (≤ #roles keys) reduces the
-    # per-batch partials; only (source, C-float sum, n) rows are collected
-    rows = (partials.groupBy("source")
-            .applyInPandas(_reduce_source_partials,
-                           schema=_PARTIAL_SCHEMA).collect())
-    # headers source: roles ∪ tools present anywhere (Duke/dataset.py:63-69)
-    hdr = (transcripts.agg(
-        F.array_sort(F.collect_set("role")).alias("roles"),
-        F.array_sort(F.collect_set("tool")).alias("tools")).collect()[0])
-    per_source = _headers_source(list(hdr["roles"]) + list(hdr["tools"]),
-                                 ctx_bc.value)
-    for r in sorted(rows, key=lambda r: r["source"]):
-        per_source.append(np.asarray(r["sum_scores"]) / r["n_cells"])
-    return per_source
+    (``Duke/evaluate.py:78-91`` reuse pattern). Each Arrow batch yields
+    its per-source sums; the driver adds them up."""
+    def run(batches):
+        ctx = ctx_bc.value
+        for pdf in batches:
+            sources, sums, n = _source_sums(
+                ctx, [~pdf["hdr"].to_numpy(bool), pdf["src"].to_numpy()],
+                pdf["cell"].to_numpy(), pdf["w"].to_numpy())
+            if len(sources):  # an empty list<double> column fails in Arrow
+                yield pd.DataFrame({
+                    "is_role": sources.get_level_values(0),
+                    "src": sources.get_level_values(1),
+                    "sums": list(sums), "w": n})
 
-
-def _headers_source(names: list, ctx) -> list:
-    """The synthetic headers source (``Duke/dataset.py:63-69``): role and
-    tool names as normalized word groups under the OOV rule → ``[mean
-    class-score vector]``, or ``[]`` when none survives."""
-    kept, scores = _cell_scores(pd.Series(names, dtype=object), ctx)
-    return [scores.mean(axis=0)] if len(kept) else []
+    per_batch = (_source_rows(transcripts, []).mapInPandas(
+        run, "is_role boolean, src string, sums array<double>, w double")
+        .toPandas().groupby(["is_role", "src"], sort=True))
+    return [np.sum(np.stack(g["sums"].to_list()), axis=0) / g["w"].sum()
+            for _, g in per_batch]
 
 
 def _fold_and_describe(per_source: list, ctx, agg: tuple,
@@ -172,47 +157,43 @@ def heuristic_top_words(transcripts: DataFrame, ctx_bc,
     return pd.DataFrame(rows, columns=["config", "rank", "class", "score"])
 
 
-def _reduce_source_partials(pdf: pd.DataFrame) -> pd.DataFrame:
-    sums = np.sum(np.stack(pdf["sum_scores"].to_list()), axis=0)
-    return pd.DataFrame({
-        "conv_id": ["*"], "source": [pdf["source"].iloc[0]],
-        "sum_scores": [sums.tolist()],
-        "n_cells": [int(pdf["n_cells"].sum())],
-    })
+def _describe_batch(batch: pd.DataFrame, ctx):
+    """Yields the DESCRIBE_SCHEMA rows of one Arrow batch of collected
+    conversations, in slices of whole conversations of about ``_CHUNK``
+    cells, so the per-source matrices stay as small as the scored chunks."""
+    ends = np.cumsum(batch["w"].map(len).to_numpy())
+    for _, pdf in batch.groupby(ends // _CHUNK, sort=False):
+        hdr, src, cell, w = (np.concatenate(pdf[c].to_numpy())
+                             for c in ("hdr", "src", "cell", "w"))
+        conv = np.repeat(np.arange(len(pdf)), pdf["w"].map(len))
+        sources, sums, n = _source_sums(ctx, [conv, ~hdr, src], cell, w)
+        if not len(sources):
+            continue
+        folded = fold_scores(sums / n[:, None], ctx.fold_levels)
+        # sources sort by conversation: one reduceat over its runs
+        own = sources.get_level_values(0).to_numpy()
+        starts = np.flatnonzero(np.r_[True, own[1:] != own[:-1]])
+        n_src = np.diff(starts, append=len(own))
+        final = np.add.reduceat(folded, starts, axis=0) / n_src[:, None]
+        top = [ctx.classes[i] for i in final.argmax(axis=1)]
+        yield pd.DataFrame({
+            "conv_id": pdf["conv_id"].to_numpy()[own[starts]],
+            "top_class": top,
+            "description": [f"This dataset is about {pluralize(t)}."
+                            for t in top],
+            "n_sources": n_src.astype(np.int32),
+        })
 
 
 def describe_conversations_duke(transcripts: DataFrame, ctx_bc) -> DataFrame:
     """Full Duke EP1 semantics per conversation (see module docstring)."""
-    partials = source_score_partials(transcripts, ctx_bc)
-    headers = (transcripts
-               .groupBy("conv_id")
-               .agg(F.collect_set("role").alias("roles"),
-                    F.collect_set("tool").alias("tools")))
-    joined = partials.join(headers, "conv_id")
+    grouped = (_source_rows(transcripts, ["conv_id"]).groupBy("conv_id")
+               .agg(*[F.collect_list(c).alias(c)
+                      for c in ("hdr", "src", "cell", "w")]))
 
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(batches):
         ctx = ctx_bc.value
-        conv_id = pdf["conv_id"].iloc[0]
-        # headers source: roles sorted + tools sorted
-        per_source = _headers_source(sorted(pdf["roles"].iloc[0])
-                                     + sorted(pdf["tools"].iloc[0]), ctx)
-        # role sources, sorted like the oracle's groupby(role, sort=True)
-        agg = (pdf.groupby("source", sort=True)
-               .agg(sum_scores=("sum_scores",
-                                lambda s: np.sum(np.stack(s.to_list()),
-                                                 axis=0)),
-                    n=("n_cells", "sum")))
-        for _, row in agg.iterrows():
-            per_source.append(np.asarray(row["sum_scores"]) / row["n"])
-        final = fold_scores(np.stack(per_source),
-                            ctx.fold_levels).mean(axis=0)
-        top = ctx.classes[int(np.argmax(final))]
-        return pd.DataFrame({
-            "conv_id": [conv_id],
-            "top_class": [top],
-            "description": [f"This dataset is about {pluralize(top)}."],
-            "n_sources": [len(per_source)],
-        })
+        for batch in batches:
+            yield from _describe_batch(batch, ctx)
 
-    return joined.groupBy("conv_id").applyInPandas(
-        finalize, schema=DESCRIBE_SCHEMA)
+    return grouped.mapInPandas(run, schema=DESCRIBE_SCHEMA)

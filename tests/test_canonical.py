@@ -12,6 +12,8 @@ from duke_spark.operators import canonical
 from duke_spark.operators.canonical import (canonical_types_df,
                                             conversation_class_scores,
                                             describe_conversations)
+from duke_spark.operators.describe import (dataset_source_means,
+                                           describe_conversations_duke)
 from duke_spark.operators.mentions import linked_mentions
 
 
@@ -140,22 +142,36 @@ def _plan_nodes(plan, above=True, out=None):
     return out
 
 
-def test_one_key_means_plan(spark, tiny_transcripts, ctx_bc):
-    """Entity types and conversation topics run one per-key plan: no
-    grouped-map Python stage, no score vector on either side of a shuffle
-    (a partial ``collect_list`` hides its element type in a binary buffer,
-    so the map side is checked too), and exactly one ``MapInPandas`` after
-    the last exchange."""
+def _assert_one_key_means_plan(df):
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+    names = [n for n, _, _ in nodes]
+    assert "FlatMapGroupsInPandas" not in names
+    assert any("Exchange" in n for n in names)
+    shuffled = [(n, t) for n, t, above in nodes
+                if not above or "Exchange" in n]
+    assert not [n for n, t in shuffled if "array<double>" in t], nodes
+    assert [n for n, _, above in nodes
+            if above and n == "MapInPandas"] == ["MapInPandas"], nodes
+
+
+def test_one_key_means_plan(spark, tiny_transcripts, ctx_bc, monkeypatch):
+    """Entity types, conversation topics and both Duke describe paths run
+    one per-key plan: no grouped-map Python stage, no score vector on
+    either side of a shuffle (a partial ``collect_list`` hides its element
+    type in a binary buffer, so the map side is checked too), and exactly
+    one ``MapInPandas`` after the last exchange."""
     mentions = linked_mentions(tiny_transcripts, ctx_bc)
     for df in (canonical._entity_types(mentions, ctx_bc),
-               describe_conversations(spark, mentions, ctx_bc)):
+               describe_conversations(spark, mentions, ctx_bc),
+               describe_conversations_duke(tiny_transcripts, ctx_bc)):
         df.collect()
-        nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
-        names = [n for n, _, _ in nodes]
-        assert "FlatMapGroupsInPandas" not in names
-        assert any("Exchange" in n for n in names)
-        shuffled = [(n, t) for n, t, above in nodes
-                    if not above or "Exchange" in n]
-        assert not [n for n, t in shuffled if "array<double>" in t], nodes
-        assert [n for n, _, above in nodes
-                if above and n == "MapInPandas"] == ["MapInPandas"], nodes
+        _assert_one_key_means_plan(df)
+    # the whole-table path collects its per-batch source sums itself
+    collected = []
+    cls = type(tiny_transcripts)
+    to_pandas = cls.toPandas
+    monkeypatch.setattr(cls, "toPandas",
+                        lambda df: collected.append(df) or to_pandas(df))
+    assert dataset_source_means(tiny_transcripts, ctx_bc)
+    assert len(collected) == 1
+    _assert_one_key_means_plan(collected[0])
