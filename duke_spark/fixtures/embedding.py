@@ -61,23 +61,15 @@ def _word_vector(word: str, dim: int) -> np.ndarray:
 
 
 def build_vocab() -> List[str]:
-    seen, vocab = set(), []
-    for w in CLASS_WORDS + CONTENT_WORDS + FILLER_WORDS:
-        if w not in seen:
-            seen.add(w)
-            vocab.append(w)
-    return vocab
+    return list(dict.fromkeys(CLASS_WORDS + CONTENT_WORDS + FILLER_WORDS))
 
 
 def build_embedding(vocab: Sequence[str] | None = None,
                     dim: int = DEFAULT_DIM) -> VocabEmbedding:
-    vocab = list(vocab) if vocab is not None else build_vocab()
-    matrix = np.stack([_word_vector(w, dim) for w in vocab])
-    return VocabEmbedding(vocab, matrix)
+    return VocabEmbedding(*embedding_arrays(vocab, dim))
 
 
 def embedding_arrays(vocab: Sequence[str] | None = None,
                      dim: int = DEFAULT_DIM) -> Tuple[List[str], np.ndarray]:
-    emb = build_embedding(vocab, dim)
-    words = [w for w, _ in sorted(emb.vocab.items(), key=lambda kv: kv[1])]
-    return words, emb.matrix
+    vocab = list(vocab) if vocab is not None else build_vocab()
+    return vocab, np.stack([_word_vector(w, dim) for w in vocab])

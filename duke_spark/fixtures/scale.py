@@ -119,7 +119,7 @@ def scale_arrays(dim: int = SCALE_DIM,
                  seed: int = _SEED) -> Tuple[List[str], np.ndarray, Tree]:
     """(vocab, V×D float32 matrix, 788-node tree) — the broadcast payload.
 
-    ~1.3k words × 1000 dims × 4 B ≈ 5 MB: well under broadcast limits; the
+    646 words × 1000 dims × 4 B ≈ 2.6 MB: well under broadcast limits; the
     real wiki2vec (~GBs) would move via SparkFiles + np.load(mmap) per
     SURVEY §4 item 1.
     """

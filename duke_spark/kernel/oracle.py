@@ -55,8 +55,7 @@ class OracleContext:
         self.embedding = embedding
         self.tree = normalize_class_tree(raw_tree, embedding.in_vocab)
         self.classes: List[str] = list(self.tree.keys())
-        class_groups = [c.split(" ") for c in self.classes]
-        self.class_matrix = embedding.embed_groups(class_groups)
+        self.class_matrix = embedding.embed_groups(self.classes)
 
 
 def extract_mentions(ctx: OracleContext, text: str) -> List[List[str]]:

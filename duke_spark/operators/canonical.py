@@ -37,24 +37,37 @@ _CHUNK = 10_000
 
 
 def weighted_score_sums(ctx: LinkContext, owner: np.ndarray,
-                        cells: np.ndarray, w: np.ndarray,
+                        codes: np.ndarray, ids: np.ndarray, w: np.ndarray,
                         n_owners: int) -> np.ndarray:
-    """``n_owners``×C count-weighted class-score sums of ``cells`` (word
-    groups joined by single spaces) with counts ``w`` and non-decreasing
-    ``owner`` rows. Each chunk of ``_CHUNK`` cells scores its distinct
-    cells once and adds one ``reduceat`` over its owner runs."""
+    """``n_owners``×C count-weighted class-score sums: element i adds
+    ``w[i]`` times the scores of encoded group ``ids[codes[i]]``
+    (``VocabEmbedding.encode``) to row ``owner[i]``, with ``owner``
+    non-decreasing; a code of -1 (a dropped group) raises. Each chunk of
+    ``_CHUNK`` elements scores its distinct groups once, in first-occurrence
+    order, and adds one ``reduceat`` over its owner runs."""
+    if len(codes) and codes.min() < 0:
+        raise KeyError("a word group to score has a word out of vocab")
     sums = np.zeros((n_owners, len(ctx.classes)))
-    for lo in range(0, len(cells), _CHUNK):
+    for lo in range(0, len(codes), _CHUNK):
         hi = lo + _CHUNK
-        codes, uniq = pd.factorize(cells[lo:hi])
-        scores = score_groups(ctx.embedding, [c.split(" ") for c in uniq],
-                              ctx.class_matrix)
-        rows = scores[codes]
+        local, distinct = pd.factorize(codes[lo:hi])
+        rows = score_groups(ctx.embedding, ids[distinct],
+                            ctx.class_matrix)[local]
         rows *= w[lo:hi, None]
         own = owner[lo:hi]
         starts = np.flatnonzero(np.r_[True, own[1:] != own[:-1]])
         sums[own[starts]] += np.add.reduceat(rows, starts, axis=0)
     return sums
+
+
+def encode_cells(ctx: LinkContext, cells: np.ndarray):
+    """(codes, ids) of string cells, each distinct cell encoded once
+    (``VocabEmbedding.encode``): ``codes`` maps each cell to its row of
+    ``ids``, or to -1 when the OOV rule drops it or it is NULL (whose
+    factorize code, -1, reads the appended -1)."""
+    codes, uniq = pd.factorize(cells)
+    ids, kept = ctx.embedding.encode(uniq)
+    return np.append(np.where(kept, np.cumsum(kept) - 1, -1), -1)[codes], ids
 
 
 def _key_means(mentions: DataFrame, ctx_bc, key: str, finish,
@@ -75,9 +88,10 @@ def _key_means(mentions: DataFrame, ctx_bc, key: str, finish,
             if len(pdf) == 0:
                 continue
             owner = np.repeat(np.arange(len(pdf)), pdf["ms"].map(len))
-            ms = np.concatenate(pdf.pop("ms").to_numpy())
+            codes, ids = encode_cells(
+                ctx, np.concatenate(pdf.pop("ms").to_numpy()))
             w = np.concatenate(pdf.pop("cnts").to_numpy()).astype(np.float64)
-            sums = weighted_score_sums(ctx, owner, ms, w, len(pdf))
+            sums = weighted_score_sums(ctx, owner, codes, ids, w, len(pdf))
             yield finish(pdf, sums / pdf["n_mentions"].to_numpy()[:, None],
                          ctx)
 

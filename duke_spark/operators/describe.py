@@ -35,7 +35,8 @@ from pyspark.sql import types as T
 
 from duke_spark.kernel.text import normalize_text_series, pluralize
 from duke_spark.kernel.tree import fold_scores
-from duke_spark.operators.canonical import _CHUNK, weighted_score_sums
+from duke_spark.operators.canonical import (_CHUNK, encode_cells,
+                                            weighted_score_sums)
 
 DESCRIBE_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -71,18 +72,18 @@ def _source_sums(ctx, keys: list, cells: np.ndarray, w: np.ndarray):
     """(sources, sums, weights) of one batch's source rows: ``keys``
     (arrays aligned with ``cells``) name each cell's source, and
     ``sources`` is their sorted MultiIndex. Each distinct raw cell is
-    normalized once; a cell with any OOV token is dropped whole
-    (``Duke/embedding.py:41-44``)."""
+    normalized once and each distinct normalized cell encoded once; a
+    cell with any OOV token is dropped whole (``Duke/embedding.py:41-44``)."""
     codes, raw = pd.factorize(cells)
-    norm = normalize_text_series(pd.Series(raw, dtype=object))
-    ok = norm.str.split(" ").map(ctx.embedding.in_vocab).to_numpy()[codes]
+    groups, ids = encode_cells(ctx, normalize_text_series(
+        pd.Series(raw, dtype=object)).to_numpy())
+    ok = groups[codes] >= 0
     cell_src = pd.MultiIndex.from_arrays([k[ok] for k in keys])
     sources = cell_src.unique().sort_values()
     owner = sources.get_indexer(cell_src)
     order = np.argsort(owner, kind="stable")
     owner, w = owner[order], w[ok][order].astype(np.float64)
-    sums = weighted_score_sums(ctx, owner,
-                               norm.to_numpy()[codes[ok][order]], w,
+    sums = weighted_score_sums(ctx, owner, groups[codes[ok][order]], ids, w,
                                len(sources))
     return sources, sums, np.bincount(owner, weights=w,
                                       minlength=len(sources))

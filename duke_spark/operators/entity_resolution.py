@@ -198,24 +198,18 @@ def resolve_kg_entities(triples: DataFrame, ctx_bc, threshold: float,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            # multi-word labels split into word groups, exactly how the
-            # linker embeds class names (linking.py c.split(" ")) — a
-            # whole multi-word label is never itself a vocab token
-            groups = [lbl[plen:].split(" ") for lbl in pdf["t"]]
-            keep = pd.Series([emb.in_vocab(g) for g in groups],
-                             index=pdf.index)
+            # a multi-word label is one word group, as the linker embeds
+            # class names: never itself a vocab token
+            ids, keep = emb.encode(pdf["t"].str.slice(plen).to_numpy())
             if not keep.any():
                 continue
-            sub = pdf[keep]
-            kept = [g for g, k in zip(groups, keep) if k]
-            vecs = emb.embed_groups(kept)
-            out = {"vec_id": sub["t"].to_numpy(),
-                   "embedding": [[float(x) for x in v] for v in vecs]}
+            out = {"vec_id": pdf["t"].to_numpy()[keep],
+                   "embedding": emb.embed(ids).tolist()}
             if type_guard:
                 # single-occurrence canonicalization of the surface
                 # form itself: score → tree fold → argmax class, one
                 # matrix fold for the whole batch
-                scores = score_groups(emb, kept, ctx.class_matrix)
+                scores = score_groups(emb, ids, ctx.class_matrix)
                 out["ctype"] = [ctx.classes[i] for i in fold_scores(
                     scores, ctx.fold_levels).argmax(axis=1)]
             yield pd.DataFrame(out)

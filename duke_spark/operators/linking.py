@@ -6,9 +6,10 @@ This is the rebuild of the reference's core path — normalize/tokenize
 unit-normed word-group vectors (``Duke/embedding.py:33-34``,
 ``Duke/utils.py:22-23``, ``Duke/dataset_descriptor.py:57``) — expressed
 as ONE pandas function applied per Arrow batch inside ``mapInPandas``.
-All segmentation is pandas-vectorized (explode + cumsum run-ids); the only
-Python-level iteration is the per-word index lookup inside
-``kernel.vectors.score_groups`` (NumPy fromiter, not a row UDF).
+Segmentation runs on NumPy int arrays of vocab ids: the batch's exploded
+tokens are looked up once (``VocabEmbedding.word_ids``, one dict probe per
+token), and the only other Python-level iteration builds one string per
+DISTINCT mention; neither is a row UDF.
 
 ``LinkContext`` is the broadcastable analogue of the reference's
 driver-loaded gensim model + embedded class tree
@@ -30,7 +31,8 @@ import pandas as pd
 from duke_spark.kernel.text import tokenize_series
 from duke_spark.kernel.tree import (Tree, fold_schedule,
                                     normalize_class_tree)
-from duke_spark.kernel.vectors import VocabEmbedding, score_groups
+from duke_spark.kernel.vectors import (VocabEmbedding, pad_groups,
+                                      score_groups)
 
 MAX_MENTION_LEN = 3
 
@@ -47,22 +49,19 @@ class LinkContext:
         self.tree: Tree = normalize_class_tree(raw_tree, emb.in_vocab)
         self.classes: List[str] = list(self.tree.keys())
         self.fold_levels = fold_schedule(self.classes, self.tree)
-        self._class_matrix = emb.embed_groups(
-            [c.split(" ") for c in self.classes])
+        self.class_matrix = emb.embed_groups(self.classes)
         self._embedding: Optional[VocabEmbedding] = emb
-        self._vocab_index: Optional[pd.Index] = None
 
     # keep pickles lean: derived caches rebuilt lazily on the worker
     def __getstate__(self):
         return {"_vocab_list": self._vocab_list, "_matrix": self._matrix,
                 "tree": self.tree, "classes": self.classes,
                 "fold_levels": self.fold_levels,
-                "_class_matrix": self._class_matrix}
+                "class_matrix": self.class_matrix}
 
     def __setstate__(self, state):
         self.__dict__.update(state)
         self._embedding = None
-        self._vocab_index = None
 
     @property
     def embedding(self) -> VocabEmbedding:
@@ -70,97 +69,71 @@ class LinkContext:
             self._embedding = VocabEmbedding(self._vocab_list, self._matrix)
         return self._embedding
 
-    @property
-    def class_matrix(self) -> np.ndarray:
-        return self._class_matrix
 
-    @property
-    def vocab_index(self) -> pd.Index:
-        if self._vocab_index is None:
-            self._vocab_index = pd.Index(self._vocab_list)
-        return self._vocab_index
-
-
-MENTION_COLUMNS = ["conv_id", "turn_idx", "role", "tool", "mention_id",
-                   "mention", "entity", "entity_score"]
+MENTION_DTYPES = {"conv_id": "object", "turn_idx": "int32", "role": "object",
+                  "tool": "object", "mention_id": "int32", "mention": "object",
+                  "entity": "object", "entity_score": "float64"}
 
 
 def link_batch(pdf: pd.DataFrame, ctx: LinkContext) -> pd.DataFrame:
     """Batch kernel: transcript rows → linked-mention rows.
 
-    Fully vectorized segmentation: explode tokens, run-ids via cumsum over
-    in-vocab break points, ≤MAX_MENTION_LEN chunks via integer division,
-    one ``score_groups`` call over the distinct mentions, one argmax.
+    Segmentation runs on vocab ids: one lookup over the exploded tokens,
+    runs of in-vocab tokens split into ≤MAX_MENTION_LEN chunks by integer
+    position, distinct mentions keyed by their id tuple in first-occurrence
+    order, one ``score_groups`` call over them, one argmax.
     """
-    empty = pd.DataFrame({
-        "conv_id": pd.Series(dtype="object"),
-        "turn_idx": pd.Series(dtype="int32"),
-        "role": pd.Series(dtype="object"),
-        "tool": pd.Series(dtype="object"),
-        "mention_id": pd.Series(dtype="int32"),
-        "mention": pd.Series(dtype="object"),
-        "entity": pd.Series(dtype="object"),
-        "entity_score": pd.Series(dtype="float64"),
-    })
+    empty = pd.DataFrame({c: pd.Series(dtype=t)
+                          for c, t in MENTION_DTYPES.items()})
     if len(pdf) == 0:
         return empty
     pdf = pdf.reset_index(drop=True)
-    toks = tokenize_series(pdf["text"])
-    long = toks.explode()
-    f = pd.DataFrame({"row": long.index.to_numpy(),
-                      "tok": long.to_numpy()})
-    f["iv"] = f["tok"].isin(ctx.vocab_index) & (f["tok"] != "")
-    row_change = f["row"] != f["row"].shift()
-    prev_iv = f["iv"].shift(fill_value=False)
-    new_run = f["iv"] & (row_change | ~prev_iv)
-    f["run"] = new_run.cumsum()
-    f = f[f["iv"]]
-    if len(f) == 0:
+    long = tokenize_series(pdf["text"]).explode()
+    row, tok = long.index.to_numpy(), long.to_numpy()
+    wid = ctx.embedding.word_ids(tok)
+    iv = wid >= 0
+    if not iv.any():
         return empty
-    f = f.copy()
-    f["chunk"] = f.groupby("run").cumcount() // MAX_MENTION_LEN
+    # a run of in-vocab tokens starts after an OOV token or a row change;
+    # a mention starts every MAX_MENTION_LEN tokens into its run
+    run_start = iv.copy()
+    run_start[1:] &= (row[1:] != row[:-1]) | ~iv[:-1]
+    row, tok, wid = row[iv], tok[iv], wid[iv]
+    starts = np.flatnonzero(
+        _positions(run_start[iv]) % MAX_MENTION_LEN == 0)
+    lengths = np.diff(starts, append=len(wid))
+    ids = pad_groups(wid, lengths, ctx.embedding.pad)
+    rows = row[starts]
 
-    # Group boundaries without groupby().agg(list): the frame is already
-    # in (row, run, chunk) order (explode preserves row order; run is a
-    # global cumsum; chunk is nondecreasing within a run), so a boundary
-    # scan + slice-joins replace 90% of the batch's former cost — the
-    # per-group pandas Series construction inside the pure-Python agg.
-    run_arr = f["run"].to_numpy()
-    chunk_arr = f["chunk"].to_numpy()
-    new_grp = np.empty(len(f), dtype=bool)
-    new_grp[0] = True
-    new_grp[1:] = (run_arr[1:] != run_arr[:-1]) | \
-                  (chunk_arr[1:] != chunk_arr[:-1])
-    starts = np.flatnonzero(new_grp)
-    ends = np.append(starts[1:], len(f))
-    rows = f["row"].to_numpy()[starts]
-    toks_list = f["tok"].to_list()
-
-    # Score each DISTINCT mention once, then broadcast back via the
-    # factorize codes: entities recur heavily in real transcripts, and
-    # scoring is a pure function of the word group.
-    mention_strs = np.asarray(
-        [" ".join(toks_list[s:e]) for s, e in zip(starts, ends)],
-        dtype=object)
-    codes, uniq = pd.factorize(mention_strs)
-    scores = score_groups(ctx.embedding, [m.split(" ") for m in uniq],
-                          ctx.class_matrix)
-    top = np.argmax(scores, axis=1)[codes]
-    top_scores = scores.max(axis=1)[codes]
+    # Score each DISTINCT mention once (entities recur heavily), keyed by
+    # its id tuple: a column-wise factorize on integers, in first-occurrence
+    # order.
+    codes = np.zeros(len(ids), dtype=np.int64)
+    for col in ids.T:
+        codes = pd.factorize(codes * (ctx.embedding.pad + 1) + col)[0]
+    first = np.unique(codes, return_index=True)[1]
+    scores = score_groups(ctx.embedding, ids[first], ctx.class_matrix)
+    toks = tok.tolist()
+    mentions = np.asarray([" ".join(toks[s:s + n]) for s, n in
+                           zip(starts[first], lengths[first])], dtype=object)
     classes = np.asarray(ctx.classes, dtype=object)
 
-    out = pd.DataFrame({
+    return pd.DataFrame({
         "conv_id": pdf["conv_id"].to_numpy()[rows],
-        "turn_idx": pdf["turn_idx"].to_numpy()[rows],
+        "turn_idx": pdf["turn_idx"].to_numpy()[rows].astype("int32"),
         "role": pdf["role"].to_numpy()[rows],
         "tool": pdf["tool"].to_numpy()[rows],
-        "mention": mention_strs,
-        "entity": classes[top],
-        "entity_score": top_scores,
-    })
-    # mention_id restarts per input row (one row == one turn); `rows` is
-    # nondecreasing because `f` is in (row, run, chunk) order
-    out["mention_id"] = out.groupby(rows, sort=False).cumcount().astype("int32")
-    out["turn_idx"] = out["turn_idx"].astype("int32")
-    return out[MENTION_COLUMNS]
+        # restarts per input row (one row == one turn); `rows` is
+        # nondecreasing because mentions are in token order
+        "mention_id": _positions(
+            np.r_[True, rows[1:] != rows[:-1]]).astype("int32"),
+        "mention": mentions[codes],
+        "entity": classes[np.argmax(scores, axis=1)][codes],
+        "entity_score": scores.max(axis=1)[codes],
+    })[list(MENTION_DTYPES)]
 
+
+def _positions(is_start: np.ndarray) -> np.ndarray:
+    """Each element's offset from the last ``True`` at or before it."""
+    idx = np.arange(len(is_start))
+    return idx - np.maximum.accumulate(np.where(is_start, idx, 0))

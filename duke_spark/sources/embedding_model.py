@@ -175,37 +175,21 @@ class MmapLinkContext(LinkContext):
     def __getstate__(self):
         return {"tree": self.tree, "classes": self.classes,
                 "fold_levels": self.fold_levels,
-                "_class_matrix": self._class_matrix,
+                "class_matrix": self.class_matrix,
                 "_vocab_file": self._vocab_file,
                 "_matrix_file": self._matrix_file}
 
     def __setstate__(self, state):
         self.__dict__.update(state)
-        self._vocab_list = None
-        self._matrix = None
         self._embedding = None
-        self._vocab_index = None
-
-    def _ensure_model(self):
-        if self._matrix is None:
-            self._vocab_list, self._matrix = _worker_model(
-                self._vocab_file, self._matrix_file)
 
     @property
     def embedding(self):
         if self._embedding is None:
-            self._ensure_model()
             from duke_spark.kernel.vectors import VocabEmbedding
-            self._embedding = VocabEmbedding(self._vocab_list, self._matrix)
+            self._embedding = VocabEmbedding(*_worker_model(
+                self._vocab_file, self._matrix_file))
         return self._embedding
-
-    @property
-    def vocab_index(self):
-        if self._vocab_index is None:
-            self._ensure_model()
-            import pandas as pd
-            self._vocab_index = pd.Index(self._vocab_list)
-        return self._vocab_index
 
 
 def mmap_link_context(spark, model_path: str, raw_tree: Tree,

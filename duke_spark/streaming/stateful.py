@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from duke_spark.kernel.tree import fold_scores
-from duke_spark.kernel.vectors import score_groups
+from duke_spark.operators.canonical import encode_cells, weighted_score_sums
 
 STATE_SCHEMA = "sum_scores array<double>, n bigint"
 
@@ -60,24 +60,20 @@ def running_conversation_topics(mentions: DataFrame, ctx_bc,
         if state.hasTimedOut:
             state.remove()
             return
-        new_sum = None
-        n_new = 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            s = score_groups(
-                ctx.embedding, [m.split(" ") for m in pdf["mention"]],
-                ctx.class_matrix).sum(axis=0)
-            new_sum = s if new_sum is None else new_sum + s
-            n_new += len(pdf)
-        if n_new == 0:
+        ms = [m for pdf in pdfs for m in pdf["mention"]]
+        if not ms:
             return
+        # the distinct mentions with their counts, as the batch path
+        codes, ids = encode_cells(ctx, ms)
+        new_sum = weighted_score_sums(
+            ctx, np.zeros(len(ids), dtype=np.int64), np.arange(len(ids)),
+            ids, np.bincount(codes).astype(np.float64), 1)[0]
         if state.exists:
             prev_sum, prev_n = state.get
             total = np.asarray(prev_sum, dtype=np.float64) + new_sum
-            n = int(prev_n) + n_new
+            n = int(prev_n) + len(ms)
         else:
-            total, n = new_sum, n_new
+            total, n = new_sum, len(ms)
         state.update((total.tolist(), n))
         if idle_timeout_ms > 0:
             state.setTimeoutDuration(idle_timeout_ms)

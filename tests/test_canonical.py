@@ -70,7 +70,7 @@ def test_chunked_means_match_oracle(spark, ctx_bc, oracle_ctx, key,
     for k, cnt in counts.groupby(level=0):
         ms = cnt.index.get_level_values(1)
         exp = np.average(score_groups(ctx.embedding,
-                                      [m.split(" ") for m in ms],
+                                      ctx.embedding.encode(ms)[0],
                                       ctx.class_matrix),
                          axis=0, weights=cnt.to_numpy())
         np.testing.assert_allclose(got.loc[k, "mean_scores"], exp,
@@ -92,6 +92,18 @@ def _oracle_rows(oracle_ctx, pdf, key):
                            [m.split(" ") for m in pdf["mention"]])[1]
     return pd.DataFrame({"entity": pdf[key].to_numpy(),
                          "class_scores": list(scores)})
+
+
+def test_encoded_cells_never_score_a_dropped_group(ctx_bc):
+    """A cell with an OOV word, or a NULL cell, encodes to code -1, and
+    scoring a -1 code raises instead of reading the last encoded group."""
+    ctx = ctx_bc.value
+    codes, ids = canonical.encode_cells(ctx, np.array(
+        ["guitar song", "guitar zzyzx", None, "song"], dtype=object))
+    assert codes.tolist() == [0, -1, -1, 1] and len(ids) == 2
+    with pytest.raises(KeyError):
+        canonical.weighted_score_sums(ctx, np.zeros(4, dtype=np.int64),
+                                      codes, ids, np.ones(4), 1)
 
 
 def test_null_keys_name_no_key(spark, ctx_bc, oracle_ctx):

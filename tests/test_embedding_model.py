@@ -146,3 +146,44 @@ def test_mmap_context_big_matrix(spark, tmp_path):
     assert "w1 w2 w999999" in mentions          # 3-token in-vocab chunk
     assert "w2" in mentions                     # OOV word broke the run
     assert "w1048575 w3" in mentions            # tail of the mmap reached
+
+
+def test_repeated_word_resolves_to_first_vector(tmp_path, small_model,
+                                                tiny_transcripts_pdf):
+    """A word2vec text file that lists every word twice (the second time
+    with another vector) links like the file without the repeats: each
+    word maps to its FIRST vector, as gensim's loader keeps the first,
+    and ``link_batch`` equals ``oracle_mentions`` on it."""
+    import pandas as pd
+
+    from duke_spark.fixtures.class_tree import mini_tree
+    from duke_spark.kernel.oracle import OracleContext, oracle_mentions
+    from duke_spark.kernel.vectors import VocabEmbedding
+    from duke_spark.operators.linking import LinkContext, link_batch
+
+    vocab, matrix = small_model
+    once, twice = str(tmp_path / "once.txt"), str(tmp_path / "twice.txt")
+    _write_w2v_text(once, vocab, matrix)
+    _write_w2v_text(twice, list(vocab) * 2,
+                    np.vstack([matrix, matrix[::-1]]))
+    v1, m1 = load_word2vec_text(once)
+    v2, m2 = load_word2vec_text(twice)
+    assert len(v2) == 2 * len(v1)
+
+    ctx = LinkContext(v2, m2, mini_tree())
+    w = vocab[0]
+    assert ctx.embedding.vocab[w] == 0
+    assert ctx.embedding.encode([w])[0].tolist() == [[0]]
+
+    got = link_batch(tiny_transcripts_pdf, ctx)
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(
+        got, link_batch(tiny_transcripts_pdf, LinkContext(v1, m1,
+                                                          mini_tree())),
+        check_exact=True)
+    exp = oracle_mentions(OracleContext(VocabEmbedding(v2, m2),
+                                        mini_tree()), tiny_transcripts_pdf)
+    cols = ["conv_id", "turn_idx", "mention_id", "mention", "entity"]
+    pd.testing.assert_frame_equal(got[cols], exp[cols], check_dtype=False)
+    np.testing.assert_allclose(got["entity_score"], exp["entity_score"],
+                               rtol=0, atol=1e-12)

@@ -153,3 +153,46 @@ def test_salted_parts_spread_hot_conversation(spark):
     share = counts.max() / counts.sum()
     # hot conv spans ~turns/64 salt buckets → no part holds its 30% share
     assert share < 0.2, f"hot partition holds {share:.0%} of rows"
+
+
+def _kg_outputs(spark, transcripts, ctx_bc) -> dict:
+    """build_kg → type-guarded resolution → fact rollup, as sorted pandas
+    frames. Two planted triples name "home run" and "run home" (the same
+    word group, so the same vector and type), so the merge map and the
+    rewrite are never empty."""
+    from duke_spark.operators.entity_resolution import resolve_kg_entities
+    from duke_spark.operators.triples import TRIPLE_SCHEMA, fact_support
+
+    kg = build_kg(spark, transcripts, ctx_bc)
+    planted = spark.createDataFrame(
+        [("conv:p", "mentions", f"ent:{e}", "p", 0, 0.5)
+         for e in ("home run", "run home")], TRIPLE_SCHEMA)
+    merges, resolved = resolve_kg_entities(
+        kg["triples"].unionByName(planted), ctx_bc, 0.99, type_guard=True)
+    out = {}
+    for name, df in (("vertices", kg["vertices"]), ("edges", kg["edges"]),
+                     ("merges", merges), ("facts", fact_support(resolved))):
+        pdf = df.toPandas()
+        out[name] = pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+    kg["mentions"].unpersist()
+    return out
+
+
+def test_no_persist_is_load_bearing(spark, tiny_transcripts, ctx_bc,
+                                    monkeypatch):
+    """With ``persist``/``cache`` made no-ops, every DataFrame is
+    recomputed from lineage, as after an eviction; the KG's vertices and
+    edges, the merge map and the fact rollup over the resolved triples
+    stay the same (doubles to 1e-12: Spark may merge a sum's partials in
+    another order), so a cache only ever saves time."""
+    from pyspark.sql import DataFrame
+
+    exp = _kg_outputs(spark, tiny_transcripts, ctx_bc)
+    assert exp["merges"].values.tolist() == [["ent:run home",
+                                              "ent:home run"]]
+    monkeypatch.setattr(DataFrame, "persist", lambda self, *a, **k: self)
+    monkeypatch.setattr(DataFrame, "cache", lambda self: self)
+    got = _kg_outputs(spark, tiny_transcripts, ctx_bc)
+    for name in exp:
+        pd.testing.assert_frame_equal(got[name], exp[name], rtol=1e-12,
+                                      obj=name)

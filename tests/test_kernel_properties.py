@@ -175,14 +175,16 @@ def test_score_groups_associations_agree(groups):
     same cosine (to 1e-12) and argmax on groups of 1-12 words with
     repeats ("york york") and an all-zero word vector; both match the
     oracle's per-group sum → norm → dot; a zero-norm group scores 0."""
-    vecs, pos = _word_positions(_EMB, groups)
+    ids, keep = _EMB.encode(groups)
+    assert keep.all()
+    vecs, pos = _word_positions(_EMB, ids)
     classes = _CLASSES.astype(np.float64)
     table = _cosine(_word_table_sums(vecs, pos, classes))
     direct = _cosine(_direct_sums(vecs, pos, classes))
     np.testing.assert_allclose(table, direct, rtol=0, atol=1e-12)
     assert np.array_equal(table.argmax(axis=1), direct.argmax(axis=1))
 
-    got = score_groups(_EMB, groups, _CLASSES)
+    got = score_groups(_EMB, ids, _CLASSES)
     ctx = SimpleNamespace(embedding=_EMB, class_matrix=_CLASSES)
     np.testing.assert_allclose(got, link_mentions(ctx, groups)[1], rtol=0,
                                atol=1e-12)
@@ -211,9 +213,30 @@ def test_link_batch_scores_pinned_to_oracle(oracle_ctx,
 def test_one_class_scoring_path():
     """Every production class-score site goes through ``score_groups``:
     nothing under ``duke_spark/`` but ``kernel/vectors.py`` (where
-    ``score_groups`` lives) references ``score_against_classes``."""
+    ``score_groups`` lives) references ``score_against_classes``. Words
+    become vocab ids only through ``VocabEmbedding.encode``/``word_ids``:
+    no operator or streaming module probes the vocab itself, and
+    ``score_groups`` is called only by the linker, the per-key
+    accumulator and ER's embed pass."""
+    import inspect
+
+    from duke_spark.operators import canonical, entity_resolution, linking
+
     root = pathlib.Path(__file__).resolve().parents[1] / "duke_spark"
     offenders = [str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
                  if "score_against_classes" in p.read_text()
                  and p.relative_to(root).as_posix() != "kernel/vectors.py"]
     assert offenders == []
+
+    sources = {p.relative_to(root).as_posix(): p.read_text()
+               for d in ("operators", "streaming")
+               for p in sorted((root / d).rglob("*.py"))}
+    for word in ("in_vocab(", "vocab_index", "index_groups", ".vocab["):
+        assert [p for p, src in sources.items() if word in src] == [], word
+    assert {p: src.count("score_groups(") for p, src in sources.items()
+            if "score_groups(" in src} == {
+        "operators/linking.py": 1, "operators/canonical.py": 1,
+        "operators/entity_resolution.py": 1}
+    for fn in (linking.link_batch, canonical.weighted_score_sums,
+               entity_resolution.resolve_kg_entities):
+        assert "score_groups(" in inspect.getsource(fn), fn.__name__

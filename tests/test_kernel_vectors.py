@@ -1,12 +1,13 @@
-"""Pin vector kernels: OOV all-or-nothing, embed gather+mean+unit-norm,
-matmul scoring, top-1 ties, mention chunking (SURVEY hard part #2)."""
+"""Pin vector kernels: OOV all-or-nothing encoding, embed
+gather+mean+unit-norm, matmul scoring, mention chunking (SURVEY hard
+part #2)."""
 
 import numpy as np
 import pytest
 
 from duke_spark.fixtures.embedding import build_embedding
-from duke_spark.kernel.vectors import (VocabEmbedding, chunk_in_vocab_runs,
-                                       score_against_classes, top1,
+from duke_spark.kernel.vectors import (chunk_in_vocab_runs,
+                                       score_against_classes, score_groups,
                                        unit_norm_rows)
 
 
@@ -26,6 +27,36 @@ def test_in_vocab_all_or_nothing(emb):
     assert emb.in_vocab(["baseball", "player"])
     assert not emb.in_vocab(["baseball", "zzyzx"])
     assert not emb.in_vocab([""])
+
+
+def test_encode_all_or_nothing(emb):
+    """One OOV or empty word, or no word, drops the whole group; strings
+    and token lists encode alike, padded to the longest kept group."""
+    groups = ["baseball player", "baseball zzyzx", "", "guitar",
+              "baseball  player"]
+    ids, keep = emb.encode(groups)
+    assert keep.tolist() == [True, False, False, True, False]
+    b, p, g = (emb.vocab[w] for w in ("baseball", "player", "guitar"))
+    assert ids.tolist() == [[b, p], [g, emb.pad]]
+    ids2, keep2 = emb.encode([s.split(" ") for s in groups] + [[]])
+    assert keep2.tolist() == keep.tolist() + [False]
+    assert np.array_equal(ids2, ids)
+    assert emb.encode([])[0].shape[0] == 0
+
+
+def test_oov_id_never_gathers(emb):
+    """An id matrix holding an OOV word (-1, as a failed lookup reads)
+    raises in every gather instead of reading the matrix's last row; so
+    does an id past the padding."""
+    classes = emb.embed_groups([["musician"], ["river"]])
+    for ids in (np.array([[emb.vocab["guitar"], -1]]),
+                np.array([[emb.pad + 1]])):
+        with pytest.raises(IndexError):
+            score_groups(emb, ids, classes)
+        with pytest.raises(IndexError):
+            emb.embed(ids)
+    with pytest.raises(KeyError):
+        emb.embed_groups([["guitar", "zzyzx"]])
 
 
 def test_embed_groups_mean_and_norm(emb):
@@ -51,11 +82,6 @@ def test_score_is_cosine(emb):
     cos = float(g[0] @ c[0] / (np.linalg.norm(g[0]) * np.linalg.norm(c[0])))
     assert s[0, 0] == pytest.approx(cos, abs=1e-5)
     assert s.shape == (1, 2)
-
-
-def test_top1_tie_first_wins():
-    s = np.array([[0.5, 0.5, 0.1]])
-    assert top1(s)[0] == 0
 
 
 def test_chunk_runs(emb):
