@@ -6,7 +6,10 @@ local[N] sandbox:
     the skew half of SURVEY B8;
   * Arrow batches sized so each pandas-UDF matmul is BLAS-efficient
     (SURVEY §4 item 3);
-  * shuffle partitions default to cores (AQE coalesces down as needed).
+  * shuffle partitions default to ``max(8, SPARK_GRAFT_CPUS)`` (32 when
+    unset); AQE coalesces small post-shuffle partitions at runtime, but
+    not the output partitioning of a persisted (cached) plan, whose last
+    stage keeps all of them.
 """
 
 from __future__ import annotations

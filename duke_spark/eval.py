@@ -11,15 +11,17 @@ Reference semantics rebuilt:
     (``Duke/evaluate.py:115-122``, combos from
     ``Duke/agg_functions.py:25-28``);
   * embed once, evaluate every config against the same embedded data
-    (``Duke/evaluate.py:78-91``) — here the linked-mention counts are
-    persisted and each config re-folds them;
+    (``Duke/evaluate.py:78-91``) — here one per-conversation mean pass
+    (``canonical._key_means``) folds each batch's mean matrix once per
+    config;
   * ranking: mean score_gap per config, descending
     (``Duke/evaluate.py:171-176``).
 
-Scale shape: the tree fold (one matrix per Arrow batch) + label
-comparison run inside a ``mapInPandas`` stage (labels broadcast); only
-(config, conv, pos, neg, gap) rows leave the workers. The config loop is
-driver-side — the grid is ≤ 8 entries (``Duke/evaluate.py:115-122``),
+Scale shape: scoring, the tree folds and the label comparison run
+inside the one ``mapInPandas`` stage of the per-key pass (labels
+broadcast); only (config, conv, pos, neg, gap) rows leave the workers,
+and no class-score vector crosses a shuffle. The config loop runs per
+Arrow batch — the grid is ≤ 8 entries (``Duke/evaluate.py:115-122``),
 matching the reference's trial loop (A38).
 """
 
@@ -30,13 +32,12 @@ from typing import Dict, List, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from duke_spark.kernel.tree import fold_scores
-from duke_spark.operators.canonical import conversation_class_scores
-from duke_spark.operators.mentions import linked_mentions
+from duke_spark.operators.canonical import _key_means
 
 
 # --- labels (A5/A9) --------------------------------------------------------
@@ -82,51 +83,36 @@ EVAL_SCHEMA = T.StructType([
 ])
 
 
-def evaluate_config(conv_scores: DataFrame, ctx_bc, labels_bc,
-                    config_name: str, agg: Tuple[str, str]) -> DataFrame:
-    """Fold each batch of labelled conversations' mean score vectors with
-    ``agg`` = (parent, children) in one matrix call and score each row
-    against its golden labels — all inside the workers."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        ctx = ctx_bc.value
-        labels: Dict[str, List[str]] = labels_bc.value
-        pdf = pdf[np.array([bool(labels.get(c)) for c in pdf["conv_id"]],
-                           dtype=bool)]
-        out = []
-        if len(pdf):
-            folded = fold_scores(np.stack(pdf["mean_scores"].to_list()),
-                                 ctx.fold_levels, *agg)
-            for conv_id, row in zip(pdf["conv_id"], folded):
-                pos = label_vector(labels[conv_id], ctx.classes) > 0
-                avg_pos = float(row[pos].mean()) if pos.any() else 0.0
-                avg_neg = float(row[~pos].mean()) if (~pos).any() else 0.0
-                out.append((config_name, conv_id, avg_pos, avg_neg,
-                            avg_pos - avg_neg))
-        return pd.DataFrame(out, columns=[f.name for f in
-                                          EVAL_SCHEMA.fields])
-
-    return conv_scores.mapInPandas(
-        lambda it: (run(pdf) for pdf in it), schema=EVAL_SCHEMA)
-
-
-def run_config_grid(spark: SparkSession, transcripts: DataFrame, ctx_bc,
+def run_config_grid(mentions: DataFrame, ctx_bc,
                     labels: Dict[str, List[str]],
                     configs: Dict[str, Tuple[str, str]] | None = None
                     ) -> DataFrame:
-    """Embed/link once, evaluate every config (``Duke/evaluate.py:78-103``
-    reuse pattern). Returns (config, conv_id, avg_pos, avg_neg,
+    """Score every config over one per-conversation mean pass
+    (``Duke/evaluate.py:78-103`` reuse pattern): each Arrow batch keeps
+    its labelled conversations' mean matrix, builds each positive-class
+    mask once and folds the matrix once per config with ``agg`` =
+    (parent, children). Returns (config, conv_id, avg_pos, avg_neg,
     score_gap)."""
     configs = configs or config_grid()
-    labels_bc = spark.sparkContext.broadcast(labels)
-    mentions = linked_mentions(transcripts, ctx_bc)
-    conv_scores = conversation_class_scores(mentions, ctx_bc).persist()
-    conv_scores.count()  # materialize once for all configs
-    out = None
-    for name, agg in configs.items():
-        part = evaluate_config(conv_scores, ctx_bc, labels_bc, name, agg)
-        out = part if out is None else out.unionByName(part)
-    return out
+    labels_bc = mentions.sparkSession.sparkContext.broadcast(labels)
+
+    def finish(pdf: pd.DataFrame, means: np.ndarray, ctx) -> pd.DataFrame:
+        labels: Dict[str, List[str]] = labels_bc.value
+        keep = np.array([bool(labels.get(c)) for c in pdf["conv_id"]],
+                        dtype=bool)
+        conv_ids, means = pdf["conv_id"][keep].to_list(), means[keep]
+        pos = [label_vector(labels[c], ctx.classes) > 0 for c in conv_ids]
+        out = []
+        for name, agg in configs.items():
+            folded = fold_scores(means, ctx.fold_levels, *agg)
+            for conv_id, row, p in zip(conv_ids, folded, pos):
+                avg_pos = float(row[p].mean()) if p.any() else 0.0
+                avg_neg = float(row[~p].mean()) if (~p).any() else 0.0
+                out.append((name, conv_id, avg_pos, avg_neg,
+                            avg_pos - avg_neg))
+        return pd.DataFrame(out, columns=EVAL_SCHEMA.fieldNames())
+
+    return _key_means(mentions, ctx_bc, "conv_id", finish, EVAL_SCHEMA)
 
 
 def rank_configs(results: DataFrame, top_n: int = 5) -> DataFrame:

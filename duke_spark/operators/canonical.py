@@ -138,23 +138,6 @@ def canonical_types_df(spark, mentions: DataFrame, ctx_bc) -> DataFrame:
                                  _ENTITY_TYPES_SCHEMA)
 
 
-def conversation_class_scores(mentions: DataFrame, ctx_bc) -> DataFrame:
-    """Per-conversation mean class-score vector (the distributed analogue of
-    Duke's per-source row aggregation, ``Duke/dataset_descriptor.py:73-74``)
-    — reused by the flagship 'what is this conversation about?' query."""
-    schema = T.StructType([
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("n_mentions", T.LongType()),
-        T.StructField("mean_scores", T.ArrayType(T.DoubleType())),
-    ])
-    return _key_means(
-        mentions, ctx_bc, "conv_id",
-        lambda pdf, means, ctx: pd.DataFrame({
-            "conv_id": pdf["conv_id"], "n_mentions": pdf["n_mentions"],
-            "mean_scores": list(means)}),
-        schema)
-
-
 def describe_conversations(spark, mentions: DataFrame, ctx_bc) -> DataFrame:
     """Per-conversation canonical topic — Duke's summary sentence
     (``Duke/dataset_descriptor.py:82-88``) over the mention path.

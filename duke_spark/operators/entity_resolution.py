@@ -81,7 +81,21 @@ def _components(vectors: DataFrame, threshold: float, num_planes: int,
                  .join(t.select(F.col(id_col).alias("b"),
                                 F.col(type_col).alias("_tb")), "b")
                  .filter(F.col("_ta") == F.col("_tb")))
-    id_type = vectors.schema[id_col].dataType
+    # each group holds one bucket's pairs, never embeddings; partitions
+    # beyond the 2^num_planes buckets would be empty, and beyond one
+    # wave of cores each Python task pays its worker round trip again
+    n = min(1 << max(num_planes, 0),
+            vectors.sparkSession.sparkContext.defaultParallelism)
+    return bucket_components(pairs, n)
+
+
+def bucket_components(pairs: DataFrame, n_partitions: int) -> DataFrame:
+    """(node, comp) for every endpoint of the (bucket, a, b) edge rows;
+    comp = its component's minimum id. No component may span two
+    buckets: each bucket closes in one ``min_label_components`` call of
+    one ``groupBy(bucket)`` pandas UDF over ``n_partitions`` partitions,
+    so the closure is one shuffle whatever the component diameter."""
+    id_type = pairs.schema["a"].dataType
     schema = T.StructType([T.StructField("node", id_type),
                            T.StructField("comp", id_type)])
 
@@ -90,12 +104,8 @@ def _components(vectors: DataFrame, threshold: float, num_planes: int,
                                            pdf["b"].to_numpy())
         return pd.DataFrame({"node": nodes, "comp": comp})
 
-    # each group holds one bucket's pairs, never embeddings; partitions
-    # beyond the 2^num_planes buckets would be empty, and beyond one
-    # wave of cores each Python task pays its worker round trip again
-    n = min(1 << max(num_planes, 0),
-            vectors.sparkSession.sparkContext.defaultParallelism)
-    return (pairs.select("bucket", "a", "b").repartition(n, "bucket")
+    return (pairs.select("bucket", "a", "b")
+            .repartition(n_partitions, "bucket")
             .groupBy("bucket").applyInPandas(close, schema=schema))
 
 

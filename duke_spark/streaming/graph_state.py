@@ -34,15 +34,17 @@ survives folding; the read-side finalizer equals the batch rollup
 ``IncrementalComponentStore`` — connected-component labels maintained
 under edge INSERTIONS. Per batch: map the batch's endpoints to their
 current labels (join keyed on node — the batch side is small and
-broadcasts), run ``dedup.connected_components`` on the label-level
-reduced graph (≤ 2·|batch| nodes, independent of graph size), then
-apply the resulting merge map to the label table with one broadcast
-join — a single narrow pass over state, no state-sized shuffle. Label
-merging is idempotent (re-adding the same edges merges nothing), so
-replay and even full fresh-checkpoint reprocessing are safe without
-epoch bookkeeping. The label invariant (comp = min node id of the
-component) matches batch ``connected_components`` — exact parity is
-tested per epoch, not just at the end.
+broadcasts), close the label-level reduced graph (≤ 2·|batch| nodes,
+independent of graph size) as the single bucket of
+``entity_resolution.bucket_components``: one ``min_label_components``
+call, so a path of any length closes in one pass, as in batch
+resolution. Then apply the resulting merge map to the label table with
+one broadcast join — a single narrow pass over state, no state-sized
+shuffle. Label merging is idempotent (re-adding the same edges merges
+nothing), so replay and even full fresh-checkpoint reprocessing are
+safe without epoch bookkeeping. The label invariant (comp = min node id
+of the component) matches batch ``connected_components`` — exact parity
+is tested per epoch, not just at the end.
 """
 
 from __future__ import annotations
@@ -52,7 +54,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duke_spark.operators.dedup import connected_components
+from duke_spark.operators.entity_resolution import bucket_components
 from duke_spark.operators.graph import build_edges, degrees
 from duke_spark.streaming.epochs import EpochDirs, recover, swap_in
 
@@ -225,9 +227,9 @@ class IncrementalComponentStore:
 
         Plan shape: the batch (small) joins the label table keyed on
         node — Catalyst broadcasts the batch side; the reduced
-        label-graph CC runs on ≤ 2·|batch| nodes; the merge map
-        (≤ |batch| non-identity rows) broadcasts back over the label
-        table in one narrow pass. Nothing in the update is
+        label graph (≤ 2·|batch| nodes) closes in one pandas group;
+        the merge map (≤ |batch| non-identity rows) broadcasts back
+        over the label table in one narrow pass. Nothing in the update is
         graph-sized except the final state rewrite, which is a
         shuffle-free column map + write."""
         if pair_batch.isEmpty():
@@ -253,7 +255,8 @@ class IncrementalComponentStore:
         if reduced.isEmpty():
             merge = None
         else:
-            merge = (connected_components(reduced)
+            merge = (bucket_components(
+                         reduced.withColumn("bucket", F.lit(0)), 1)
                      .filter(F.col("node") != F.col("comp"))
                      .select(F.col("node").alias("comp"),
                              F.col("comp").alias("new_comp")))

@@ -13,7 +13,9 @@ Composition of two audited parts (VERDICT-r4 #8, C48 × C41):
    where its LATER member arrived, so the union of epoch deltas over
    time IS the batch pair set.
 2. **Label state** — ``graph_state.IncrementalComponentStore`` absorbs
-   each epoch's pair delta as edge insertions; its invariant
+   each epoch's pair delta as edge insertions and closes it with the
+   batch path's own ``bucket_components`` (one bucket), so no component
+   diameter makes it fail where batch resolution succeeds; its invariant
    (comp = min node id of the component) is exactly
    ``resolve_entities``'s canonical rule, so the read-side map equals
    batch resolution over all vectors ever processed (tested per epoch,
@@ -91,7 +93,7 @@ class IncrementalResolutionStore:
         union = (prev.withColumn("_new", F.lit(False))
                  .unionByName(batch.withColumn("_new", F.lit(True))))
         # persist the delta: comp.process walks it several times
-        # (isEmpty, endpoint labeling x2, reduced-graph CC) and each
+        # (isEmpty, endpoint labeling x2, reduced-graph closure) and each
         # walk would otherwise re-run the O(new x history) pair kernel
         pairs = (cosine_near_dup_pairs(union, threshold=self.threshold,
                                        num_planes=self.num_planes,

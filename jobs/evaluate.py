@@ -56,14 +56,17 @@ def main() -> None:
     ctx_bc = make_context(spark)
 
     t0 = time.time()
+    mentions = linked_mentions(transcripts, ctx_bc)
     if args.labels:
         labels = read_positive_examples(args.labels)
     else:
-        topics = describe_conversations(
-            spark, linked_mentions(transcripts, ctx_bc), ctx_bc).collect()
+        # one link pass for both consumers: the topics and the grid
+        mentions = mentions.persist()
+        topics = describe_conversations(spark, mentions, ctx_bc).collect()
         labels = {r["conv_id"]: [r["topic"]] for r in topics}
 
-    results = run_config_grid(spark, transcripts, ctx_bc, labels)
+    # two writes, a collect and a count read the grid result
+    results = run_config_grid(mentions, ctx_bc, labels).persist()
     write_trials_csv(results, os.path.join(args.out, "trials_csv"))
     ranked = rank_configs(results, top_n=args.top_n)
     write_ranked_json(ranked, os.path.join(args.out, "ranked_json"))

@@ -108,8 +108,6 @@ def main() -> None:
                                seed=42, hot_frac=args.hot_frac)
     src = "/tmp/skew_proof_transcripts.parquet"
     pdf.to_parquet(src, index=False)
-    hot_rows = int((pdf["conv_id"] == pdf["conv_id"].iloc[0]).sum()) \
-        if args.hot_frac else 0
     hot_conv = pdf.groupby("conv_id").size().idxmax()
     hot_rows = int((pdf["conv_id"] == hot_conv).sum())
     base = read_transcripts(spark, src)

@@ -6,11 +6,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from duke_spark.eval import run_config_grid
 from duke_spark.kernel.oracle import link_mentions, oracle_canonical_types
 from duke_spark.kernel.vectors import score_groups
 from duke_spark.operators import canonical
 from duke_spark.operators.canonical import (canonical_types_df,
-                                            conversation_class_scores,
                                             describe_conversations)
 from duke_spark.operators.describe import (dataset_source_means,
                                            describe_conversations_duke)
@@ -50,20 +50,19 @@ def chunked_df(spark, chunked_mentions):
 def test_chunked_means_match_oracle(spark, ctx_bc, oracle_ctx, key,
                                     chunked_mentions, chunked_df):
     ctx = ctx_bc.value
+    got = canonical._key_means(
+        chunked_df, ctx_bc, key,
+        lambda pdf, means, ctx: pd.DataFrame({
+            key: pdf[key], "n_mentions": pdf["n_mentions"],
+            "mean_scores": list(means)}),
+        f"{key} string, n_mentions bigint, mean_scores array<double>"
+    ).toPandas().set_index(key)
     if key == "entity":
-        got = canonical._key_means(
-            chunked_df, ctx_bc, "entity",
-            lambda pdf, means, ctx: pd.DataFrame({
-                "entity": pdf["entity"], "n_mentions": pdf["n_mentions"],
-                "mean_scores": list(means)}),
-            "entity string, n_mentions bigint, mean_scores array<double>")
         types = canonical_types_df(spark, chunked_df, ctx_bc).toPandas()
         types = dict(zip(types["entity"], types["canonical_type"]))
     else:
-        got = conversation_class_scores(chunked_df, ctx_bc)
         types = describe_conversations(spark, chunked_df, ctx_bc).toPandas()
         types = dict(zip(types["conv_id"], types["topic"]))
-    got = got.toPandas().set_index(key)
 
     counts = chunked_mentions.groupby([key, "mention"]).size()
     assert set(got.index) == set(counts.index.get_level_values(0))
@@ -167,14 +166,16 @@ def _assert_one_key_means_plan(df):
 
 
 def test_one_key_means_plan(spark, tiny_transcripts, ctx_bc, monkeypatch):
-    """Entity types, conversation topics and both Duke describe paths run
-    one per-key plan: no grouped-map Python stage, no score vector on
-    either side of a shuffle (a partial ``collect_list`` hides its element
-    type in a binary buffer, so the map side is checked too), and exactly
-    one ``MapInPandas`` after the last exchange."""
+    """Entity types, conversation topics, the eval config grid and both
+    Duke describe paths run one per-key plan: no grouped-map Python
+    stage, no score vector on either side of a shuffle (a partial
+    ``collect_list`` hides its element type in a binary buffer, so the
+    map side is checked too), and exactly one ``MapInPandas`` after the
+    last exchange."""
     mentions = linked_mentions(tiny_transcripts, ctx_bc)
     for df in (canonical._entity_types(mentions, ctx_bc),
                describe_conversations(spark, mentions, ctx_bc),
+               run_config_grid(mentions, ctx_bc, {"conv_000000": ["song"]}),
                describe_conversations_duke(tiny_transcripts, ctx_bc)):
         df.collect()
         _assert_one_key_means_plan(df)

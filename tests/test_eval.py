@@ -7,6 +7,7 @@ import pytest
 from duke_spark.eval import (config_grid, label_vector,
                              rank_configs, read_positive_examples,
                              run_config_grid, write_positive_examples)
+from duke_spark.operators.mentions import linked_mentions
 
 
 def test_label_roundtrip(tmp_path):
@@ -40,10 +41,14 @@ def golden_labels(oracle_ctx, tiny_transcripts_pdf):
     return labels
 
 
-def test_grid_eval_and_ranking(spark, tiny_transcripts, ctx_bc,
-                               golden_labels):
-    results = run_config_grid(spark, tiny_transcripts, ctx_bc,
-                              golden_labels).toPandas()
+@pytest.fixture(scope="module")
+def grid_results(tiny_transcripts, ctx_bc, golden_labels):
+    return run_config_grid(linked_mentions(tiny_transcripts, ctx_bc),
+                           ctx_bc, golden_labels).toPandas()
+
+
+def test_grid_eval_and_ranking(spark, grid_results, golden_labels):
+    results = grid_results
     assert set(results["config"]) == set(config_grid())
     # labels are the oracle's own top classes → the gap must be positive
     # for the production config on almost every conversation
@@ -57,6 +62,69 @@ def test_grid_eval_and_ranking(spark, tiny_transcripts, ctx_bc,
         spark.createDataFrame(results), top_n=4).toPandas()
     assert len(ranked) == 4
     assert ranked["mean_gap"].is_monotonic_decreasing
+
+
+def test_grid_matches_oracle(grid_results, golden_labels, oracle_ctx,
+                             tiny_transcripts_pdf):
+    """Every config's (avg_pos, avg_neg, score_gap) for every labelled
+    conversation == the oracle: the mean of the conversation's mention
+    class scores, folded per vector by ``aggregate_tree_scores`` under
+    ``parent_children_funcs(parent, children)``, split by the ±1 label
+    vector."""
+    from duke_spark.kernel.oracle import oracle_mentions
+    from duke_spark.kernel.tree import (aggregate_tree_scores,
+                                        parent_children_funcs)
+
+    funcs = {"mean": np.mean, "max": max}
+    ctx = oracle_ctx
+    mentions = oracle_mentions(ctx, tiny_transcripts_pdf)
+    means = {c: np.mean(np.stack(g["class_scores"].to_list()), axis=0)
+             for c, g in mentions.groupby("conv_id")}
+    got = grid_results.set_index(["config", "conv_id"])
+    assert len(got) == len(config_grid()) * len(golden_labels)
+    for name, (parent, children) in config_grid().items():
+        agg = parent_children_funcs(funcs[parent], funcs[children])
+        for conv_id, positives in golden_labels.items():
+            folded = aggregate_tree_scores(ctx.classes, means[conv_id],
+                                           ctx.tree, agg)
+            pos = label_vector(positives, ctx.classes) > 0
+            exp_pos, exp_neg = folded[pos].mean(), folded[~pos].mean()
+            row = got.loc[(name, conv_id)]
+            np.testing.assert_allclose(
+                [row["avg_pos"], row["avg_neg"], row["score_gap"]],
+                [exp_pos, exp_neg, exp_pos - exp_neg], rtol=0, atol=1e-9)
+
+
+def test_evaluate_job(tmp_path):
+    """``jobs/evaluate.py`` end to end: one trial row per config and
+    labelled conversation, and both sinks written, ranking all four
+    configs."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    import pandas as pd
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / "eval"
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "jobs", "evaluate.py"),
+         "--convs", "20", "--out", str(out), "--parallelism", "2"],
+        capture_output=True, text=True, timeout=420, cwd=repo)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    rec = json.loads([ln for ln in proc.stdout.splitlines()
+                      if ln.startswith("{")][-1])
+    assert rec["n_labels"] > 0
+    assert rec["n_trial_rows"] == len(config_grid()) * rec["n_labels"]
+    assert {r["config"] for r in rec["ranked"]} == set(config_grid())
+
+    trials = pd.concat(pd.read_csv(p) for p in
+                       (out / "trials_csv").glob("part-*.csv"))
+    assert len(trials) == rec["n_trial_rows"]
+    ranked = [json.loads(ln) for p in (out / "ranked_json").glob("part-*")
+              for ln in p.read_text().splitlines()]
+    assert {r["config"] for r in ranked} == set(config_grid())
 
 
 def test_heuristic_top_words(spark, tiny_transcripts, ctx_bc):

@@ -257,7 +257,7 @@ def test_conversation_scores_ignore_null_mentions(spark, ctx_bc):
     codes NaN as -1, which an index decode would credit to the LAST
     distinct mention. Scores with injected nulls must equal scores
     without them, and n_mentions must not count the null rows."""
-    from duke_spark.operators.canonical import conversation_class_scores
+    from duke_spark.operators.canonical import _key_means
 
     clean = pd.DataFrame({
         "conv_id": ["c1", "c1", "c1", "c2"],
@@ -270,10 +270,15 @@ def test_conversation_scores_ignore_null_mentions(spark, ctx_bc):
     })], ignore_index=True)
 
     def run(pdf):
-        out = (conversation_class_scores(
-                   spark.createDataFrame(pdf), ctx_bc)
-               .toPandas().set_index("conv_id").sort_index())
-        return out
+        return (_key_means(
+                    spark.createDataFrame(pdf), ctx_bc, "conv_id",
+                    lambda pdf, means, ctx: pd.DataFrame({
+                        "conv_id": pdf["conv_id"],
+                        "n_mentions": pdf["n_mentions"],
+                        "mean_scores": list(means)}),
+                    "conv_id string, n_mentions bigint, "
+                    "mean_scores array<double>")
+                .toPandas().set_index("conv_id").sort_index())
 
     a, b = run(clean), run(noisy)
     assert list(a["n_mentions"]) == list(b["n_mentions"]) == [3, 1]

@@ -61,6 +61,35 @@ def test_epoch_parity_vs_batch(spark, tmp_path):
         "no cross-epoch merge happened — fixture is vacuous"
 
 
+def _long_arc():
+    """A 40-node path: unit vectors 0.1 rad apart along a circle (cos 0.1
+    ≈ 0.995 ≥ 0.99 > cos 0.2), minimum id at the arc's far end, so
+    one-hop-per-round label propagation would need 39 rounds."""
+    ids = np.random.default_rng(5).permutation(np.arange(100, 140))
+    k = int(np.flatnonzero(ids == 100)[0])
+    ids[[k, 39]] = ids[[39, k]]
+    return pd.DataFrame({
+        "vec_id": ids.astype(np.int64),
+        "embedding": [[float(np.cos(0.1 * k)), float(np.sin(0.1 * k))]
+                      + [0.0] * (DIM - 2) for k in range(len(ids))]})
+
+
+@pytest.mark.parametrize("n_epochs", [1, 2])
+def test_long_arc_matches_batch(spark, tmp_path, n_epochs):
+    """A long path closes incrementally exactly as in batch resolution,
+    whether it arrives in one epoch or is split across two."""
+    kw = dict(threshold=0.99, num_planes=0)
+    arc = _long_arc()
+    store = IncrementalResolutionStore(str(tmp_path / "rs"), **kw)
+    step = -(-len(arc) // n_epochs)
+    for i in range(n_epochs):
+        store.process(spark.createDataFrame(arc[i * step:(i + 1) * step]),
+                      epoch_id=i)
+    want = _map(resolve_entities(spark.createDataFrame(arc), **kw))
+    assert want == {int(v): 100 for v in arc["vec_id"]}
+    assert _map(store.read_map(spark)) == want
+
+
 def test_replay_idempotent(spark, tmp_path):
     batches = _vec_batches()
     store = IncrementalResolutionStore(str(tmp_path / "rs"), **KW)
