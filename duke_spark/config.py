@@ -34,7 +34,11 @@ def _set_worker_env() -> None:
       kernel allocates/frees 100s-of-MB NumPy buffers per Arrow batch,
       and default glibc serves those via mmap/munmap, whose TLB-shootdown
       IPIs serialize across many cores (measured 5× throughput loss at
-      local[32]); keeping them on the heap lets workers reuse pages.
+      local[32]); keeping them on the heap lets workers reuse pages;
+    * the directory holding ``duke_spark`` first on ``PYTHONPATH`` — a
+      job script started from another working directory puts the package
+      on its own ``sys.path`` only, and local-mode workers do not inherit
+      that (``spark-submit`` ships the package with ``--py-files``).
 
     Two delivery channels, both needed:
     * ``os.environ`` here — covers plain-``python`` launches, where this
@@ -48,6 +52,11 @@ def _set_worker_env() -> None:
     """
     for k, v in WORKER_ENV:
         os.environ.setdefault(k, v)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+             if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root] + paths)
 
 
 def get_spark(app_name: str = "duke_spark",
@@ -69,9 +78,11 @@ def get_spark(app_name: str = "duke_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # partitioned writes: rows arrive clustered by the partition column
-        # (plans/checkpoint.py), so concurrent writers skip the per-task
-        # sort-by-partition pass (measured 3-20× on the triple write)
+        # partitioned writes: rows arrive hash-clustered by the partition
+        # column (plans/checkpoint.py), each AQE-sized writer task holding
+        # whole parts; up to this many parts per task the writers skip the
+        # per-task sort-by-partition pass (measured 3-20× on the triple
+        # write), past it they sort — one file per part either way
         .config("spark.sql.maxConcurrentOutputFileWriters", "128")
         .config("spark.driver.memory",
                 os.environ.get("DUKE_SPARK_DRIVER_MEM", "8g"))

@@ -27,6 +27,7 @@ from typing import Optional, Set
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import duke_spark
 
@@ -109,8 +110,8 @@ class TripleCheckpoint:
                 out.add(int(name[5:-5]))
         return out
 
-    def _write_manifests(self, spark: SparkSession, parts_rows: dict,
-                         input_path: str, elapsed: float) -> None:
+    def _write_manifests(self, parts_rows: dict, input_path: str,
+                         elapsed: float) -> None:
         os.makedirs(self.manifest_dir, exist_ok=True)
         now = time.time()
         for pid, nrows in parts_rows.items():
@@ -175,18 +176,22 @@ class TripleCheckpoint:
         # Extraction runs on the input's own (round-robin/cache) layout —
         # feeding the pandas-UDF stage from a shuffle read measured ~50%
         # slower than from cache, and the narrow stage doesn't care about
-        # row placement. The OUTPUT is then clustered by (salted) part_id
-        # so each writer task holds ~one partition value: with
-        # maxConcurrentOutputFileWriters set (config.py) the partitioned
-        # write needs no sort and emits ~one file per part at ANY
-        # parallelism. Un-clustered partitionBy writes tasks × parts small
-        # files and the file commit dominates at high parallelism.
+        # row placement. The OUTPUT is then hash-clustered by (salted)
+        # part_id, so each writer task holds whole parts: a hash exchange
+        # never splits one part_id value across reducers, and AQE sizes
+        # the writer tasks by coalescing whole reducers (the session's
+        # spark.sql.shuffle.partitions bounds their number, not
+        # num_parts). With up to maxConcurrentOutputFileWriters (config.py)
+        # parts in one task the partitioned write needs no sort; past that
+        # the writer falls back to sorting by part_id. Either way it emits
+        # exactly one file per part. Un-clustered partitionBy writes
+        # tasks × parts small files and the file commit dominates.
         # part_id is a pure function of (conv_id, turn_idx) → recomputed on
         # the output rather than threaded through the UDF (keeps the UDF
         # schema minimal; Catalyst prunes the input column).
         triples = extract_triples(parted, ctx_bc)
         triples = with_part_id(triples, self.num_parts)
-        triples = triples.repartition(self.num_parts, "part_id")
+        triples = triples.repartition("part_id")
         (triples.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("part_id")
@@ -197,10 +202,18 @@ class TripleCheckpoint:
         # pending partitions that produced zero triples still complete
         for pid in pending:
             parts_rows.setdefault(pid, 0)
-        self._write_manifests(spark, parts_rows, input_path, elapsed)
+        self._write_manifests(parts_rows, input_path, elapsed)
         return {"written": sorted(parts_rows), "skipped": len(done),
                 "rows": int(sum(parts_rows.values())),
                 "wall_seconds": elapsed}
 
     def read_triples(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.data_dir).drop("part_id")
+        """The written triples, read with their explicit schema: a
+        checkpoint whose every part is empty holds no parquet file to
+        infer one from."""
+        from duke_spark.operators.triples import TRIPLE_SCHEMA
+
+        schema = T.StructType(TRIPLE_SCHEMA.fields
+                              + [T.StructField("part_id", T.IntegerType())])
+        return spark.read.schema(schema).parquet(self.data_dir) \
+            .drop("part_id")

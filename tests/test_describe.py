@@ -113,14 +113,15 @@ def test_all_oov_table_describes_nothing(spark, ctx_bc, tiny_transcripts_pdf):
     assert describe_conversations_duke(df, ctx_bc).count() == 0
 
 
-def test_describe_dataset_job(oracle_ctx):
-    """``jobs/describe_dataset.py`` on its synthetic input prints the
-    oracle's whole-table description and top classes."""
+def test_describe_dataset_job(oracle_ctx, tmp_path):
+    """``jobs/describe_dataset.py`` on its synthetic input, started from
+    outside the repository, prints the oracle's whole-table description
+    and top classes."""
     env = dict(os.environ, OPENBLAS_NUM_THREADS="1", OMP_NUM_THREADS="1")
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "jobs", "describe_dataset.py"),
          "--convs", "20", "--parallelism", "2"],
-        capture_output=True, text=True, env=env, timeout=420)
+        capture_output=True, text=True, env=env, cwd=tmp_path, timeout=420)
     assert proc.returncode == 0, proc.stderr[-3000:]
     got = json.loads([ln for ln in proc.stdout.splitlines()
                       if ln.startswith("{")][-1])

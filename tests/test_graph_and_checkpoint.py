@@ -90,6 +90,66 @@ def test_checkpoint_resume_idempotent(spark, tiny_transcripts, ctx_bc,
     assert total == len(got)
 
 
+@pytest.mark.parametrize("num_parts,max_writers", [(4, None), (16, None),
+                                                   (16, 2)])
+def test_checkpoint_writes_one_file_per_part(spark, tiny_transcripts, ctx_bc,
+                                             tmp_path, num_parts,
+                                             max_writers):
+    """The output is clustered by part_id before the partitioned write, so
+    every part lands in one writer task and one file, with fewer and with
+    more parts than the session's 8 shuffle partitions, and also when a
+    task holds more parts than maxConcurrentOutputFileWriters (the writer
+    then sorts). The input is spread over 4 partitions, so a write
+    without the clustering shuffle leaves several files in some part."""
+    conf = "spark.sql.maxConcurrentOutputFileWriters"
+    old = spark.conf.get(conf)
+    if max_writers is not None:
+        spark.conf.set(conf, str(max_writers))
+    out = str(tmp_path / "kg_layout")
+    ck = TripleCheckpoint(out, num_parts=num_parts)
+    try:
+        ck.run(spark, tiny_transcripts.repartition(4), ctx_bc)
+    finally:
+        spark.conf.set(conf, old)
+    mdir = os.path.join(out, "_manifest")
+    rows = {}
+    for name in os.listdir(mdir):
+        with open(os.path.join(mdir, name)) as f:
+            m = json.load(f)
+        rows[m["part_id"]] = m["rows"]
+    assert sorted(rows) == list(range(num_parts))
+    parts = [d for d in os.listdir(ck.data_dir) if d.startswith("part_id=")]
+    assert sorted(int(d.split("=")[1]) for d in parts) == \
+        sorted(p for p, n in rows.items() if n)
+    for d in parts:
+        files = [f for f in os.listdir(os.path.join(ck.data_dir, d))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    assert sum(rows.values()) == ck.read_triples(spark).count() > 0
+
+
+def test_checkpoint_of_no_triples(spark, tiny_transcripts_pdf, ctx_bc,
+                                  tmp_path):
+    """An all-OOV input completes every part with 0 rows; a rerun skips
+    them all, and the checkpoint reads back as an empty triple table
+    (no parquet file to infer a schema from)."""
+    from duke_spark.fixtures.embedding import OOV_WORDS
+    from duke_spark.fixtures.transcripts import spark_transcripts
+    from duke_spark.operators.triples import TRIPLE_COLUMNS
+
+    pdf = tiny_transcripts_pdf.copy()
+    pdf["text"] = [OOV_WORDS[i % len(OOV_WORDS)] for i in range(len(pdf))]
+    df = spark_transcripts(spark, pdf)
+    ck = TripleCheckpoint(str(tmp_path / "kg_empty"), num_parts=8)
+    r1 = ck.run(spark, df, ctx_bc)
+    assert r1["written"] == list(range(8)) and r1["rows"] == 0
+    r2 = ck.run(spark, df, ctx_bc)
+    assert r2["written"] == [] and r2["skipped"] == 8
+    got = ck.read_triples(spark)
+    assert got.columns == TRIPLE_COLUMNS
+    assert got.count() == 0
+
+
 def test_checkpoint_rejects_foreign_partition_scheme(spark, tiny_transcripts,
                                                      ctx_bc, tmp_path):
     """Resume guard: manifests written under a different partition function
