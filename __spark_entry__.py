@@ -922,13 +922,12 @@ def kg_two_hop(spark, sf_dir):
 
 
 def kg_components(spark, sf_dir):
-    """Connected components over the live KG (C25): iterative min-label
-    propagation (`dedup.connected_components`) on the undirected edge
-    set. Oracle: the same labels re-derived in DuckDB as a RECURSIVE-CTE
-    reachability closure over the golden triples — the first contract
-    query where an *iterative* Spark algorithm is hash-checked against a
-    SQL fixpoint, not just pytest-pinned."""
-    from duke_spark.operators.dedup import connected_components
+    """Connected components over the live KG (C25): the one-shuffle
+    closure `graph.connected_components` on the undirected edge set.
+    Oracle: the same labels re-derived in DuckDB as a RECURSIVE-CTE
+    reachability closure over the golden triples — the Spark closure
+    hash-checked against a SQL fixpoint, not just pytest-pinned."""
+    from duke_spark.operators.graph import connected_components
     pairs = _kg_edges(spark, sf_dir).select(F.col("src").alias("a"),
                                             F.col("dst").alias("b"))
     return connected_components(pairs)
@@ -1130,8 +1129,8 @@ def neardup_clusters_docs(spark, sf_dir):
     the md5-twin LSH pair SQL feeding a RECURSIVE-CTE closure. This is
     the full dedup *pipeline* (signatures → banding → graph → clusters)
     hash-checked end-to-end, not its stages in isolation."""
-    from duke_spark.operators.dedup import (connected_components,
-                                            minhash_lsh_pairs_md5)
+    from duke_spark.operators.dedup import minhash_lsh_pairs_md5
+    from duke_spark.operators.graph import connected_components
     docs = _t_par(spark, sf_dir, "documents").select("doc_id", "text")
     comps = connected_components(minhash_lsh_pairs_md5(docs))
     return (comps.groupBy(F.col("comp").alias("cluster"))
@@ -1808,8 +1807,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         "minhash_lsh_pairs_docs": _minhash_lsh_oracle(),
         # neardup_clusters_docs: the LSH pair SQL above feeds a
-        # RECURSIVE-CTE reachability closure (the SQL twin of the
-        # iterative min-label propagation), then one rollup row per dup
+        # RECURSIVE-CTE reachability closure (the SQL twin of
+        # `graph.connected_components`), then one rollup row per dup
         # cluster. End-to-end pipeline oracle: signatures → banding →
         # graph → clusters.
         "neardup_clusters_docs": f"""
@@ -2064,10 +2063,11 @@ def _kg_golden_oracles() -> dict[str, str]:
             SELECT a, c, COUNT(*) AS n_paths
             FROM l JOIN r USING (b) WHERE a <> c GROUP BY a, c
         """,
-        # kg_components: the Spark side is ITERATIVE min-label
-        # propagation; the oracle computes the same labels as a
-        # recursive reachability closure (id, reachable-label) and takes
-        # MIN per id — component label = min vertex id, both sides.
+        # kg_components: the Spark side closes the edge list in one
+        # NumPy min-label kernel; the oracle computes the same labels as
+        # a recursive reachability closure (id, reachable-label) and
+        # takes MIN per id — component label = min vertex id, both
+        # sides.
         "kg_components": f"""
             WITH RECURSIVE b AS (SELECT DISTINCT subj AS u, obj AS v
                                  FROM {rp('kg_triples')}),

@@ -22,8 +22,8 @@ inside mapInPandas. Shuffle shape notes per operator.
                          plain-SQL oracle reproduces exactly (driver
                          contract); production paths stay xxhash64.
   * near_dup_filter    — LSH → inline-Jaccard verify → greedy min-id or
-                         connected-components survivor policy.
-  * connected_components — min-label propagation over a pair list.
+                         connected-components survivor policy (the
+                         closure is ``graph.connected_components``).
 """
 
 from __future__ import annotations
@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from duke_spark.operators.graph import connected_components
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -214,59 +216,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
             .select("a", "b", F.round("jaccard", 6).alias("jaccard")))
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
-    """(node, comp) labels for the undirected graph given as (a, b) pairs:
-    iterative min-label propagation (label(u) ← min over N(u)∪{u}),
-    driver-looped with ``localCheckpoint`` per round to truncate lineage,
-    early-stopped when no label changes.
-
-    A round moves labels one hop, so convergence takes O(diameter)
-    rounds — the right tradeoff for near-dup graphs, whose components are
-    quasi-cliques (diameter ≲ 3) rather than long paths; web-scale
-    general graphs would want large-star/small-star's O(log n) instead.
-    Each round is one shuffle join keyed by node + one hash-agg; the
-    convergence check is a ``max(changed)`` flag folded into the label
-    update itself, aggregated over the already-checkpointed partitions —
-    not the old extra join+count over the full label table.
-
-    Raises ``RuntimeError`` if ``max_iter`` rounds pass with labels still
-    changing — silently returning partially-propagated labels would let
-    ``near_dup_filter(strategy='components')`` keep extra survivors with
-    no signal that the chain-correct guarantee was broken."""
-    sym = (pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .union(pairs.select(F.col("b").alias("u"),
-                               F.col("a").alias("v")))
-           .distinct().persist())
-    labels = (sym.select(F.col("u").alias("node")).distinct()
-              .withColumn("comp", F.col("node")).localCheckpoint())
-    changed = 1
-    for _ in range(max_iter):
-        nbr_min = (sym.join(labels.withColumnRenamed("node", "v")
-                            .withColumnRenamed("comp", "vcomp"), "v")
-                   .groupBy("u").agg(F.min("vcomp").alias("nbr_comp")))
-        new_labels = (labels
-                      .join(nbr_min.withColumnRenamed("u", "node"),
-                            "node", "left")
-                      .select("node",
-                              F.least(F.col("comp"),
-                                      F.coalesce("nbr_comp", F.col("comp"))
-                                      ).alias("comp"),
-                              (F.coalesce("nbr_comp", F.col("comp"))
-                               < F.col("comp")).cast("int").alias("chg"))
-                      .localCheckpoint())
-        changed = new_labels.agg(F.max("chg")).collect()[0][0]
-        labels = new_labels.drop("chg")
-        if not changed:
-            break
-    sym.unpersist()
-    if changed:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(labels still changing) — raise max_iter, or use the greedy "
-            "near_dup_filter strategy for this graph")
-    return labels
-
-
 def near_dup_filter(df: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id", num_hashes: int = 64,
                     bands: int = 16, shingle_len: int = 3,
@@ -282,7 +231,8 @@ def near_dup_filter(df: DataFrame, text_col: str = "text",
       the chain's true minimum.
     * ``components``: connected components over the verified pair graph,
       keep only each component's min id — the chain-correct policy, at
-      the cost of the iterative join in ``connected_components``.
+      the cost of closing the whole verified pair list in one Python
+      worker (``graph.connected_components``).
 
     Shuffle shape: signatures are narrow; the LSH band join keys are
     uniform; the final anti-join is a broadcast when the drop set is small

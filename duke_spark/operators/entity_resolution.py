@@ -16,8 +16,9 @@ operators this repo already trusts:
      into ≤max_bucket block-pair tasks — banded, never all-pairs, never
      one quadratic straggler, oracle-proven), each tagged with its
      bucket; ids may be the entity strings themselves;
-  2. transitive closure per LSH bucket = ``min_label_components`` in
-     one ``groupBy(bucket)`` pandas UDF: no pair crosses its bucket, so
+  2. transitive closure per LSH bucket = ``graph.bucket_components``,
+     one ``min_label_components`` call per bucket in one
+     ``groupBy(bucket)`` pandas UDF: no pair crosses its bucket, so
      no component does either, and the whole closure is one shuffle —
      a fixed number of Spark jobs whatever the component diameter;
   3. canonical id = component minimum; entities with no near-dup map
@@ -33,37 +34,13 @@ compose with ``fact_support`` or ``distinct()`` downstream as needed.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from duke_spark.operators.graph import bucket_components
 from duke_spark.operators.similarity import _near_dup_pairs_by_bucket
-
-
-def min_label_components(a: np.ndarray, b: np.ndarray) -> tuple:
-    """(nodes, comp) for the undirected graph with edges (a[i], b[i]):
-    ``nodes`` the sorted distinct endpoints, ``comp`` each node's
-    component minimum. Min-label propagation over node ranks
-    (``np.minimum.at`` along both edge directions) plus pointer jumping
-    (label ← label[label]) until no label moves. A label only ever
-    points at a smaller-or-equal node of the same component, and the
-    component's minimum keeps its own, so the fixed point is the
-    minimum. Ids may be any sortable dtype, ``object`` str included:
-    ``np.unique`` then sorts with Python's ``str`` order — code points,
-    the order of Spark's string ``min``."""
-    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-    ia, ib = inv[:len(a)], inv[len(a):]
-    lab = np.arange(len(nodes))
-    while True:
-        new = lab.copy()
-        np.minimum.at(new, ia, new[ib])
-        np.minimum.at(new, ib, new[ia])
-        new = new[new]
-        if np.array_equal(new, lab):
-            return nodes, nodes[lab]
-        lab = new
 
 
 def _components(vectors: DataFrame, threshold: float, num_planes: int,
@@ -87,26 +64,6 @@ def _components(vectors: DataFrame, threshold: float, num_planes: int,
     n = min(1 << max(num_planes, 0),
             vectors.sparkSession.sparkContext.defaultParallelism)
     return bucket_components(pairs, n)
-
-
-def bucket_components(pairs: DataFrame, n_partitions: int) -> DataFrame:
-    """(node, comp) for every endpoint of the (bucket, a, b) edge rows;
-    comp = its component's minimum id. No component may span two
-    buckets: each bucket closes in one ``min_label_components`` call of
-    one ``groupBy(bucket)`` pandas UDF over ``n_partitions`` partitions,
-    so the closure is one shuffle whatever the component diameter."""
-    id_type = pairs.schema["a"].dataType
-    schema = T.StructType([T.StructField("node", id_type),
-                           T.StructField("comp", id_type)])
-
-    def close(pdf):
-        nodes, comp = min_label_components(pdf["a"].to_numpy(),
-                                           pdf["b"].to_numpy())
-        return pd.DataFrame({"node": nodes, "comp": comp})
-
-    return (pairs.select("bucket", "a", "b")
-            .repartition(n_partitions, "bucket")
-            .groupBy("bucket").applyInPandas(close, schema=schema))
 
 
 def resolve_entities(vectors: DataFrame, threshold: float = 0.95,

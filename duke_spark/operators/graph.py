@@ -14,12 +14,20 @@ Spec:
     ``dataset_descriptor.py:91-97`` generalized to edge weights).
 
 All joins against canonical types are broadcast (≤788 rows).
+
+Graph analytics over the materialized KG follow, and the one transitive
+closure of the package (``min_label_components`` / ``bucket_components``
+/ ``connected_components``), shared by entity resolution, near-dup
+clustering and the streaming component store.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def build_edges(triples: DataFrame) -> DataFrame:
@@ -149,8 +157,8 @@ def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85,
              weight_col: str | None = None) -> DataFrame:
     """(id, rank) by power iteration — the standard iterative-join shape
     (contributions = rank/out_deg shuffled to dst, damped sum, repeat),
-    with ``localCheckpoint`` per round to truncate lineage like
-    ``dedup.connected_components``. Dangling mass is redistributed
+    with ``localCheckpoint`` per round to truncate lineage, as in
+    ``shortest_paths``. Dangling mass is redistributed
     uniformly so ranks sum to the vertex count at every step.
 
     One Spark job per iteration: the dangling mass is derived from the
@@ -188,6 +196,84 @@ def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85,
     norm.unpersist()
     verts.unpersist()
     return ranks
+
+
+# --- transitive closure: one kernel for every component labelling ----------
+
+def min_label_components(a: np.ndarray, b: np.ndarray) -> tuple:
+    """(nodes, comp) for the undirected graph with edges (a[i], b[i]):
+    ``nodes`` the sorted distinct endpoints, ``comp`` each node's
+    component minimum. Min-label propagation over node ranks
+    (``np.minimum.at`` along both edge directions) plus pointer jumping
+    (label ← label[label]) until no label moves. A label only ever
+    points at a smaller-or-equal node of the same component, and the
+    component's minimum keeps its own, so the fixed point is the
+    minimum. Ids may be any sortable dtype, ``object`` str included:
+    ``np.unique`` then sorts with Python's ``str`` order — code points,
+    the order of Spark's string ``min``."""
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = inv[:len(a)], inv[len(a):]
+    lab = np.arange(len(nodes))
+    while True:
+        new = lab.copy()
+        np.minimum.at(new, ia, new[ib])
+        np.minimum.at(new, ib, new[ia])
+        new = new[new]
+        if np.array_equal(new, lab):
+            return nodes, nodes[lab]
+        lab = new
+
+
+def bucket_components(pairs: DataFrame, n_partitions: int) -> DataFrame:
+    """(node, comp) for every endpoint of the (bucket, a, b) edge rows;
+    comp = its component's minimum id. No component may span two
+    buckets: each bucket closes in one ``min_label_components`` call of
+    one ``groupBy(bucket)`` pandas UDF over ``n_partitions`` partitions,
+    so the closure is one shuffle whatever the component diameter. A
+    bucket whose endpoints are all NULL closes to the one NULL node."""
+    id_type = pairs.schema["a"].dataType
+    schema = T.StructType([T.StructField("node", id_type),
+                           T.StructField("comp", id_type)])
+
+    def close(pdf):
+        if pdf["a"].isna().all():
+            return pd.DataFrame({"node": [None], "comp": [None]})
+        nodes, comp = min_label_components(pdf["a"].to_numpy(),
+                                           pdf["b"].to_numpy())
+        return pd.DataFrame({"node": nodes, "comp": comp})
+
+    return (pairs.select("bucket", "a", "b")
+            .repartition(n_partitions, "bucket")
+            .groupBy("bucket").applyInPandas(close, schema=schema))
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(node, comp) labels for the undirected graph given as (a, b)
+    pairs; comp = the component minimum in Spark's order. The
+    single-bucket case of ``bucket_components``: one shuffle and a
+    fixed number of Spark jobs, whatever the component diameter.
+
+    A NULL endpoint joins nothing, as in an equi-join label
+    propagation: (x, NULL) leaves x a node of its other edges only, and
+    NULL appears once, labelled NULL.
+
+    Bound: the whole edge list closes in one Python worker. On a 4-vCPU
+    host at local[4], 2M random bigint edges close in 3.4–9.5 s and
+    500k string edges in 3.0–5.5 s; larger graphs would need a
+    contraction closure (large-star/small-star), which no caller
+    needs."""
+    a, b = F.col("a"), F.col("b")
+    end = F.coalesce(a, b)
+    null = F.lit(None).cast(pairs.schema["a"].dataType)
+    # NULL closes in a bucket of its own: a bigint group holding one
+    # would reach pandas as float64
+    edge = F.struct(end.isNull().cast("int").alias("bucket"),
+                    end.alias("a"), F.coalesce(b, a).alias("b"))
+    lone_null = F.struct(F.lit(1).alias("bucket"), null.alias("a"),
+                         null.alias("b"))
+    rows = F.when(a.isNull() | b.isNull(), F.array(edge, lone_null)) \
+        .otherwise(F.array(edge))
+    return bucket_components(pairs.select(F.inline(rows)), 1)
 
 
 def entity_timeline(triples: DataFrame, turns: DataFrame) -> DataFrame:

@@ -35,16 +35,15 @@ survives folding; the read-side finalizer equals the batch rollup
 under edge INSERTIONS. Per batch: map the batch's endpoints to their
 current labels (join keyed on node — the batch side is small and
 broadcasts), close the label-level reduced graph (≤ 2·|batch| nodes,
-independent of graph size) as the single bucket of
-``entity_resolution.bucket_components``: one ``min_label_components``
-call, so a path of any length closes in one pass, as in batch
-resolution. Then apply the resulting merge map to the label table with
-one broadcast join — a single narrow pass over state, no state-sized
-shuffle. Label merging is idempotent (re-adding the same edges merges
-nothing), so replay and even full fresh-checkpoint reprocessing are
-safe without epoch bookkeeping. The label invariant (comp = min node id
-of the component) matches batch ``connected_components`` — exact parity
-is tested per epoch, not just at the end.
+independent of graph size) with ``graph.connected_components``, the
+package's one closure kernel: one ``min_label_components`` call, so a
+path of any length closes in one pass. Then apply the resulting merge
+map to the label table with one broadcast join — a single narrow pass
+over state, no state-sized shuffle. Label merging is idempotent
+(re-adding the same edges merges nothing), so replay and even full
+fresh-checkpoint reprocessing are safe without epoch bookkeeping. The
+label invariant (comp = min node id of the component) is checked
+against a union-find reference per epoch, not just at the end.
 """
 
 from __future__ import annotations
@@ -54,8 +53,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duke_spark.operators.entity_resolution import bucket_components
-from duke_spark.operators.graph import build_edges, degrees
+from duke_spark.operators.graph import (build_edges,
+                                       connected_components, degrees)
 from duke_spark.streaming.epochs import EpochDirs, recover, swap_in
 
 DELTA_DIR = "deltas"
@@ -201,8 +200,8 @@ class IncrementalFactStore(_EpochDeltaStore):
 
 class IncrementalComponentStore:
     """foreachBatch processor maintaining (node, comp) labels under edge
-    insertions; comp = min node id of the component, the same invariant
-    as batch ``connected_components`` (exact parity tested)."""
+    insertions; comp = min node id of the component, the invariant of
+    batch ``connected_components``."""
 
     def __init__(self, path: str, node_type: str = "string"):
         """``node_type``: DDL type of node ids ("string", "bigint", …) —
@@ -255,8 +254,7 @@ class IncrementalComponentStore:
         if reduced.isEmpty():
             merge = None
         else:
-            merge = (bucket_components(
-                         reduced.withColumn("bucket", F.lit(0)), 1)
+            merge = (connected_components(reduced)
                      .filter(F.col("node") != F.col("comp"))
                      .select(F.col("node").alias("comp"),
                              F.col("comp").alias("new_comp")))

@@ -13,9 +13,10 @@ Composition of two audited parts (VERDICT-r4 #8, C48 × C41):
    where its LATER member arrived, so the union of epoch deltas over
    time IS the batch pair set.
 2. **Label state** — ``graph_state.IncrementalComponentStore`` absorbs
-   each epoch's pair delta as edge insertions and closes it with the
-   batch path's own ``bucket_components`` (one bucket), so no component
-   diameter makes it fail where batch resolution succeeds; its invariant
+   each epoch's pair delta as edge insertions and closes it with
+   ``graph.connected_components``, the closure kernel batch resolution
+   runs per bucket, so no component diameter makes it fail where batch
+   resolution succeeds; its invariant
    (comp = min node id of the component) is exactly
    ``resolve_entities``'s canonical rule, so the read-side map equals
    batch resolution over all vectors ever processed (tested per epoch,

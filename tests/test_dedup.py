@@ -1,13 +1,26 @@
-"""Dedup operator tests: exact, MinHash+LSH, SimHash, n-gram Jaccard."""
+"""Dedup operator tests: exact, MinHash+LSH, SimHash, n-gram Jaccard,
+and the connected-components closure behind the components survivor
+policy."""
 
+import json
+import os
+import subprocess
+import sys
+
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from duke_spark.operators.dedup import (exact_dedup, lsh_candidate_pairs,
-                                        minhash_signatures,
+                                        minhash_signatures, near_dup_filter,
                                         ngram_jaccard_pairs, simhash64,
                                         with_shingles)
+from duke_spark.operators.graph import connected_components
+from graph_checks import job_count, union_find
+from test_kg_contract_invariants import SF_DIR
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),
@@ -150,7 +163,6 @@ def test_jaccard_df_cap_defuses_stop_shingle(spark):
 
 
 def test_connected_components_labels(spark):
-    from duke_spark.operators.dedup import connected_components
     pairs = spark.createDataFrame(
         pd.DataFrame({"a": [1, 0, 5], "b": [2, 2, 6]}))
     comp = (connected_components(pairs).toPandas()
@@ -158,19 +170,62 @@ def test_connected_components_labels(spark):
     assert comp == {0: 0, 1: 0, 2: 0, 5: 5, 6: 5}
 
 
-def test_connected_components_raises_on_non_convergence(spark):
-    """A path graph 0-1-2-...-9 needs ~diameter rounds of min-label
-    propagation; with max_iter below that the operator must RAISE rather
-    than silently return partially-propagated labels (which would let the
-    components survivor policy keep extra docs with no signal)."""
-    from duke_spark.operators.dedup import connected_components
-    path = spark.createDataFrame(
-        pd.DataFrame({"a": list(range(9)), "b": list(range(1, 10))}))
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path, max_iter=3)
-    comp = (connected_components(path, max_iter=15).toPandas()
-            .set_index("node")["comp"].to_dict())
-    assert comp == {i: 0 for i in range(10)}
+@pytest.mark.parametrize("ddl,ids", [("bigint", [1, 2, 5, 6]),
+                                     ("string", ["1", "2", "5", "6"])])
+def test_connected_components_null_endpoint(spark, ddl, ids):
+    """A NULL endpoint joins nothing: node 2 keeps only its edge to 1,
+    and NULL is one node labelled NULL, as an equi-join propagation
+    leaves it."""
+    n1, n2, n5, n6 = ids
+    pairs = spark.createDataFrame([(n1, n2), (n2, None), (n5, n6)],
+                                  f"a {ddl}, b {ddl}")
+    got = {(r.node, r.comp) for r in connected_components(pairs).collect()}
+    assert got == {(n1, n1), (n2, n1), (n5, n5), (n6, n5), (None, None)}
+
+
+def _path(spark, n):
+    """An n-node path over a permutation of 0..n-1 whose minimum sits at
+    the far end: one-hop-per-round propagation needs n-1 rounds."""
+    ids = np.random.default_rng(n).permutation(n)
+    k = int(np.flatnonzero(ids == 0)[0])
+    ids[[k, n - 1]] = ids[[n - 1, k]]
+    edges = [(int(x), int(y)) for x, y in zip(ids[:-1], ids[1:])]
+    return spark.createDataFrame(edges, "a bigint, b bigint"), edges
+
+
+def _labels(df):
+    return {r.node: r.comp for r in df.collect()}
+
+
+def test_connected_components_long_path(spark):
+    pairs, edges = _path(spark, 1000)
+    got = _labels(connected_components(pairs))
+    assert got == union_find(edges)
+    assert set(got.values()) == {0}
+
+
+@pytest.mark.parametrize("ids", [int, str])
+def test_connected_components_sparse_random_graph(spark, ids):
+    """8,000 random edges over 10,000 nodes: thousands of components,
+    trees of every depth, labels equal to union-find's minima."""
+    rng = np.random.default_rng(23)
+    a, b = rng.integers(0, 10_000, (2, 8_000))
+    edges = [(ids(x), ids(y)) for x, y in zip(a.tolist(), b.tolist())]
+    ddl = "bigint" if ids is int else "string"
+    got = _labels(connected_components(
+        spark.createDataFrame(edges, f"a {ddl}, b {ddl}")))
+    assert got == union_find(edges)
+
+
+def test_connected_components_job_count_is_fixed(spark):
+    """Closing a 3-node and a 1,000-node path launches the same number
+    of Spark jobs: the closure is one shuffle, not a loop of actions."""
+    short, _ = _path(spark, 3)
+    long, _ = _path(spark, 1000)
+    n_short = job_count(spark, connected_components(short).collect)
+    n_long = job_count(spark, connected_components(long).collect)
+    assert n_short > 0
+    assert n_short == n_long
 
 
 def test_near_dup_components_beats_greedy_on_chain(spark):
@@ -203,38 +258,35 @@ def test_near_dup_filter_threshold_monotone(spark, docs):
 def test_connected_components_random_graph_matches_union_find(spark):
     """200 random edges over 120 nodes: component partition must equal a
     union-find reference, with min-id labels."""
-    import numpy as np
-    from duke_spark.operators.dedup import connected_components
-
     rng = np.random.default_rng(17)
     a = rng.integers(0, 120, 200)
     b = rng.integers(0, 120, 200)
     keep = a != b
     pairs = pd.DataFrame({"a": a[keep], "b": b[keep]})
-
-    parent = list(range(120))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for x, y in pairs.itertuples(index=False):
-        rx, ry = find(int(x)), find(int(y))
-        if rx != ry:
-            parent[max(rx, ry)] = min(rx, ry)
-    touched = set(pairs["a"]) | set(pairs["b"])
-    exp = {v: find(v) for v in sorted(touched)}
-    # normalize to min-id per component
-    comp_min = {}
-    for v, r in exp.items():
-        comp_min.setdefault(r, v)
-    exp = {v: comp_min[r] for v, r in exp.items()}
-
+    exp = union_find(zip(pairs["a"].tolist(), pairs["b"].tolist()))
     got = (connected_components(spark.createDataFrame(pairs))
            .toPandas().set_index("node")["comp"].to_dict())
     assert got == exp
+
+
+def test_clean_corpus_components_job(spark, tmp_path):
+    """``jobs/clean_corpus.py --strategy components`` runs end to end,
+    and its near-dup survivor count equals the in-process operator on
+    the exact-deduplicated documents."""
+    env = dict(os.environ, OPENBLAS_NUM_THREADS="1", OMP_NUM_THREADS="1")
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", "clean_corpus.py"),
+         "--input", SF_DIR, "--out", str(tmp_path / "clean"),
+         "--strategy", "components", "--parallelism", "2"],
+        capture_output=True, text=True, env=env, cwd=tmp_path, timeout=420)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    stats = json.loads([ln for ln in proc.stdout.splitlines()
+                        if ln.startswith("{")][-1])
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    docs = docs.join(exact_dedup(docs).select("doc_id"), "doc_id",
+                     "left_semi")
+    want = near_dup_filter(docs, strategy="components").count()
+    assert stats["after_near_dup"] == want
 
 
 def test_jaccard_quadratic_guard(spark):

@@ -4,7 +4,6 @@ rewrite, the per-bucket NumPy closure, string-keyed resolution and the
 fixed Spark job count."""
 
 import inspect
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -15,8 +14,10 @@ from pyspark.sql import functions as F
 
 from duke_spark.operators import entity_resolution
 from duke_spark.operators.entity_resolution import (apply_entity_merge,
-                                                    min_label_components,
                                                     resolve_entities)
+from duke_spark.operators.graph import (connected_components,
+                                        min_label_components)
+from graph_checks import job_count, union_find
 
 DIM = 8
 
@@ -264,24 +265,6 @@ def test_long_arc_resolves_in_one_closure(spark):
     assert _resolved(typed, type_col="ctype") == want
 
 
-def _union_find(edges):
-    parent = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:  # the smaller root wins, so roots are minima
-            parent[max(ra, rb)] = min(ra, rb)
-    return {v: find(v) for v in parent}
-
-
 # 'ﬀ' (U+FB00) < '𝔸' (U+1D538) by code point, but '𝔸' is a surrogate
 # pair in UTF-16 and sorts first there
 ALPHABET = "az\u00e9\ufb00\uff71\U0001d538"
@@ -308,38 +291,40 @@ def _closure(edges, dtype):
 @given(edges=_edges(INT_IDS))
 @settings(max_examples=300, deadline=None)
 def test_closure_equals_union_find_int(edges):
-    assert _closure(edges, np.int64) == _union_find(edges)
+    assert _closure(edges, np.int64) == union_find(edges)
 
 
 @given(edges=_edges(STR_IDS))
 @example(edges=[("\U0001d538", "\ufb00")])
 @settings(max_examples=300, deadline=None)
 def test_closure_equals_union_find_str(edges):
-    assert _closure(edges, object) == _union_find(edges)
+    assert _closure(edges, object) == union_find(edges)
 
 
 def _spark_components(spark, edges, ddl):
-    from duke_spark.operators.dedup import connected_components
-    pairs = spark.createDataFrame(edges, f"a {ddl}, b {ddl}")
-    return {r.node: r.comp
-            for r in connected_components(pairs, max_iter=60).collect()}
+    """``connected_components`` labels, after checking in Spark that
+    every component's label is its ``F.min(node)``."""
+    comps = connected_components(
+        spark.createDataFrame(edges, f"a {ddl}, b {ddl}"))
+    off = (comps.groupBy("comp").agg(F.min("node").alias("m"))
+           .filter(F.col("m") != F.col("comp")))
+    assert off.count() == 0
+    return {r.node: r.comp for r in comps.collect()}
 
 
 @given(edges=_edges(INT_IDS, min_edges=1))
 @settings(max_examples=8, deadline=None)
-def test_closure_equals_connected_components_int(spark, edges):
-    assert _closure(edges, np.int64) == _spark_components(spark, edges,
-                                                          "bigint")
+def test_component_label_is_spark_min_int(spark, edges):
+    assert _spark_components(spark, edges, "bigint") == union_find(edges)
 
 
 @given(edges=_edges(STR_IDS, min_edges=1))
 @example(edges=[("\U0001d538", "\ufb00"), ("\uff71a", "\U0001d538")])
 @settings(max_examples=8, deadline=None)
-def test_closure_equals_connected_components_str(spark, edges):
+def test_component_label_is_spark_min_str(spark, edges):
     """Spark's string min (UTF-8 bytes = code points) is the order the
-    closure's ``np.unique`` uses."""
-    assert _closure(edges, object) == _spark_components(spark, edges,
-                                                        "string")
+    closure's ``np.unique`` uses: a witness independent of the kernel."""
+    assert _spark_components(spark, edges, "string") == union_find(edges)
 
 
 def _alias_context(spark, groups):
@@ -389,27 +374,15 @@ def test_resolve_kg_entities_canonical_is_spark_min(spark):
     assert got == want
 
 
-def _job_count(spark, action) -> int:
-    sc = spark.sparkContext
-    group = f"er-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "entity resolution job count")
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_resolution_job_count_is_fixed(spark):
     """The closure is one shuffle, not a loop of Spark actions: a
     3-vector and a 20-vector arc (path diameters 2 and 19) launch the
-    same number of Spark jobs, and the module no longer reaches the
-    iterative components or the dense index."""
+    same number of Spark jobs, and the module reaches neither
+    ``connected_components`` nor the dense index."""
     short = _arc(spark, [7, 3, 5])
     long = _arc(spark, range(20))
-    n_short = _job_count(spark, lambda: _resolved(short))
-    n_long = _job_count(spark, lambda: _resolved(long))
+    n_short = job_count(spark, lambda: _resolved(short))
+    n_long = job_count(spark, lambda: _resolved(long))
     assert n_short > 0
     assert n_short == n_long
     src = inspect.getsource(entity_resolution)
@@ -435,6 +408,6 @@ def test_resolve_kg_job_count_same_with_and_without_merges(spark):
                                         type_guard=True)
             merges.append(mm.count())
             mm.unpersist()
-        counts.append(_job_count(spark, run))
+        counts.append(job_count(spark, run))
     assert merges == [2, 0]
     assert counts[0] == counts[1]

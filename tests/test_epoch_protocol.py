@@ -11,7 +11,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from duke_spark.operators.dedup import connected_components, near_dup_filter
+from duke_spark.operators.dedup import near_dup_filter
 from duke_spark.operators.entity_resolution import resolve_entities
 from duke_spark.operators.graph import build_edges
 from duke_spark.operators.triples import fact_support
@@ -20,6 +20,7 @@ from duke_spark.streaming.graph_state import (IncrementalComponentStore,
                                               IncrementalFactStore)
 from duke_spark.streaming.neardup_stream import StreamingNearDupFilter
 from duke_spark.streaming.resolution_stream import IncrementalResolutionStore
+from graph_checks import union_find
 
 RES_KW = dict(threshold=0.95, num_planes=2, max_bucket=7)
 FACT_KEY = ["subj", "pred", "obj", "conv_id"]
@@ -180,8 +181,7 @@ def test_swap_crash_recovers_component_store(spark, tmp_path):
     _crash_mid_swap(os.path.join(store.path, "assign"))
     assert _labels(store.read(spark)) == before
     store.process(_pairs(spark, epochs[2]), epoch_id=2)
-    want = _labels(connected_components(
-        _pairs(spark, [e for rows in epochs for e in rows])))
+    want = union_find([e for rows in epochs for e in rows])
     assert _labels(store.read(spark)) == want
     assert not os.path.exists(os.path.join(store.path, "assign.old"))
 

@@ -1,6 +1,7 @@
 """Incremental KG maintenance (streaming.graph_state): per-epoch edge
 deltas fold to the exact batch edge aggregate; incremental connected
-components match batch labels after EVERY epoch; a mismatched run_id is
+components match a union-find reference after EVERY epoch; a mismatched
+run_id is
 refused. Replay and compaction of every epoch store are tested once, in
 test_epoch_protocol.py."""
 
@@ -8,12 +9,12 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from duke_spark.operators.dedup import connected_components
 from duke_spark.operators.graph import build_edges, degrees
 from duke_spark.operators.triples import fact_support
 from duke_spark.streaming.graph_state import (IncrementalComponentStore,
                                               IncrementalEdgeStore,
                                               IncrementalFactStore)
+from graph_checks import union_find
 
 
 def _triples(spark, rows):
@@ -188,8 +189,8 @@ def _labels(df):
 
 def test_component_store_matches_batch_every_epoch(spark, tmp_path):
     """Chain growth, a cross-component merge, and disjoint additions —
-    after each epoch the incremental labels equal a from-scratch batch
-    CC over all edges so far."""
+    after each epoch the incremental labels equal union-find over all
+    edges so far."""
     epochs = [
         [("n2", "n3"), ("n8", "n9")],
         [("n1", "n2"), ("n5", "n6")],           # extends + new comp
@@ -201,8 +202,7 @@ def test_component_store_matches_batch_every_epoch(spark, tmp_path):
     for i, rows in enumerate(epochs):
         seen.extend(rows)
         store.process(_pairs(spark, rows), epoch_id=i)
-        want = _labels(connected_components(_pairs(spark, seen)))
-        assert _labels(store.read(spark)) == want, f"epoch {i}"
+        assert _labels(store.read(spark)) == union_find(seen), f"epoch {i}"
 
 
 def test_component_store_replay_idempotent(spark, tmp_path):
@@ -217,8 +217,8 @@ def test_component_store_replay_idempotent(spark, tmp_path):
 
 
 def test_component_store_random_parity(spark, tmp_path):
-    """Randomized incremental-vs-batch parity over a larger edge stream
-    split into uneven epochs."""
+    """Randomized incremental-vs-union-find parity over a larger edge
+    stream split into uneven epochs."""
     import random
     rng = random.Random(7)
     edges = [(f"v{rng.randrange(40)}", f"v{rng.randrange(40)}")
@@ -229,5 +229,4 @@ def test_component_store_random_parity(spark, tmp_path):
     for i, c in enumerate(cuts + [120]):
         store.process(_pairs(spark, edges[prev:c]), epoch_id=i)
         prev = c
-    want = _labels(connected_components(_pairs(spark, edges)))
-    assert _labels(store.read(spark)) == want
+    assert _labels(store.read(spark)) == union_find(edges)
